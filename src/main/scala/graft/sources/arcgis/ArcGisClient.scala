@@ -24,7 +24,14 @@ case class LayerInfo(
       * per-OID `{oid}/attachments` listing.
       */
     supportsQueryAttachments: Boolean = false
-)
+) {
+  /** The layer's `esriFieldTypeOID` field, if its metadata declares one. */
+  def oidField: Option[String] = fields.find(_.esriType == "esriFieldTypeOID").map(_.name)
+
+  /** [[oidField]], or a descriptive failure naming what needs it. */
+  def requireOid(what: String): String = oidField.getOrElse(throw new IllegalArgumentException(
+    s"$what requires an esriFieldTypeOID field in the layer metadata"))
+}
 
 /** A feature as the ArcGIS REST API represents it: flat attribute map plus
   * (for point layers) an `{x, y}` geometry.
@@ -82,9 +89,10 @@ trait ArcGisClient extends Serializable {
   ): Seq[EsriFeature]
 
   /** Point lookup by key equality (upsert existence probe S10,
-    * `task.ts:267-284`).
+    * `task.ts:267-284`): one unpaginated `/query` on `keyCol = 'key'`.
     */
-  def queryByKey(keyCol: String, key: String): Seq[EsriFeature]
+  def queryByKey(keyCol: String, key: String): Seq[EsriFeature] =
+    queryPage(0L, -1, s"$keyCol = '${key.replace("'", "''")}'", Seq("*"))
 
   /** `addFeatures` POST (S8). Per-feature result: Right(objectid) or
     * Left(error) — the reference surfaces `addResults[0].error`
@@ -276,6 +284,14 @@ class MockArcGisClient(
     def deparen(s: String): String =
       s.trim.replaceAll("^[(\\s]+", "").replaceAll("[)\\s]+$", "")
 
+    // IEEE comparison semantics for the numeric clauses
+    import Ordering.Double.IeeeOrdering
+    def holds[T](op: String, a: T, b: T)(implicit ord: Ordering[T]): Boolean = op match {
+      case "=" => ord.equiv(a, b); case "<>" => !ord.equiv(a, b)
+      case ">" => ord.gt(a, b); case "<" => ord.lt(a, b)
+      case ">=" => ord.gteq(a, b); case "<=" => ord.lteq(a, b)
+    }
+
     where.split("(?i)\\)\\s*AND\\s*\\(|(?i)\\sAND\\s").forall { raw =>
       deparen(raw) match {
         case "1=1" => true
@@ -287,30 +303,13 @@ class MockArcGisClient(
             .parse(v, java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
             .toInstant(java.time.ZoneOffset.UTC).toEpochMilli.toDouble
           f.attributes.get(col) match {
-            case Some(n: Number) =>
-              val d = n.doubleValue()
-              op match {
-                case "=" => d == w; case "<>" => d != w
-                case ">" => d > w; case "<" => d < w
-                case ">=" => d >= w; case "<=" => d <= w
-              }
+            case Some(n: Number) => holds(op, n.doubleValue(), w)
             case _ => false
           }
         case cmp(col, op, v) =>
           f.attributes.get(col) match {
-            case Some(x: String) =>
-              op match {
-                case "=" => x == v; case "<>" => x != v
-                case ">" => x > v; case "<" => x < v
-                case ">=" => x >= v; case "<=" => x <= v
-              }
-            case Some(n: Number) =>
-              val d = n.doubleValue(); val w = v.toDouble
-              op match {
-                case "=" => d == w; case "<>" => d != w
-                case ">" => d > w; case "<" => d < w
-                case ">=" => d >= w; case "<=" => d <= w
-              }
+            case Some(x: String) => holds(op, x, v)
+            case Some(n: Number) => holds(op, n.doubleValue(), v.toDouble)
             case _ => false
           }
         case isNotNull(col) => f.attributes.get(col).exists(_ != null)
@@ -386,9 +385,6 @@ class MockArcGisClient(
       }
       .toSeq.map(project(_, outFields))
   }
-
-  override def queryByKey(keyCol: String, key: String): Seq[EsriFeature] =
-    rows.filter(_.attributes.get(keyCol).exists(_.toString == key))
 
   override def addFeatures(feats: Seq[EsriFeature]): Seq[Either[String, Long]] = {
     feats.foreach(added.add)

@@ -77,30 +77,37 @@ object ArcGisConfigSchema {
     (flow, direction) match {
       case (Incoming, Input) => IncomingInput
       case (Incoming, Output) =>
-        clientKey match {
-          case None => new StructType()
-          case Some(k) =>
-            ArcGisSchema.structFor(ArcGisClientRegistry.get(k).layerInfo().fields)
-        }
+        clientKey.fold(new StructType())(ArcGisSchema.layerSchema)
       case (Outgoing, Input) => OutgoingInput
       case (Outgoing, Output) => new StructType()
     }
 
   /** Plan-time option validation: the reference's TypeBox enum check,
-    * enforced where the engine builds the scan. Unknown strategies and
-    * malformed numeric options fail HERE — before any partition is planned
-    * or any remote call issued.
+    * enforced where the engine builds the scan. Unknown strategies,
+    * malformed numeric options and a queryTopFeatures scan without its
+    * group/order fields fail HERE — before any partition is planned or any
+    * remote call issued.
     */
   def validateOptions(options: CaseInsensitiveStringMap): Unit = {
     val strategy = Option(options.get("strategy")).getOrElse(DefaultStrategy)
     require(Strategies.exists(_.equalsIgnoreCase(strategy)),
       s"invalid strategy '$strategy' — expected one of ${Strategies.mkString(", ")}")
-    Option(options.get("pageSize")).foreach { p =>
+    def positiveInt(name: String): Unit = Option(options.get(name)).foreach { p =>
       val n = try p.toInt catch {
         case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"pageSize must be an integer, got '$p'")
+          throw new IllegalArgumentException(s"$name must be an integer, got '$p'")
       }
-      require(n > 0, s"pageSize must be positive, got $n")
+      require(n > 0, s"$name must be positive, got $n")
+    }
+    positiveInt("pageSize")
+    // the topFeatures call reads these inside the task: a missing field
+    // would fail there as a bare "key not found"
+    if (strategy.equalsIgnoreCase("queryTopFeatures")) {
+      Seq("groupByField", "orderByField").foreach { k =>
+        require(Option(options.get(k)).exists(_.trim.nonEmpty),
+          s"strategy=queryTopFeatures requires the $k option")
+      }
+      positiveInt("topCount")
     }
     // same plan-time discipline for the attachments toggle: a typo'd value
     // ("ture") fails HERE with a descriptive message, not as a raw

@@ -84,9 +84,7 @@ class ArcGisMicroBatchStream(
 
   private lazy val client = ArcGisClientRegistry.get(options("client"))
   private lazy val info = client.layerInfo()
-  private lazy val oidField = info.fields.find(_.esriType == "esriFieldTypeOID").map(_.name)
-    .getOrElse(throw new IllegalArgumentException(
-      "arcgis streaming requires an esriFieldTypeOID field in the layer metadata"))
+  private lazy val oidField = info.requireOid("arcgis streaming")
 
   private lazy val editMode = options.get("incremental").exists(_.equalsIgnoreCase("editDate"))
   private lazy val editField = options.getOrElse("editDateField",
@@ -111,10 +109,6 @@ class ArcGisMicroBatchStream(
       w: String = where): Option[Long] =
     client.queryStatistics(w, Nil, Seq(StatSpec(spec, field, outName)))
       .headOption.flatMap(_.get(outName)).collect { case n: Number => n.longValue() }
-
-  /** `(where) AND (clause)` with degenerate wheres elided. */
-  private def andWhere(clause: String): String =
-    if (where.trim.isEmpty || where.trim == "1=1") clause else s"($where) AND ($clause)"
 
   /** An epoch-millis watermark as a server-side literal: raw numeric by
     * default, SQL-92 `TIMESTAMP '...'` (UTC, millisecond precision) under
@@ -191,17 +185,9 @@ class ArcGisMicroBatchStream(
     */
   private def oidRangeParts(lo: Long, hi: Long, w: String): Array[InputPartition] = {
     val page = options.get("pageSize").map(_.toInt).getOrElse(info.maxRecordCount.max(1))
-    val saturation = info.maxRecordCount.max(1)
-    val n = (((hi - lo) + page - 1) / page).toInt.max(1)
-    val width = math.max(1L, (hi - lo + n - 1) / n)
-    (0 until n).iterator
-      .map { i =>
-        val a = lo + i.toLong * width
-        ArcGisOidRangePartition(a, math.min(hi, a + width), oidField, w,
-          saturation, envelope = None)
-      }
-      .filter(p => p.lo < p.hi)
-      .toArray[InputPartition]
+    OidRanges.split(lo, hi, hi - lo, page)
+      .map { case (a, b) => ArcGisOidRangePartition(a, b, oidField, w, info.maxRecordCount.max(1)) }
+      .toArray
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -215,7 +201,7 @@ class ArcGisMicroBatchStream(
       // per batch — count + min + max in a single round trip) — a big
       // catch-up window parallelizes like a backfill instead of funneling
       // through one request chain
-      val w2 = andWhere(
+      val w2 = ArcGisFilterCompiler.andWhere(where,
         s"$editField > ${tsLit(lo)} AND $editField <= ${tsLit(hi)}")
       val probe = client.queryStatistics(w2, Nil, Seq(
         StatSpec("count", oidField, "__n"),

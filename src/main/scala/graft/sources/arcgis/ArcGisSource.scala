@@ -55,8 +55,7 @@ class ArcGisTableProvider extends TableProvider with DataSourceRegister {
                Option(options.get("attachments")).exists(_.toBoolean) })
       ArcGisAttachmentsSchema.schema
     else {
-      val base = ArcGisSchema.structFor(
-        ArcGisClientRegistry.get(options.get("client")).layerInfo().fields)
+      val base = ArcGisSchema.layerSchema(options.get("client"))
       // deletes=true (streaming tombstones): the scan gains a synthetic
       // `_deleted` marker — false on live rows, true on change-tracking
       // tombstones (see ArcGisMicroBatchStream)
@@ -113,6 +112,25 @@ object ArcGisSchema {
       fields.map(f => StructField(f.name, typeFor(f.esriType), nullable = true)) ++
         Seq(StructField("geom_x", DoubleType), StructField("geom_y", DoubleType))
     )
+
+  /** The registered client's layer as a Catalyst schema (one metadata fetch). */
+  def layerSchema(clientKey: String): StructType =
+    structFor(ArcGisClientRegistry.get(clientKey).layerInfo().fields)
+
+  /** Engine-side columns with no remote layer field behind them: point
+    * geometry and the streaming tombstone marker. They never compile into a
+    * remote `where`, `outFields` or statistic.
+    */
+  def isSynthetic(name: String): Boolean =
+    name == "geom_x" || name == "geom_y" || name == "_deleted"
+
+  /** Remote projection for `schema`: its layer fields, or `*` when only
+    * synthetic columns are read.
+    */
+  def outFields(schema: StructType): Seq[String] = {
+    val attrs = schema.fieldNames.filterNot(isSynthetic).toSeq
+    if (attrs.isEmpty) Seq("*") else attrs
+  }
 
   /** JSON-Schema document → Catalyst `StructType` (SURVEY §7.1 step 1): the
     * reference's `schema()` surface emits TypeBox JSON Schema
@@ -181,6 +199,10 @@ object ArcGisFilterCompiler {
     case Not(c) => compile(c).map(cc => s"NOT ($cc)")
     case _ => None
   }
+
+  /** `(where) AND (clause)`, with a degenerate `where` elided. */
+  def andWhere(where: String, clause: String): String =
+    if (where.trim.isEmpty || where.trim == "1=1") clause else s"($where) AND ($clause)"
 }
 
 class ArcGisTable(schema: StructType, options: CaseInsensitiveStringMap)
@@ -223,11 +245,11 @@ object ArcGisAggCompiler {
   def compile(
       agg: Aggregation,
       schema: StructType,
-      layerFields: Seq[ArcGisField]
+      layer: LayerInfo
   ): Option[PushedAgg] = {
-    val esriType = layerFields.map(f => f.name -> f.esriType).toMap
+    val esriType = layer.fields.map(f => f.name -> f.esriType).toMap
     def attrField(n: String): Boolean =
-      n != "geom_x" && n != "geom_y" && schema.fieldNames.contains(n)
+      !ArcGisSchema.isSynthetic(n) && schema.fieldNames.contains(n)
     // dates surface engine-side as strings but aggregate remotely as epoch
     // millis — keep their min/max/sum/avg engine-side for fidelity
     def statField(n: String): Boolean =
@@ -240,7 +262,7 @@ object ArcGisAggCompiler {
       case LongType | IntegerType => LongType
       case _ => DoubleType
     }
-    val oid = layerFields.find(_.esriType == "esriFieldTypeOID").map(_.name)
+    val oid = layer.oidField
 
     val gb = agg.groupByExpressions().toSeq.map(fieldName)
     if (!gb.forall(_.exists(attrField))) return None
@@ -286,6 +308,14 @@ class ArcGisScanBuilder(schema: StructType, options: CaseInsensitiveStringMap)
   // reference's TypeBox enum check, failing at scan build, not mid-fan-out
   ArcGisConfigSchema.validateOptions(options)
 
+  /** Layer metadata, fetched at most once per scan and shared by the
+    * aggregate pushdown, the planner statistics and partition planning. A
+    * new builder (each query execution) fetches afresh, so a re-run sees a
+    * grown layer.
+    */
+  private lazy val info: LayerInfo =
+    ArcGisClientRegistry.get(options.get("client")).layerInfo()
+
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = schema
   private var limit: Option[Int] = None
@@ -302,8 +332,7 @@ class ArcGisScanBuilder(schema: StructType, options: CaseInsensitiveStringMap)
     // don't stack server-side statistics on top of it
     val strategy = Option(options.get("strategy")).getOrElse("query")
     if (attachmentsMode || !strategy.equalsIgnoreCase("query")) None
-    else ArcGisAggCompiler.compile(
-      agg, schema, ArcGisClientRegistry.get(options.get("client")).layerInfo().fields)
+    else ArcGisAggCompiler.compile(agg, schema, info)
   }
 
   /** Results from `outStatistics` are final per group, so the pushdown is
@@ -348,7 +377,7 @@ class ArcGisScanBuilder(schema: StructType, options: CaseInsensitiveStringMap)
     // layer fields — predicates touching them must stay residual in Spark.
     val (supported, residual) = filters.partition { f =>
       ArcGisFilterCompiler.compile(f).isDefined &&
-        !f.references.exists(r => r == "geom_x" || r == "geom_y" || r == "_deleted")
+        !f.references.exists(ArcGisSchema.isSynthetic)
     }
     pushed = supported
     // ...but bbox-shaped geometry predicates DO compile to the server-side
@@ -357,34 +386,25 @@ class ArcGisScanBuilder(schema: StructType, options: CaseInsensitiveStringMap)
     // (strict > uses its value inclusively) and the originating filters
     // stay residual above, so Spark's result is exact while the server
     // stops shipping everything outside the box.
-    var xmin, ymin = Double.NegativeInfinity
-    var xmax, ymax = Double.PositiveInfinity
-    var any = false
-    def num(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      case _ => None
+    def num(v: Any): Seq[Double] = v match {
+      case n: Number => Seq(n.doubleValue())
+      case _ => Nil
     }
-    def lo(cur: Double, v: Any): Double = num(v).map(math.max(cur, _)).getOrElse(cur)
-    def hi(cur: Double, v: Any): Double = num(v).map(math.min(cur, _)).getOrElse(cur)
-    filters.foreach {
-      case GreaterThan("geom_x", v) => xmin = lo(xmin, v); any = true
-      case GreaterThanOrEqual("geom_x", v) => xmin = lo(xmin, v); any = true
-      case LessThan("geom_x", v) => xmax = hi(xmax, v); any = true
-      case LessThanOrEqual("geom_x", v) => xmax = hi(xmax, v); any = true
-      case EqualTo("geom_x", v) => xmin = lo(xmin, v); xmax = hi(xmax, v); any = true
-      case GreaterThan("geom_y", v) => ymin = lo(ymin, v); any = true
-      case GreaterThanOrEqual("geom_y", v) => ymin = lo(ymin, v); any = true
-      case LessThan("geom_y", v) => ymax = hi(ymax, v); any = true
-      case LessThanOrEqual("geom_y", v) => ymax = hi(ymax, v); any = true
-      case EqualTo("geom_y", v) => ymin = lo(ymin, v); ymax = hi(ymax, v); any = true
-      case _ =>
-    }
-    def clamp(d: Double): Double =
-      if (d.isNegInfinity) -Double.MaxValue
-      else if (d.isPosInfinity) Double.MaxValue
-      else d
-    if (any && xmin <= xmax && ymin <= ymax)
-      envelope = Some(Envelope(clamp(xmin), clamp(ymin), clamp(xmax), clamp(ymax)))
+    // (column, lower bounds, upper bounds) of each geometry comparison
+    val bounds: Seq[(String, Seq[Double], Seq[Double])] = filters.toSeq.collect {
+      case GreaterThan(c, v) => (c, num(v), Nil)
+      case GreaterThanOrEqual(c, v) => (c, num(v), Nil)
+      case LessThan(c, v) => (c, Nil, num(v))
+      case LessThanOrEqual(c, v) => (c, Nil, num(v))
+      case EqualTo(c, v) => (c, num(v), num(v))
+    }.filter(b => b._1 == "geom_x" || b._1 == "geom_y")
+    def clamp(d: Double): Double = d.max(-Double.MaxValue).min(Double.MaxValue)
+    def lo(c: String): Double =
+      clamp(bounds.filter(_._1 == c).flatMap(_._2).foldLeft(Double.NegativeInfinity)(math.max))
+    def hi(c: String): Double =
+      clamp(bounds.filter(_._1 == c).flatMap(_._3).foldLeft(Double.PositiveInfinity)(math.min))
+    if (bounds.nonEmpty && lo("geom_x") <= hi("geom_x") && lo("geom_y") <= hi("geom_y"))
+      envelope = Some(Envelope(lo("geom_x"), lo("geom_y"), hi("geom_x"), hi("geom_y")))
     residual
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -399,10 +419,10 @@ class ArcGisScanBuilder(schema: StructType, options: CaseInsensitiveStringMap)
       case Seq() => "1=1"
       case cs => cs.mkString("(", ") AND (", ")")
     }
-    if (attachmentsMode) new ArcGisAttachmentsScan(required, options, where)
+    if (attachmentsMode) new ArcGisAttachmentsScan(required, options, where, info)
     else pushedAgg match {
-      case Some(pa) => new ArcGisScan(pa.readSchema, options, where, None, Some(pa))
-      case None => new ArcGisScan(required, options, where, limit, envelope = envelope)
+      case Some(pa) => new ArcGisScan(pa.readSchema, options, where, info, None, Some(pa))
+      case None => new ArcGisScan(required, options, where, info, limit, envelope = envelope)
     }
   }
 }
@@ -421,6 +441,18 @@ case class ArcGisInputPartition(
     envelope: Option[Envelope] = None
 ) extends InputPartition
 
+/** An OBJECTID interval `[lo, hi)` under `where`, drained by
+  * [[OidRanges.drain]]; `page` is the saturation threshold (the server's
+  * maxRecordCount).
+  */
+sealed trait OidWindow extends InputPartition {
+  def lo: Long
+  def hi: Long
+  def oidField: String
+  def where: String
+  def page: Int
+}
+
 /** One OBJECTID interval `[lo, hi)` of the layer — the scan mode for servers
   * whose `/query` lacks `resultOffset` support (reference [lib] esri-dump
   * falls back to OID-range windows the same way), and the better deep-scan
@@ -437,7 +469,7 @@ case class ArcGisOidRangePartition(
     where: String,
     page: Int,
     envelope: Option[Envelope] = None
-) extends InputPartition
+) extends OidWindow
 
 /** One remote `outStatistics` call: the whole (pushed-down) aggregation is a
   * single group-count-sized result set, so one partition fetches it.
@@ -478,7 +510,72 @@ case class ArcGisAttachmentsPartition(
       * pay no extra metadata round-trip.
       */
     bulkListing: Boolean = false
-) extends InputPartition
+) extends OidWindow
+
+/** The OBJECTID-range protocol shared by the `oidRange` feature scan, the
+  * attachments scan and the incremental stream: the Spark driver splits an OID
+  * interval into windows, each task drains its window with stateless range
+  * requests. No `resultOffset` is ever sent.
+  */
+private[arcgis] object OidRanges {
+
+  /** `[lo, hi)` split into `ceil(rows / page)` contiguous windows of equal
+    * width (empty windows dropped).
+    */
+  def split(lo: Long, hi: Long, rows: Long, page: Int): Seq[(Long, Long)] = {
+    val n = ((rows + page - 1) / page).toInt.max(1)
+    val width = math.max(1L, (hi - lo + n - 1) / n)
+    (0 until n).iterator.map(lo + _ * width).takeWhile(_ < hi)
+      .map(a => (a, math.min(hi, a + width))).toSeq
+  }
+
+  /** Windows over the whole layer: full-layer OID bounds from one
+    * `outStatistics` round-trip, split so each window holds about `page`
+    * features. The scan's `where` may cover fewer OIDs — an empty window
+    * costs one cheap remote probe, never a wrong row. Unusable bounds on a
+    * non-empty layer fail loudly: planning zero windows would read as an
+    * empty table.
+    */
+  def layerRanges(
+      client: ArcGisClient, oid: String, totalCount: Long, page: Int, what: String
+  ): Seq[(Long, Long)] = {
+    val bounds = client
+      .queryStatistics("1=1", Nil, Seq(StatSpec("min", oid, "__lo"), StatSpec("max", oid, "__hi")))
+      .headOption
+      .flatMap(m => (m.get("__lo"), m.get("__hi")) match {
+        case (Some(lo: Number), Some(hi: Number)) => Some((lo.longValue(), hi.longValue() + 1))
+        case _ => None
+      })
+    bounds match {
+      case Some((lo, hi)) => split(lo, hi, totalCount, page)
+      case None if totalCount > 0 =>
+        throw new IllegalStateException(
+          s"$what scan could not derive OBJECTID bounds from the layer's " +
+            s"outStatistics probe (layer reports $totalCount features) — the " +
+            s"server must support min/max statistics on the OID field for $what")
+      case None => Nil
+    }
+  }
+
+  /** Executor-side drain of one window: each request carries no pagination
+    * parameters (count = -1 — they are unsupported on the servers this mode
+    * exists for), so the server caps the reply at its maxRecordCount. A
+    * reply of `w.page` rows or more cannot prove its range exhausted: it is
+    * discarded and both halves are requested instead. Yields the non-empty
+    * replies in OID order.
+    */
+  def drain(w: OidWindow)(fetch: String => Seq[EsriFeature]): Iterator[Seq[EsriFeature]] =
+    Iterator.unfold(List((w.lo, w.hi))) {
+      case Nil => None
+      case (lo, hi) :: rest =>
+        val rows = fetch(ArcGisFilterCompiler.andWhere(
+          w.where, s"${w.oidField} >= $lo AND ${w.oidField} < $hi"))
+        if (rows.size >= w.page && hi - lo > 1) {
+          val mid = lo + (hi - lo) / 2
+          Some((Nil, (lo, mid) :: (mid, hi) :: rest))
+        } else Some((rows, rest))
+    }.filter(_.nonEmpty)
+}
 
 /** Attachments scan: OID-range partitioning over the layer (attachment
   * access is keyed per feature OID, so the feature scan's range planning
@@ -490,7 +587,8 @@ case class ArcGisAttachmentsPartition(
 class ArcGisAttachmentsScan(
     schema: StructType,
     options: CaseInsensitiveStringMap,
-    where: String
+    where: String,
+    info: => LayerInfo
 ) extends Scan with Batch {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
@@ -506,51 +604,17 @@ class ArcGisAttachmentsScan(
         "(deletes/incremental options) and join attachments per batch instead")
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // mirrors ArcGisScan's oidRangePartitions: full-layer OID bounds from
-    // one stats round-trip, n ranges sized by pageSize/maxRecordCount
-    val client = ArcGisClientRegistry.get(options.get("client"))
-    val info = client.layerInfo()
-    val oid = info.fields.find(_.esriType == "esriFieldTypeOID").map(_.name)
-      .getOrElse(throw new IllegalArgumentException(
-        "attachments scan requires an esriFieldTypeOID field in the layer metadata"))
+    val oid = info.requireOid("attachments scan")
     val page = Option(options.get("pageSize")).map(_.toInt)
       .getOrElse(info.maxRecordCount.max(1))
-    val mm = client
-      .queryStatistics("1=1", Nil,
-        Seq(StatSpec("min", oid, "__lo"), StatSpec("max", oid, "__hi")))
-      .headOption
-    val bounds = mm.flatMap { m =>
-      (m.get("__lo"), m.get("__hi")) match {
-        case (Some(lo: Number), Some(hi: Number)) =>
-          Some((lo.longValue(), hi.longValue() + 1))
-        case _ => None
+    OidRanges
+      .layerRanges(ArcGisClientRegistry.get(options.get("client")), oid, info.totalCount,
+        page, "attachments=true")
+      .map { case (lo, hi) =>
+        ArcGisAttachmentsPartition(lo, hi, oid, where, info.maxRecordCount.max(1),
+          info.supportsQueryAttachments)
       }
-    }
-    bounds match {
-      // OID-range planning is the ONLY path for attachments (unlike the
-      // feature scan, which enters it conditionally), so unusable stats
-      // bounds on a NON-empty layer must not read as an empty attachment
-      // table: fail loudly instead of silently planning zero partitions.
-      case None if info.totalCount > 0 =>
-        throw new IllegalStateException(
-          s"attachments scan could not derive OBJECTID bounds from the " +
-            s"layer's outStatistics probe (layer reports " +
-            s"${info.totalCount} features) — the server must support " +
-            "min/max statistics on the OID field for attachments=true")
-      case None => Array.empty[InputPartition]
-      case Some((lo, hi)) =>
-        val n = ((info.totalCount + page - 1) / page).toInt.max(1)
-        val width = math.max(1L, (hi - lo + n - 1) / n)
-        (0 until n).iterator
-          .map { i =>
-            val a = lo + i.toLong * width
-            ArcGisAttachmentsPartition(
-              a, math.min(hi, a + width), oid, where, info.maxRecordCount.max(1),
-              info.supportsQueryAttachments)
-          }
-          .filter(p => p.lo < p.hi)
-          .toArray[InputPartition]
-    }
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -564,6 +628,7 @@ class ArcGisScan(
     schema: StructType,
     options: CaseInsensitiveStringMap,
     where: String,
+    info: => LayerInfo,
     limit: Option[Int] = None,
     aggregation: Option[ArcGisAggCompiler.PushedAgg] = None,
     envelope: Option[Envelope] = None
@@ -581,16 +646,16 @@ class ArcGisScan(
     new ArcGisMicroBatchStream(
       schema, options.asCaseSensitiveMap().asScala.toMap, where)
 
-  /** Layer statistics for the planner: row count from the layer metadata
-    * (one cheap `returnCountOnly` probe, cached in the client) and a field-
-    * width size estimate — enough for Catalyst to pick a broadcast join for
+  /** Layer statistics for the planner: row count from the scan's layer
+    * metadata (the same fetch partition planning uses) and a field-width
+    * size estimate — enough for Catalyst to pick a broadcast join for
     * small layers WITHOUT a user hint, and to fall back to shuffle joins
     * when the layer outgrows the threshold (the 100 TB failure mode a
     * hard-coded hint would hit).
     */
   override def estimateStatistics(): Statistics = new Statistics {
     private lazy val total: Long =
-      try ArcGisClientRegistry.get(options.get("client")).layerInfo().totalCount
+      try info.totalCount
       catch { case _: Throwable => -1L }
     private def rowWidth: Long = schema.fields.map { f =>
       f.dataType match {
@@ -616,15 +681,15 @@ class ArcGisScan(
   /** Runtime (DPP-style) filters: join-key values discovered at execution
     * time — e.g. the broadcast side of a selective dim join — compile into
     * the remote `where` like any static predicate, so the ArcGIS server
-    * never serves rows the join would drop. Geometry columns are synthetic
-    * and excluded. The join still applies the filter engine-side, so an
-    * inexpressible runtime predicate costs nothing in correctness.
+    * never serves rows the join would drop. Synthetic columns are excluded.
+    * The join still applies the filter engine-side, so an inexpressible
+    * runtime predicate costs nothing in correctness.
     */
   private var runtimeWhere: Option[String] = None
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     schema.fieldNames
-      .filterNot(n => n == "geom_x" || n == "geom_y" || n == "_deleted")
+      .filterNot(ArcGisSchema.isSynthetic)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
 
   override def filter(filters: Array[Filter]): Unit = {
@@ -634,10 +699,9 @@ class ArcGisScan(
   }
 
   private def effectiveWhere: String =
-    runtimeWhere.map(rw => s"($where) AND ($rw)").getOrElse(where)
+    runtimeWhere.map(ArcGisFilterCompiler.andWhere(where, _)).getOrElse(where)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val clientKey = options.get("client")
     val strategy = Option(options.get("strategy")).getOrElse("query")
     if (aggregation.isDefined) {
       val pa = aggregation.get
@@ -646,8 +710,6 @@ class ArcGisScan(
       // S2: the topFeatures endpoint is one remote group-top-k call.
       Array(ArcGisInputPartition(-1, -1, effectiveWhere))
     } else {
-      val client = ArcGisClientRegistry.get(clientKey)
-      val info = client.layerInfo()
       val page = Option(options.get("pageSize")).map(_.toInt)
         .getOrElse(info.maxRecordCount.max(1))
       // OID-range mode: explicit opt-in, or forced when the server's /query
@@ -662,44 +724,21 @@ class ArcGisScan(
       // scans OID ranges and lets the engine trim.
       val oidRange = strategy.equalsIgnoreCase("oidRange") || !info.supportsPagination
       def oidRangePartitions(): Array[InputPartition] = {
-        val oid = info.fields.find(_.esriType == "esriFieldTypeOID").map(_.name)
-          .getOrElse(throw new IllegalArgumentException(
-            "oidRange scan requires an esriFieldTypeOID field in the layer metadata"))
-        // full-layer OID bounds (one stats round-trip at plan time); the
-        // effective where may cover fewer OIDs — empty sub-ranges cost one
-        // cheap remote probe each, never a wrong row
-        val mm = client
-          .queryStatistics("1=1", Nil,
-            Seq(StatSpec("min", oid, "__lo"), StatSpec("max", oid, "__hi")))
-          .headOption
-        val bounds = mm.flatMap { m =>
-          (m.get("__lo"), m.get("__hi")) match {
-            case (Some(lo: Number), Some(hi: Number)) =>
-              Some((lo.longValue(), hi.longValue() + 1))
-            case _ => None
+        val oid = info.requireOid("oidRange scan")
+        // saturation threshold = the SERVER's cap, not the pageSize
+        // option: OID-range requests send no resultRecordCount (count
+        // = -1), so the server always caps at ITS maxRecordCount; a
+        // larger user pageSize would make a capped (= truncated)
+        // response look unsaturated and silently drop the rest of the
+        // range. pageSize still sizes the ranges themselves.
+        val saturation = info.maxRecordCount.max(1)
+        OidRanges
+          .layerRanges(ArcGisClientRegistry.get(options.get("client")), oid, info.totalCount,
+            page, "strategy=oidRange")
+          .map { case (lo, hi) =>
+            ArcGisOidRangePartition(lo, hi, oid, effectiveWhere, saturation, envelope)
           }
-        }
-        bounds match {
-          case None => Array.empty[InputPartition]
-          case Some((lo, hi)) =>
-            val n = ((info.totalCount + page - 1) / page).toInt.max(1)
-            val width = math.max(1L, (hi - lo + n - 1) / n)
-            // saturation threshold = the SERVER's cap, not the pageSize
-            // option: OID-range requests send no resultRecordCount (count
-            // = -1), so the server always caps at ITS maxRecordCount; a
-            // larger user pageSize would make a capped (= truncated)
-            // response look unsaturated and silently drop the rest of the
-            // range. pageSize still sizes the ranges themselves.
-            val saturation = info.maxRecordCount.max(1)
-            (0 until n).iterator
-              .map { i =>
-                val a = lo + i.toLong * width
-                ArcGisOidRangePartition(
-                  a, math.min(hi, a + width), oid, effectiveWhere, saturation, envelope)
-              }
-              .filter(p => p.lo < p.hi)
-              .toArray[InputPartition]
-        }
+          .toArray
       }
       if (limit.isEmpty && oidRange) {
         oidRangePartitions()
@@ -735,8 +774,25 @@ class ArcGisReaderFactory(
     case p: ArcGisOidRangePartition => new ArcGisOidRangeReader(schema, options, p)
     case p: ArcGisDeletesPartition => new ArcGisDeletesReader(schema, options, p)
     case p: ArcGisAttachmentsPartition => new ArcGisAttachmentsReader(schema, options, p)
-    case p: ArcGisInputPartition => new ArcGisPartitionReader(schema, options, p.where, p)
+    case p: ArcGisInputPartition => new ArcGisPartitionReader(schema, options, p)
   }
+}
+
+/** A partition reader over a lazily fetched iterator: the HTTP round-trips
+  * start at the first `next()`, inside the task — the cluster's fan-out
+  * point.
+  */
+abstract class ArcGisIteratorReader[T] extends PartitionReader[InternalRow] {
+  protected def fetch(): Iterator[T]
+  protected def row(t: T): InternalRow
+
+  private lazy val items = fetch()
+  private var current: T = _
+
+  override def next(): Boolean =
+    if (items.hasNext) { current = items.next(); true } else false
+  override def get(): InternalRow = row(current)
+  override def close(): Unit = ()
 }
 
 /** Executor-side tombstone materialization: one row per `(oid, deletedTs)`
@@ -749,30 +805,23 @@ class ArcGisDeletesReader(
     schema: StructType,
     options: Map[String, String],
     partition: ArcGisDeletesPartition
-) extends PartitionReader[InternalRow] {
+) extends ArcGisIteratorReader[(Long, Long)] {
 
-  private lazy val deletes: Iterator[(Long, Long)] =
+  override protected def fetch(): Iterator[(Long, Long)] =
     ArcGisClientRegistry.get(options("client"))
       .queryDeletedFeatures(partition.loTs, partition.hiTs).iterator
 
-  private var current: (Long, Long) = _
-
-  override def next(): Boolean =
-    if (deletes.hasNext) { current = deletes.next(); true } else false
-
-  override def get(): InternalRow = {
+  override protected def row(deleted: (Long, Long)): InternalRow = {
     val values = schema.fields.map { fld =>
       fld.name match {
         case "_deleted" => Boolean.box(true)
         case n if n == partition.oidField =>
-          ArcGisValues.coerce(fld.dataType, Long.box(current._1))
+          ArcGisValues.coerce(fld.dataType, Long.box(deleted._1))
         case _ => null
       }
     }
     new GenericInternalRow(values.asInstanceOf[Array[Any]])
   }
-
-  override def close(): Unit = ()
 }
 
 /** Shared attribute-value → Catalyst coercion for rows materialized from the
@@ -812,127 +861,73 @@ class ArcGisStatsReader(
     schema: StructType,
     options: Map[String, String],
     partition: ArcGisStatsPartition
-) extends PartitionReader[InternalRow] {
+) extends ArcGisIteratorReader[Map[String, Any]] {
 
-  private lazy val rows: Iterator[Map[String, Any]] =
+  override protected def fetch(): Iterator[Map[String, Any]] =
     ArcGisClientRegistry.get(options("client"))
       .queryStatistics(partition.where, partition.groupBy, partition.stats)
       .iterator
 
-  private var current: Map[String, Any] = _
-
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-
-  override def get(): InternalRow = {
+  override protected def row(stats: Map[String, Any]): InternalRow = {
     val values = schema.fields.map(f =>
-      ArcGisValues.coerce(f.dataType, current.getOrElse(f.name, null)))
+      ArcGisValues.coerce(f.dataType, stats.getOrElse(f.name, null)))
     new GenericInternalRow(values.asInstanceOf[Array[Any]])
   }
-
-  override def close(): Unit = ()
 }
 
-/** Executor-side page fetch + row materialization. The HTTP round-trip
-  * happens here, inside the task — this is the cluster's fan-out point.
+/** Executor-side page fetch + row materialization: one offset window, or
+  * (offset < 0) the single `queryTopFeatures` call.
   */
 class ArcGisPartitionReader(
     schema: StructType,
     options: Map[String, String],
-    where: String,
     partition: ArcGisInputPartition
-) extends PartitionReader[InternalRow] {
+) extends ArcGisIteratorReader[EsriFeature] {
 
-  private lazy val features: Iterator[EsriFeature] = {
+  override protected def fetch(): Iterator[EsriFeature] = {
     val client = ArcGisClientRegistry.get(options("client"))
-    val attrFields = schema.fieldNames
-      .filterNot(n => n == "geom_x" || n == "geom_y" || n == "_deleted")
-    val outFields = if (attrFields.isEmpty) Seq("*") else attrFields.toSeq
+    val outFields = ArcGisSchema.outFields(schema)
     val page =
       if (partition.offset < 0)
         client.queryTopFeatures(
           options.getOrElse("topCount", "1").toInt,
           options("groupByField"),
           options("orderByField"),
-          where,
+          partition.where,
           outFields,
           options.get("outSR")
         )
-      else client.queryPage(partition.offset, partition.count, where, outFields,
+      else client.queryPage(partition.offset, partition.count, partition.where, outFields,
         partition.envelope, options.get("outSR"))
     page.iterator
   }
 
-  private var current: EsriFeature = _
-
-  override def next(): Boolean = {
-    if (features.hasNext) { current = features.next(); true } else false
-  }
-
-  override def get(): InternalRow = ArcGisValues.toRow(schema, current)
-
-  override def close(): Unit = ()
+  override protected def row(f: EsriFeature): InternalRow = ArcGisValues.toRow(schema, f)
 }
 
 /** Executor-side OID-range scan: drains `[lo, hi)` with stateless range
-  * requests, halving any range whose response fills a page (a full page
-  * cannot prove the range was exhausted). No `resultOffset` is ever sent —
-  * this is the scan mode for servers without pagination support and the
-  * deep-scan-friendly mode everywhere else.
+  * requests ([[OidRanges.drain]]). This is the scan mode for servers without
+  * pagination support and the deep-scan-friendly mode everywhere else.
   */
 class ArcGisOidRangeReader(
     schema: StructType,
     options: Map[String, String],
     partition: ArcGisOidRangePartition
-) extends PartitionReader[InternalRow] {
+) extends ArcGisIteratorReader[EsriFeature] {
 
-  private lazy val client = ArcGisClientRegistry.get(options("client"))
-  private val attrFields = schema.fieldNames
-    .filterNot(n => n == "geom_x" || n == "geom_y" || n == "_deleted")
-  private val outFields = if (attrFields.isEmpty) Seq("*") else attrFields.toSeq
-
-  private val pending = scala.collection.mutable.Stack[(Long, Long)]((partition.lo, partition.hi))
-  private var buffer: Iterator[EsriFeature] = Iterator.empty
-  private var current: EsriFeature = _
-
-  private def rangeWhere(lo: Long, hi: Long): String = {
-    val range = s"${partition.oidField} >= $lo AND ${partition.oidField} < $hi"
-    if (partition.where.trim.isEmpty || partition.where == "1=1") range
-    else s"(${partition.where}) AND ($range)"
+  override protected def fetch(): Iterator[EsriFeature] = {
+    val client = ArcGisClientRegistry.get(options("client"))
+    val outFields = ArcGisSchema.outFields(schema)
+    OidRanges.drain(partition)(where =>
+      client.queryPage(0L, -1, where, outFields, partition.envelope, options.get("outSR"))
+    ).flatten
   }
 
-  private def refill(): Boolean = {
-    while (pending.nonEmpty) {
-      val (lo, hi) = pending.pop()
-      // count = -1: no resultRecordCount — pagination params are themselves
-      // unsupported on the servers this mode exists for; the server caps the
-      // response at its maxRecordCount (== partition.page by default), which
-      // is exactly the saturation signal the halving protocol reads
-      val rows = client.queryPage(0L, -1, rangeWhere(lo, hi), outFields,
-        partition.envelope, options.get("outSR"))
-      if (rows.size >= partition.page && hi - lo > 1) {
-        // saturated response: discard, split, re-scan both halves
-        val mid = lo + (hi - lo) / 2
-        pending.push((mid, hi))
-        pending.push((lo, mid))
-      } else if (rows.nonEmpty) {
-        buffer = rows.iterator
-        return true
-      }
-    }
-    false
-  }
-
-  override def next(): Boolean =
-    if (buffer.hasNext || refill()) { current = buffer.next(); true } else false
-
-  override def get(): InternalRow = ArcGisValues.toRow(schema, current)
-
-  override def close(): Unit = ()
+  override protected def row(f: EsriFeature): InternalRow = ArcGisValues.toRow(schema, f)
 }
 
 /** Executor-side attachments fetch: lists the partition's OID range (same
-  * saturation-halving protocol as [[ArcGisOidRangeReader]], projecting only
+  * saturation-halving drain as [[ArcGisOidRangeReader]], projecting only
   * the OID field), then streams each feature's `attachmentInfos` — and,
   * ONLY when the pruned schema still contains `data`, the payload download.
   * A metadata-only projection therefore never moves attachment bytes over
@@ -942,65 +937,27 @@ class ArcGisAttachmentsReader(
     schema: StructType,
     options: Map[String, String],
     partition: ArcGisAttachmentsPartition
-) extends PartitionReader[InternalRow] {
+) extends ArcGisIteratorReader[(Long, AttachmentInfo)] {
 
   private lazy val client = ArcGisClientRegistry.get(options("client"))
   private val wantData = schema.fieldNames.contains("data")
 
-  private val pending =
-    scala.collection.mutable.Stack[(Long, Long)]((partition.lo, partition.hi))
-  private var oidBuffer: Iterator[Long] = Iterator.empty
-  private var attBuffer: Iterator[(Long, AttachmentInfo)] = Iterator.empty
-  private var current: (Long, AttachmentInfo) = _
-
-  private def rangeWhere(lo: Long, hi: Long): String = {
-    val range = s"${partition.oidField} >= $lo AND ${partition.oidField} < $hi"
-    if (partition.where.trim.isEmpty || partition.where == "1=1") range
-    else s"(${partition.where}) AND ($range)"
-  }
-
-  private def refillOids(): Boolean = {
-    while (pending.nonEmpty) {
-      val (lo, hi) = pending.pop()
-      val rows = client.queryPage(0L, -1, rangeWhere(lo, hi), Seq(partition.oidField))
-      if (rows.size >= partition.page && hi - lo > 1) {
-        val mid = lo + (hi - lo) / 2
-        pending.push((mid, hi))
-        pending.push((lo, mid))
-      } else if (rows.nonEmpty) {
-        oidBuffer = rows.iterator.flatMap(
-          _.attributes.get(partition.oidField).collect { case n: Number => n.longValue() })
-        return true
-      }
+  override protected def fetch(): Iterator[(Long, AttachmentInfo)] =
+    OidRanges.drain(partition)(where =>
+      client.queryPage(0L, -1, where, Seq(partition.oidField))
+    ).flatMap { features =>
+      val oids = features.flatMap(
+        _.attributes.get(partition.oidField).collect { case n: Number => n.longValue() })
+      // layer advertises supportsQueryAttachments: ONE bulk listing per
+      // drained window instead of one round-trip per feature — at a
+      // million-feature layer the per-OID listing dominates even
+      // metadata-only plans
+      if (partition.bulkListing) client.queryAttachments(oids)
+      else oids.iterator.flatMap(oid => client.attachmentInfos(oid).map(oid -> _))
     }
-    false
-  }
 
-  private def advance(): Boolean = {
-    while (!attBuffer.hasNext) {
-      if (!oidBuffer.hasNext && !refillOids()) return false
-      if (oidBuffer.hasNext) {
-        if (partition.bulkListing) {
-          // layer advertises supportsQueryAttachments: ONE bulk listing per
-          // saturation window (the OID batch refillOids just fetched)
-          // instead of one round-trip per feature — at a million-feature
-          // layer the per-OID listing dominates even metadata-only plans
-          attBuffer = client.queryAttachments(oidBuffer.toSeq).iterator
-          oidBuffer = Iterator.empty
-        } else {
-          val oid = oidBuffer.next()
-          attBuffer = client.attachmentInfos(oid).iterator.map(i => (oid, i))
-        }
-      }
-    }
-    true
-  }
-
-  override def next(): Boolean =
-    if (advance()) { current = attBuffer.next(); true } else false
-
-  override def get(): InternalRow = {
-    val (oid, info) = current
+  override protected def row(att: (Long, AttachmentInfo)): InternalRow = {
+    val (oid, info) = att
     val values: Array[Any] = schema.fields.map { fld =>
       fld.name match {
         case "objectid" => Long.box(oid)
@@ -1014,6 +971,4 @@ class ArcGisAttachmentsReader(
     }
     new GenericInternalRow(values)
   }
-
-  override def close(): Unit = ()
 }

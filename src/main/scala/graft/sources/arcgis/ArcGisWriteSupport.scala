@@ -16,9 +16,8 @@ import org.apache.spark.sql.types._
   *   .save()
   * }}}
   *
-  * Semantics match [[EsriSink]] (same batching, same per-feature error
-  * isolation — a failed feature is counted, never fails the job, reference
-  * T8 `task.ts:351-358`):
+  * A failed feature is counted and never fails the job (per-feature error
+  * isolation, reference T8 `task.ts:351-358`):
   *
   *   - '''append''' — batched `addFeatures`, 500 features per POST.
   *   - '''upsert''' (`upsertKey` set) — each batch issues ONE `key IN (...)`
@@ -26,8 +25,8 @@ import org.apache.spark.sql.types._
   *     the un-paginated response can never truncate), splits the batch into
   *     adds vs updates (updates carry the discovered OID), and posts each
   *     side. O(1) extra round-trip per batch — never the reference's
-  *     per-row probe. For a global single-scan split, [[EsriSink.upsert]]
-  *     remains the bulk-path alternative.
+  *     per-row probe. The layer metadata (OID field, maxRecordCount) is
+  *     fetched once per job on the Spark driver, and only for upserts.
   *   - '''delete''' — rows whose `_deleted` column is true (the incremental
   *     source's change-tracking tombstones) route to the server's
   *     `deleteFeatures` verb: one `key IN (...)` probe resolves the target
@@ -71,13 +70,24 @@ class ArcGisWrite(schema: StructType, clientKey: String, upsertKey: Option[Strin
     */
   override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = this
 
+  /** The upsert target, resolved once on the Spark driver: the batch size must
+    * fit one un-paginated existence response (the server caps replies at
+    * maxRecordCount; a bigger batch would silently treat the truncated
+    * remainder as "new" and duplicate rows).
+    */
+  private lazy val upsert: Option[ArcGisUpsert] = upsertKey.map { key =>
+    val info = ArcGisClientRegistry.get(clientKey).layerInfo()
+    ArcGisUpsert(key, info.requireOid("arcgis upsert"),
+      math.max(1, math.min(ArcGisDataWriter.MaxBatch, info.maxRecordCount)))
+  }
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new ArcGisWriterFactory(schema, clientKey, upsertKey)
+    new ArcGisWriterFactory(schema, clientKey, upsert)
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo
   ): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new ArcGisWriterFactory(schema, clientKey, upsertKey)
+    new ArcGisWriterFactory(schema, clientKey, upsert)
 
   private def recordCommit(messages: Array[WriterCommitMessage]): Unit = {
     val (ok, failed, updated, deleted) = messages.foldLeft((0L, 0L, 0L, 0L)) {
@@ -98,7 +108,7 @@ class ArcGisWrite(schema: StructType, clientKey: String, upsertKey: Option[Strin
 }
 
 /** Per-job write outcome (inserted / failed / updated / deleted),
-  * observable by key — the DSv2 analog of [[EsriSink]]'s returned counts. */
+  * observable by key. */
 object ArcGisWriteStats {
   private val stats =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long, Long)]()
@@ -110,27 +120,26 @@ object ArcGisWriteStats {
 case class ArcGisCommit(ok: Long, failed: Long, updated: Long, deleted: Long = 0L)
     extends WriterCommitMessage
 
-class ArcGisWriterFactory(schema: StructType, clientKey: String, upsertKey: Option[String])
+/** Upsert target resolved on the Spark driver: the sync key, the layer's OID
+  * field, and the batch size one existence probe can answer untruncated.
+  */
+case class ArcGisUpsert(key: String, oidField: String, batchSize: Int)
+
+class ArcGisWriterFactory(schema: StructType, clientKey: String, upsert: Option[ArcGisUpsert])
     extends DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ArcGisDataWriter(schema, clientKey, upsertKey)
+    new ArcGisDataWriter(schema, clientKey, upsert)
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new ArcGisDataWriter(schema, clientKey, upsertKey)
+    new ArcGisDataWriter(schema, clientKey, upsert)
 }
 
-class ArcGisDataWriter(schema: StructType, clientKey: String, upsertKey: Option[String])
+class ArcGisDataWriter(schema: StructType, clientKey: String, upsert: Option[ArcGisUpsert])
     extends DataWriter[InternalRow] {
 
   private lazy val client = ArcGisClientRegistry.get(clientKey)
-  private lazy val info = client.layerInfo()
-  private lazy val oidField = info.fields.find(_.esriType == "esriFieldTypeOID").map(_.name)
-  // upsert batches must fit one un-paginated existence response (the server
-  // caps replies at maxRecordCount; a bigger batch would silently treat the
-  // truncated remainder as "new" and duplicate rows)
-  private lazy val batchSize =
-    if (upsertKey.isDefined) math.max(1, math.min(500, info.maxRecordCount)) else 500
+  private val batchSize = upsert.map(_.batchSize).getOrElse(ArcGisDataWriter.MaxBatch)
 
   private val geomX = schema.fieldNames.indexOf("geom_x")
   private val geomY = schema.fieldNames.indexOf("geom_y")
@@ -162,9 +171,9 @@ class ArcGisDataWriter(schema: StructType, clientKey: String, upsertKey: Option[
 
   override def write(row: InternalRow): Unit = {
     if (deletedIdx >= 0 && !row.isNullAt(deletedIdx) && row.getBoolean(deletedIdx)) {
-      val key = upsertKey.getOrElse(throw new IllegalArgumentException(
+      val key = upsert.getOrElse(throw new IllegalArgumentException(
         "_deleted tombstones require the upsertKey option — the tombstone " +
-          "is matched to the target row by the sync key"))
+          "is matched to the target row by the sync key")).key
       val ki = schema.fieldNames.indexOf(key)
       if (ki >= 0 && !row.isNullAt(ki))
         delKeys += valueAt(row, ki, schema.fields(ki).dataType)
@@ -172,7 +181,7 @@ class ArcGisDataWriter(schema: StructType, clientKey: String, upsertKey: Option[
       return
     }
     val attrs = schema.fields.iterator.zipWithIndex.flatMap { case (f, i) =>
-      if (i == geomX || i == geomY || i == deletedIdx) None
+      if (ArcGisSchema.isSynthetic(f.name)) None
       else Option(valueAt(row, i, f.dataType)).map(f.name -> _)
     }.toMap
     val geom =
@@ -188,23 +197,23 @@ class ArcGisDataWriter(schema: StructType, clientKey: String, upsertKey: Option[
     case other => String.valueOf(other)
   }
 
+  /** ONE existence probe for a whole batch of sync keys (S10): `key IN
+    * (...)`, only `fields` requested, count = -1 so it stays unpaginated.
+    */
+  private def probe(key: String, keys: Seq[Any], fields: Seq[String]): Seq[EsriFeature] =
+    client.queryPage(0L, -1, s"$key IN (${keys.map(sqlLit).mkString(", ")})", fields)
+
   private def flush(): Unit = {
     if (buffer.isEmpty) return
     val batch = buffer.toSeq
     buffer.clear()
-    upsertKey match {
+    upsert match {
       case None => post(batch, add = true)
-      case Some(key) =>
-        val oid = oidField.getOrElse(throw new IllegalArgumentException(
-          "arcgis upsert requires an esriFieldTypeOID field in the layer metadata"))
-        // ONE existence probe for the whole batch (S10): key IN (...) with
-        // only (key, oid) requested; count=-1 stays pagination-free
+      case Some(ArcGisUpsert(key, oid, _)) =>
         val keys = batch.flatMap(_.attributes.get(key)).distinct
         val existing: Map[String, Any] =
           if (keys.isEmpty) Map.empty
-          else client
-            .queryPage(0L, -1, s"$key IN (${keys.map(sqlLit).mkString(", ")})",
-              Seq(key, oid))
+          else probe(key, keys, Seq(key, oid))
             .flatMap(f => for (k <- f.attributes.get(key); o <- f.attributes.get(oid))
               yield String.valueOf(k) -> o)
             .toMap
@@ -232,14 +241,11 @@ class ArcGisDataWriter(schema: StructType, clientKey: String, upsertKey: Option[
     */
   private def flushDeletes(): Unit = {
     if (delKeys.isEmpty) return
-    val key = upsertKey.get
-    val oid = oidField.getOrElse(throw new IllegalArgumentException(
-      "arcgis delete requires an esriFieldTypeOID field in the layer metadata"))
+    val ArcGisUpsert(key, oid, _) = upsert.get
     val keys = delKeys.toSeq
     delKeys.clear()
     keys.grouped(batchSize).foreach { g =>
-      val oids = client
-        .queryPage(0L, -1, s"$key IN (${g.map(sqlLit).mkString(", ")})", Seq(oid))
+      val oids = probe(key, g, Seq(oid))
         .flatMap(_.attributes.get(oid)).collect { case n: Number => n.longValue() }
       if (oids.nonEmpty) client.deleteFeatures(oids).foreach {
         case Right(_) => deleted += 1
@@ -257,4 +263,9 @@ class ArcGisDataWriter(schema: StructType, clientKey: String, upsertKey: Option[
   override def abort(): Unit = { buffer.clear(); delKeys.clear() }
 
   override def close(): Unit = ()
+}
+
+object ArcGisDataWriter {
+  /** Features per POST: the append batch, and the ceiling of an upsert batch. */
+  val MaxBatch = 500
 }

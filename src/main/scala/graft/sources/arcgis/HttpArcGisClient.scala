@@ -113,13 +113,26 @@ class HttpArcGisClient(
       params.filterNot(p => overridden.contains(p._1)) ++ extraParams
     }
 
+  private def encoded(params: Seq[(String, String)]): String =
+    params.map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&")
+
   /** Encoded read-request parameter string — auth token, user extras and the
     * `f=json` envelope selector applied, re-evaluated per attempt so an
     * invalidated token is re-fetched.
     */
   private def readQs(params: Seq[(String, String)]): String =
-    (withAuth(withExtras(params)) :+ ("f" -> "json"))
-      .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&")
+    encoded(withAuth(withExtras(params)) :+ ("f" -> "json"))
+
+  /** One request to `uri` with the Referer header every call carries. */
+  private def request(uri: String)(method: HttpRequest.Builder => HttpRequest.Builder): HttpRequest = {
+    val builder = method(HttpRequest.newBuilder(URI.create(uri)))
+    referer.foreach(r => builder.header("Referer", r))
+    builder.build()
+  }
+
+  private def formPost(body: String)(b: HttpRequest.Builder): HttpRequest.Builder =
+    b.header("Content-Type", "application/x-www-form-urlencoded")
+      .POST(HttpRequest.BodyPublishers.ofString(body))
 
   /** Fronting servers cap the query string long before the endpoint's
     * logical limits — IIS (the common ArcGIS Server front) defaults
@@ -135,31 +148,15 @@ class HttpArcGisClient(
 
   private def get(path: String, params: Seq[(String, String)]): String =
     if (readQs(params).length <= maxGetQueryChars)
-      sendWithRetry(s"GET $path", () => {
-        val builder =
-          HttpRequest.newBuilder(URI.create(s"$layerUrl$path?${readQs(params)}")).GET()
-        referer.foreach(r => builder.header("Referer", r))
-        builder.build()
-      })
+      sendWithRetry(s"GET $path",
+        () => request(s"$layerUrl$path?${readQs(params)}")(_.GET()))
     else
-      sendWithRetry(s"POST(read) $path", () => {
-        val builder = HttpRequest.newBuilder(URI.create(s"$layerUrl$path"))
-          .header("Content-Type", "application/x-www-form-urlencoded")
-          .POST(HttpRequest.BodyPublishers.ofString(readQs(params)))
-        referer.foreach(r => builder.header("Referer", r))
-        builder.build()
-      })
+      sendWithRetry(s"POST(read) $path",
+        () => request(s"$layerUrl$path")(formPost(readQs(params))))
 
   private def post(path: String, params: Seq[(String, String)]): String =
-    sendWithRetry(s"POST $path", idempotent = false, build = () => {
-      val body = (withAuth(params) :+ ("f" -> "json"))
-        .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&")
-      val builder = HttpRequest.newBuilder(URI.create(s"$layerUrl$path"))
-        .header("Content-Type", "application/x-www-form-urlencoded")
-        .POST(HttpRequest.BodyPublishers.ofString(body))
-      referer.foreach(r => builder.header("Referer", r))
-      builder.build()
-    })
+    sendWithRetry(s"POST $path", idempotent = false, build = () =>
+      request(s"$layerUrl$path")(formPost(encoded(withAuth(params) :+ ("f" -> "json")))))
 
   override def layerInfo(): LayerInfo = {
     val json = MiniJson.parse(get("", Seq.empty))
@@ -243,20 +240,15 @@ class HttpArcGisClient(
       "topFilter" -> s"""{"groupByFields":"$groupByField","topCount":$topCount,"orderByFields":"$orderByField"}"""
     )))
 
-  override def queryByKey(keyCol: String, key: String): Seq[EsriFeature] =
-    parseFeatures(get("/query", Seq(
-      "where" -> s"$keyCol = '${key.replace("'", "''")}'",
-      "outFields" -> "*"
-    )))
+  private def attachmentInfo(a: MiniJson.JValue): AttachmentInfo =
+    AttachmentInfo(
+      a.num("id").map(_.toLong).getOrElse(-1L),
+      a.str("name"),
+      a.str("contentType"),
+      a.num("size").map(_.toLong).getOrElse(0L))
 
   override def attachmentInfos(oid: Long): Seq[AttachmentInfo] =
-    MiniJson.parse(get(s"/$oid/attachments", Seq.empty)).arr("attachmentInfos").map { a =>
-      AttachmentInfo(
-        a.num("id").map(_.toLong).getOrElse(-1L),
-        a.str("name"),
-        a.str("contentType"),
-        a.num("size").map(_.toLong).getOrElse(0L))
-    }
+    MiniJson.parse(get(s"/$oid/attachments", Seq.empty)).arr("attachmentInfos").map(attachmentInfo)
 
   /** Bulk listing via the layer's `queryAttachments` endpoint — one
     * round-trip per OID window instead of one per feature. The public REST
@@ -272,13 +264,7 @@ class HttpArcGisClient(
       "returnUrl" -> "false"
     ))).arr("attachmentGroups").flatMap { g =>
       val parent = g.num("parentObjectId").map(_.toLong).getOrElse(-1L)
-      g.arr("attachmentInfos").map { a =>
-        parent -> AttachmentInfo(
-          a.num("id").map(_.toLong).getOrElse(-1L),
-          a.str("name"),
-          a.str("contentType"),
-          a.num("size").map(_.toLong).getOrElse(0L))
-      }
+      g.arr("attachmentInfos").map(a => parent -> attachmentInfo(a))
     }
 
   /** Raw download form of the attachments endpoint: no `f=json` envelope —
@@ -289,14 +275,9 @@ class HttpArcGisClient(
     val bytes = sendRaw(
       s"GET /$oid/attachments/$attachmentId",
       () => {
-        val qs = withAuth(withExtras(Seq.empty))
-          .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&")
+        val qs = encoded(withAuth(withExtras(Seq.empty)))
         val sep = if (qs.isEmpty) "" else "?"
-        val builder = HttpRequest
-          .newBuilder(URI.create(s"$layerUrl/$oid/attachments/$attachmentId$sep$qs"))
-          .GET()
-        referer.foreach(r => builder.header("Referer", r))
-        builder.build()
+        request(s"$layerUrl/$oid/attachments/$attachmentId$sep$qs")(_.GET())
       },
       HttpResponse.BodyHandlers.ofByteArray(),
       idempotent = true)

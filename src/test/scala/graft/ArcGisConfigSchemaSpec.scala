@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.sources.arcgis._
 import graft.sources.arcgis.ArcGisConfigSchema._
 
@@ -93,7 +94,8 @@ class ArcGisConfigSchemaSpec extends AnyFunSuite {
     Seq("query", "QUERYTOPFEATURES", "oidrange").foreach { s =>
       ArcGisConfigSchema.validateOptions(
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-          java.util.Map.of("client", "cfgbad", "strategy", s)))
+          java.util.Map.of("client", "cfgbad", "strategy", s,
+            "groupByField", "g", "orderByField", "o")))
     }
     val bad = intercept[IllegalArgumentException] {
       ArcGisConfigSchema.validateOptions(
@@ -101,5 +103,37 @@ class ArcGisConfigSchemaSpec extends AnyFunSuite {
           java.util.Map.of("pageSize", "ten")))
     }
     assert(bad.getMessage.contains("pageSize"))
+  }
+
+  test("strategy=queryTopFeatures: group/order fields and topCount are checked at PLAN time") {
+    def validate(kv: (String, String)*): Unit =
+      ArcGisConfigSchema.validateOptions(
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          (("strategy" -> "queryTopFeatures") +: kv).toMap.asJava))
+    def failure(kv: (String, String)*): String =
+      intercept[IllegalArgumentException](validate(kv: _*)).getMessage
+    val both = Seq("groupByField" -> "status", "orderByField" -> "name")
+    validate(both: _*)
+    validate(both :+ ("topCount" -> "3"): _*)
+    assert(failure("orderByField" -> "name").contains("groupByField"))
+    assert(failure("groupByField" -> "status").contains("orderByField"))
+    assert(failure("groupByField" -> "", "orderByField" -> "name").contains("groupByField"))
+    assert(failure(both :+ ("topCount" -> "two"): _*).contains("topCount must be an integer"))
+    assert(failure(both :+ ("topCount" -> "0"): _*).contains("topCount must be positive"))
+    // other strategies ignore the topFeatures options
+    ArcGisConfigSchema.validateOptions(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("strategy", "query", "topCount", "two")))
+
+    // and a scan fails when it is built, not inside a task
+    val client = new MockArcGisClient(
+      Seq(ArcGisField("objectid", "esriFieldTypeOID")), Seq.empty)
+    ArcGisClientRegistry.register("cfgtop", client)
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("arcgis").option("client", "cfgtop")
+        .option("strategy", "queryTopFeatures").option("orderByField", "objectid")
+        .load()
+    }
+    assert(e.getMessage.contains("groupByField"), e.getMessage)
   }
 }

@@ -107,35 +107,6 @@ class ArcGisSourceSpec extends AnyFunSuite {
     assert(ArcGisFilterCompiler.compile(StringContains("a", "z")).isEmpty)
   }
 
-  test("S7-S9 sink: append and upsert split add vs update") {
-    val client = mkClient(10)
-    ArcGisClientRegistry.register("sink10", client)
-    import spark.implicits._
-    // source batch: 3 rows matching existing objectids via key 'name', 2 new
-    val batch = Seq(
-      ("feat-1", 100.0), ("feat-2", 101.0), ("feat-3", 102.0),
-      ("feat-new-a", 1.0), ("feat-new-b", 2.0)
-    ).toDF("name", "score")
-
-    val (ins, upd) = EsriSink.upsert(batch, "sink10", "name")
-    assert(ins == 2 && upd == 3)
-    assert(client.added.size() == 2 && client.updated.size() == 3)
-    // updates carry the matched server objectid (reference task.ts:325)
-    val updNames = client.updated.toArray.map(_.asInstanceOf[EsriFeature].attributes("objectid"))
-    assert(updNames.toSet == Set(1L, 2L, 3L))
-  }
-
-  test("EsriSink.delete: bulk tombstones resolve OIDs via one key scan, unknown keys no-op") {
-    val client = mkClient(10)
-    ArcGisClientRegistry.register("sinkdel10", client)
-    import spark.implicits._
-    val tombs = Seq("feat-4", "feat-7", "ghost-key").toDF("name")
-    val (deleted, failed) = EsriSink.delete(tombs, "sinkdel10", "name")
-    assert(deleted == 2 && failed == 0)
-    import scala.jdk.CollectionConverters._
-    assert(client.deletedByClient.asScala.toSet == Set(4L, 7L))
-  }
-
   test("runtime (DPP) filters from a selective dim join reach the remote where") {
     val knobs = Seq(
       "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true",
@@ -314,6 +285,60 @@ class ArcGisSourceSpec extends AnyFunSuite {
       .option("pageSize", "50").load()
     val ids = df.select("objectid").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == (0L until 40L))
+  }
+
+  test("oidRange: unusable OID bounds on a non-empty layer fail loudly, not as an empty table") {
+    // a server whose stats probe yields nothing usable (no outStatistics
+    // support) while the layer plainly has rows
+    val base = mkClient(5)
+    val mock = new MockArcGisClient(base.fields, base.rows) {
+      override def queryStatistics(where: String, groupBy: Seq[String],
+          stats: Seq[StatSpec]): Seq[Map[String, Any]] = Seq.empty
+    }
+    ArcGisClientRegistry.register("oid-nobounds", mock)
+    val df = spark.read.format("arcgis")
+      .option("client", "oid-nobounds").option("strategy", "oidRange").load()
+    val ex = intercept[Exception](df.collect())
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+    assert(messages(ex).exists(_.contains("OBJECTID bounds")),
+      s"expected the descriptive bounds error, got: ${messages(ex)}")
+  }
+
+  /** A mock layer that counts its metadata fetches. */
+  private class CountingClient(base: MockArcGisClient)
+      extends MockArcGisClient(base.fields, base.rows, base.pageSize) {
+    val infoCalls = new java.util.concurrent.atomic.AtomicInteger()
+    override def layerInfo(): LayerInfo = { infoCalls.incrementAndGet(); super.layerInfo() }
+  }
+
+  test("layer metadata: IncomingFlow.run fetches it once for the schema, once for the scan") {
+    val client = new CountingClient(mkClient(25, pageSize = 10))
+    ArcGisClientRegistry.register("meta-incoming", client)
+    graft.ops.TakClientRegistry.register("meta-incoming-tak", new graft.ops.MockTakClient)
+    assert(graft.ops.IncomingFlow.run(spark, "meta-incoming", "meta-incoming-tak", "L") == 25)
+    assert(client.infoCalls.get == 2)
+  }
+
+  test("layer metadata: an upsert write fetches it once per job, an append write never") {
+    import org.apache.spark.sql.Row
+    val client = new CountingClient(mkClient(10, pageSize = 10))
+    ArcGisClientRegistry.register("meta-write", client)
+    val schema = spark.read.format("arcgis").option("client", "meta-write").load().schema
+    val rows = (0 until 8).map(i => Row(null, s"feat-$i", "idle", 1.0, "2024-02-01", 1.0, 2.0))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    assert(df.rdd.mapPartitions(it => Iterator(it.size)).collect().forall(_ > 0))
+
+    client.infoCalls.set(0)
+    df.write.format("arcgis").option("client", "meta-write")
+      .option("upsertKey", "name").mode("append").save()
+    assert(client.infoCalls.get == 1)
+    assert(ArcGisWriteStats.last("meta-write").contains((0L, 0L, 8L, 0L)))
+
+    client.infoCalls.set(0)
+    df.write.format("arcgis").option("client", "meta-write").mode("append").save()
+    assert(client.infoCalls.get == 0)
+    assert(ArcGisWriteStats.last("meta-write").contains((8L, 0L, 0L, 0L)))
   }
 
   test("DSv2 write path: df.write.format(\"arcgis\") appends, upserts, isolates errors") {
