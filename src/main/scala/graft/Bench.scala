@@ -7,75 +7,28 @@ import org.apache.spark.sql.SparkSession
   * per-query map goes to BENCH_DETAIL.json next to the build).
   */
 object Bench {
+  // sorted-name order (stable across rounds, so per-query diffs compare
+  // like with like) and TWO timed runs per query keeping the min — a
+  // single sample on a shared host conflates scheduler noise with
+  // regressions; the min of two is a far tighter lower-bound estimator
+  private val Reps = 2
+  // contended-tail re-reps: when the initial samples of a query spread
+  // more than 2x (scheduler noise on a shared host), take up to 2 extra
+  // reps and judge contention on the best TWO samples — the min (what the
+  // total uses) only improves, and a query stays flagged only if even its
+  // two best samples disagree 2x. Bounds the extra work to the flagged
+  // tail: a quiet host pays zero extra reps.
+  private val ExtraReps = 2
+  // extra samples per still-unstable cell in the isolated end-of-run pass
+  private val IsoReps = 3
+  // the settle pass re-reps cells whose min is at least SettleMin seconds,
+  // up to SettleReps more samples each
+  private val SettleMin = 1.25
+  private val SettleReps = 2
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def mkSession(): SparkSession = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        // r20: serialized sort shuffle writer for wide fan-out exchanges
-        // (guide §2.1/§2.2). With reduce counts at or below the 200 default
-        // threshold, Spark picks BypassMergeSortShuffleWriter, which opens
-        // one stream+32KB buffer PER REDUCE PARTITION per map task — at
-        // local[32]/32 partitions that is 32 file streams per task, a pure
-        // small-R artifact that profiled at ~106 ms/task of shuffle-write
-        // time on 36k-row writes and taxed every 32-task shuffle-map stage
-        // in the suite. Production reduce counts at 100 TB are far above
-        // 200, so any value ≤200 is scale-neutral — the sort writer is what
-        // runs there regardless. 8, not lower: genuinely tiny-R exchanges
-        // (final 1-3 partition sorts, coalesced stages) measurably prefer
-        // bypass (its design regime; =1 cost x17 +1.1s and the calibration
-        // probe +2.1s vs =8 in a same-window A/B). Static (not derived from
-        // $SPARK_GRAFT_CPUS) and overridable via SPARK_GRAFT_CONF below.
-        .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      // r19 ops hook: extra session confs as ';'-separated k=v pairs — the
-      // same engine knobs a cluster deployment sets via spark-submit
-      // (e.g. join-strategy policy, guide §3.1/§9). Absent → byte-identical
-      // defaults; the driver never sets it, so the contract is unchanged.
-      // Each applied override is logged (ADVICE r19): a certified run must
-      // record the exact session config it ran under, and overriding an
-      // oracle-pinned key (timezone, nanosAsLong, partitions) is loud.
-      sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-        .foreach { kv =>
-          val i = kv.indexOf('=')
-          require(i > 0, s"SPARK_GRAFT_CONF entry needs k=v: $kv")
-          val k = kv.substring(0, i)
-          val pinned = Set("spark.sql.shuffle.partitions",
-            "spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
-          System.err.println(
-            s"[bench] SPARK_GRAFT_CONF override: $kv" +
-              (if (pinned(k)) "  ** WARNING: overrides an oracle-pinned config **" else ""))
-          b.config(k, kv.substring(i + 1))
-        })
-      val s = b
-        // localCheckpoint blocks (SetSimJoin, t25, CC, ...) are freed only
-        // when the DRIVER GCs and the ContextCleaner notices; between the
-        // periodic session restarts below, dead checkpoint/broadcast blocks
-        // otherwise pile up in the block manager. 5 minutes: frequent
-        // enough to drain within a restart window, rare enough that the
-        // full-GC pauses don't tax the measurement (a 1-minute interval
-        // measurably slowed the suite).
-        .config("spark.cleaner.periodicGC.interval", "5min")
-        // the status stores retain per-execution plan graphs + metrics even
-        // with the UI off (defaults: 1000 executions / 1000 jobs / 1000
-        // stages); a 258-query suite at 2-4 reps each would pin ~1000 LARGE
-        // plan graphs on the driver heap. Keep only a handful: the bench
-        // reads nothing back from the stores.
-        .config("spark.sql.ui.retainedExecutions", "8")
-        .config("spark.ui.retainedJobs", "50")
-        .config("spark.ui.retainedStages", "50")
-        .config("spark.ui.retainedTasks", "500")
-        .config("spark.ui.retainedDeadExecutors", "5")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = mkSession()
+    var spark = GraftSession.create()
     // warm the session once (JVM JIT, codegen compiler, parquet footers,
     // shuffle machinery, OS page cache for every base table) so the first
     // measured query of each family isn't charged for first-touch I/O;
@@ -85,26 +38,25 @@ object Bench {
     // below): a missing/corrupt table must be VISIBLE in the bench log —
     // every query over it is about to fail — not silently absorbed; fatal
     // errors (OOM, interrupts) propagate.
-    try {
+    def warm(what: String)(body: => Unit): Unit =
+      try body
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $what warm-up failed: $e")
+      }
+    warm("lineitem") {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count().count()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] lineitem warm-up failed: $e")
     }
     Seq("orders", "customer", "supplier", "part", "nation", "region",
       "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $t warm-up failed: $e")
-      }
+      warm(t)(spark.read.parquet(s"$sfDir/$t.parquet").count())
     }
     // JIT/codegen warm for the shared physical shapes (shuffle hash join,
     // window, decimal aggregate) so the first measured query of the run
     // isn't charged for compiling machinery every later query reuses —
     // row-limited, so warm-up stays O(1) in the scale factor
-    try {
+    warm("join/window/decimal shape") {
       import org.apache.spark.sql.functions._
       val l = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(5000)
       val o = spark.read.parquet(s"$sfDir/orders.parquet").limit(5000)
@@ -116,16 +68,14 @@ object Bench {
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("s"),
           count(lit(1)).as("n"))
         .count()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] join/window/decimal shape warm-up failed: $e")
     }
     // GlobalOrder's per-query first-rep spike (~1.2s of per-schema
     // Encoders.row serializer+deserializer codegen, round-10 diagnosis) is
     // FIXED at the source: the scan now runs at the InternalRow level
     // (queryExecution.toRdd in, internalCreateDataFrame out — see
     // ops/GlobalOrder.scala), so no per-schema encoder pair compiles and no
-    // per-row external boxing remains. A/B same-harness (GoBench, sf0.1):
+    // per-row external boxing remains. A/B same-harness (GoBench, since
+    // deleted; source at commit a7c9aea, sf0.1):
     // p17 rep1 1.77→1.03s, steady 0.71→0.53s; x20 rep1 4.39→3.33s.
     // localCheckpoint machinery (block manager write paths, checkpoint RDD
     // materialization) is first-touched by whichever CC/graph query runs
@@ -136,7 +86,7 @@ object Bench {
     // self-join through two count rollups — t12/t25) pays a multi-second
     // first-execution cost (plan + codegen machinery for the nested lambda
     // pipeline); row-limited warm-up absorbs it, O(1) in the scale factor
-    try {
+    warm("bigram shape") {
       import org.apache.spark.sql.functions._
       val doc = spark.read.parquet(s"$sfDir/documents.parquet").limit(500)
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
@@ -150,20 +100,11 @@ object Bench {
       bg0.join(c20, Seq("w1", "w2"))
         .join(c20.groupBy(col("w1")).agg(sum(col("n2")).as("n1")), Seq("w1"))
         .count()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] bigram shape warm-up failed: $e")
     }
-    try {
-      spark.range(1000).toDF("x").localCheckpoint(true).count()
-    } catch {
-      // NonFatal only, and loudly: a genuinely broken checkpoint path must
-      // not be silently absorbed here (the rep-1 spike would quietly return
-      // to whichever CC query checkpoints first, and worse, every CC query
-      // would be broken); OOM/interrupts propagate.
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] localCheckpoint warm-up failed: $e")
-    }
+    // loudly: a genuinely broken checkpoint path must not be silently
+    // absorbed here (the rep-1 spike would quietly return to whichever CC
+    // query checkpoints first, and worse, every CC query would be broken)
+    warm("localCheckpoint")(spark.range(1000).toDF("x").localCheckpoint(true).count())
     // Host calibration anchor: a fixed, deterministic CPU loop timed single-
     // threaded and across all cores, reported beside the suite total. Rounds
     // run on different VM instances whose CPU generations differ — r15→r16
@@ -249,18 +190,6 @@ object Bench {
     val (calibAgg, calibJw, calibKer, calibSpark) = sparkCalib()
     // iteration aid: SPARK_GRAFT_ONLY=q1,q3 times just those queries
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // sorted-name order (stable across rounds, so per-query diffs compare
-    // like with like) and TWO timed runs per query keeping the min — a
-    // single sample on a shared host conflates scheduler noise with
-    // regressions; the min of two is a far tighter lower-bound estimator
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    // contended-tail re-reps: when the initial samples of a query spread
-    // more than 2x (scheduler noise on a shared host), take up to 2 extra
-    // reps and judge contention on the best TWO samples — the min (what the
-    // total uses) only improves, and a query stays flagged only if even its
-    // two best samples disagree 2x. Bounds the extra work to the flagged
-    // tail: a quiet host pays zero extra reps.
-    val extraReps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "2").toInt.max(0)
     val queryFns = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .sortBy(_._1)
@@ -306,71 +235,64 @@ object Bench {
     // r15 artifact grew monotonically with EXECUTION ORDER (family b 1.12x
     // ... x 1.34x; isolated re-runs of late cells returned to baseline), so
     // a long suite accumulates Spark-internal state that taxes later
-    // queries — beyond what the status-store caps above reclaim. Stopping
+    // queries — beyond what GraftSession's status-store caps reclaim. Stopping
     // and recreating the session resets that accumulation while the JVM's
     // JIT code and the (JVM-static) codegen cache stay warm; a minimal
     // re-warm re-touches the scan + checkpoint machinery. Net cost ~1s per
     // restart, repaid several times over by the tail of the suite.
     val restartEvery = sys.env.getOrElse("SPARK_GRAFT_RESTART_EVERY", "48").toInt
     var sinceRestart = 0
-    def miniWarm(): Unit = {
-      try {
-        spark.read.parquet(s"$sfDir/lineitem.parquet")
-          .groupBy("l_returnflag").count().count()
-        spark.range(1000).toDF("x").localCheckpoint(true).count()
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] post-restart warm-up failed: $e")
-      }
+    def miniWarm(): Unit = warm("post-restart") {
+      spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .groupBy("l_returnflag").count().count()
+      spark.range(1000).toDF("x").localCheckpoint(true).count()
     }
     def maybeRestart(): Unit =
       if (restartEvery > 0 && sinceRestart >= restartEvery) {
         spark.sparkContext.setLogLevel("ERROR")
         spark.stop()
-        spark = mkSession()
+        spark = GraftSession.create()
         miniWarm()
         sinceRestart = 0
       }
-    val trace = sys.env.contains("SPARK_GRAFT_TRACE")
-    def traceSamples(name: String, samples: Seq[Double]): Unit =
-      if (trace) System.err.println(
-        s"[bench-trace] ${java.time.Instant.now()} $name samples=" +
-          samples.map(v => f"$v%.3f").mkString(","))
-    // Periodic inter-query GC — OFF by default since r19. The r18 default
-    // (every 12 queries, added for d27_keep_lsh's 1.77→8.59s driver-artifact
-    // spread) turned out to BE the r18 round's unattributed ~20% suite
-    // slowdown: the r19 same-window A/B (same code, same 258-query set,
-    // adjacent runs, SCALING.md "Round-19 reconciliation") measured 145.7s
-    // with the GC on vs 121.3s off — a forced full STW collection between
-    // queries clears the JVM's weak/soft-reference caches (Scala reflection
-    // / encoder / codegen-adjacent state Spark rebuilds lazily), so every
-    // query AFTER a GC re-pays that warm-up inside its timed window, a tax
-    // the pause-is-outside-the-window reasoning missed. d27's failure mode
-    // stays covered without it: the iso and settle re-rep passes each begin
-    // with one System.gc(), and the every-48-queries session restart drops
-    // accumulated localCheckpoint blocks wholesale — with the inter-query
-    // GC off, d27 reads min 1.40 / best-2 spread 1.13 in the same A/B run.
-    // The knob stays for diagnosis (SPARK_GRAFT_GC_EVERY=12 reproduces r18).
-    val gcEvery = sys.env.getOrElse("SPARK_GRAFT_GC_EVERY", "0").toInt
-    var sinceGc = 0
-    def maybeGc(): Unit =
-      if (gcEvery > 0 && sinceGc >= gcEvery) { System.gc(); sinceGc = 0 }
+    // No forced GC between queries: it clears the JVM's soft-reference
+    // caches that Spark rebuilds lazily inside the next timed window (r19
+    // A/B, SCALING.md "Round-19 reconciliation": 145.7s with a GC every 12
+    // queries vs 121.3s without). The re-rep passes below start with one.
     val firstPass = queryFns.map { case (name, fn) =>
-      if (trace)
-        System.err.println(s"[bench-trace] ${java.time.Instant.now()} $name")
       maybeRestart()
-      maybeGc()
       sinceRestart += 1
-      sinceGc += 1
       // stop sampling a query at its first failure — reps of a broken
       // query are noise, and the failure is already on stderr
       val samples = scala.collection.mutable.ArrayBuffer(once(name, fn))
-      while (samples.last >= 0 && samples.size < reps) samples += once(name, fn)
+      while (samples.last >= 0 && samples.size < Reps) samples += once(name, fn)
       while (samples.last >= 0 && unstable(samples.toSeq) &&
-        samples.size < reps + extraReps)
+        samples.size < Reps + ExtraReps)
         samples += once(name, fn)
-      traceSamples(name, samples.toSeq)
       name -> samples.toSeq
+    }
+    val fnByName = queryFns.toMap
+    // An end-of-run re-rep pass: after a GC + settle, each cell `pick`
+    // selects takes up to `extra` more samples while `again(samples, taken)`
+    // holds, stopping at a failed sample.
+    def reRep(label: String, cells: Seq[(String, Seq[Double])], pick: Seq[Double] => Boolean,
+        extra: Int)(again: (Seq[Double], Int) => Boolean): Seq[(String, Seq[Double])] = {
+      val names = cells.collect { case (n, ss) if pick(ss) => n }
+      if (names.isEmpty) cells
+      else {
+        System.err.println(s"[bench] $label re-rep: ${names.sorted.mkString(",")}")
+        System.gc(); Thread.sleep(1000)
+        cells.map { case (name, ss) =>
+          if (!names.contains(name)) (name, ss)
+          else {
+            val samples = scala.collection.mutable.ArrayBuffer(ss: _*)
+            while (samples.last >= 0 && samples.size < ss.size + extra &&
+              again(samples.toSeq, samples.size - ss.size))
+              samples += once(name, fnByName(name))
+            (name, samples.toSeq)
+          }
+        }
+      }
     }
     // Isolated end-of-run re-rep for cells STILL contended after the inline
     // ladder: those extra reps ran inside the same noisy window that spread
@@ -380,27 +302,7 @@ object Bench {
     // the flagged tail once the whole sweep is done — minutes later, after a
     // GC + settle — so the verdict reflects the query, not the moment. Work
     // stays bounded: the quiet-host case re-reps nothing.
-    val isoReps = sys.env.getOrElse("SPARK_GRAFT_ISO_REPS", "3").toInt.max(0)
-    val fnByName = queryFns.toMap
-    val contendedNames = firstPass.collect { case (n, ss) if unstable(ss) => n }.toSet
-    val results0 =
-      if (contendedNames.isEmpty || isoReps == 0) firstPass
-      else {
-        System.err.println(
-          s"[bench] isolated re-rep: ${contendedNames.toSeq.sorted.mkString(",")}")
-        System.gc(); Thread.sleep(1000)
-        firstPass.map { case (name, ss) =>
-          if (!contendedNames(name)) (name, ss)
-          else {
-            val samples = scala.collection.mutable.ArrayBuffer(ss: _*)
-            while (samples.last >= 0 && unstable(samples.toSeq) &&
-              samples.size < ss.size + isoReps)
-              samples += once(name, fnByName(name))
-            traceSamples(name, samples.toSeq)
-            (name, samples.toSeq)
-          }
-        }
-      }
+    val results0 = reRep("isolated", firstPass, unstable, IsoReps)((ss, _) => unstable(ss))
     // Settle re-rep: transient JVM state can leave a cell's samples
     // CONSISTENTLY slow, so no spread-based ladder ever fires. Diagnosed
     // r17 on the r16 driver artifact: the C2 compile queue, backlogged by
@@ -410,39 +312,15 @@ object Bench {
     // code, and the driver artifact carried 5.2s for exactly that reason
     // (both reps slow → spread 1.69 → never flagged). By the END of the
     // suite the queue has drained, so every expensive cell gets up to
-    // `settleReps` more samples here; the min (what the total uses) only
+    // `SettleReps` more samples here; the min (what the total uses) only
     // improves, the second settle rep is taken only while the cell is
     // still descending (>10% improvement), and a cell that stays slow now
-    // is genuinely slow. Bounded: only cells with min >= settleMin re-rep
-    // (~17 cells at the 1.25s default, well under a minute of extra wall).
-    val settleMin = sys.env.getOrElse("SPARK_GRAFT_SETTLE_MIN", "1.25").toDouble
-    val settleReps = sys.env.getOrElse("SPARK_GRAFT_SETTLE_REPS", "2").toInt.max(0)
-    val settleNames = results0.collect {
-      case (n, ss) if ss.forall(_ >= 0) && ss.min >= settleMin => n
-    }.toSet
-    val results1 =
-      if (settleNames.isEmpty || settleReps == 0) results0
-      else {
-        System.err.println(
-          s"[bench] settle re-rep: ${settleNames.toSeq.sorted.mkString(",")}")
-        System.gc(); Thread.sleep(1000)
-        results0.map { case (name, ss) =>
-          if (!settleNames(name)) (name, ss)
-          else {
-            val samples = scala.collection.mutable.ArrayBuffer(ss: _*)
-            var taken = 0
-            var descending = true
-            while (descending && taken < settleReps && samples.last >= 0) {
-              val before = samples.min
-              samples += once(name, fnByName(name))
-              taken += 1
-              descending = samples.last >= 0 && samples.last < before * 0.9
-            }
-            traceSamples(name, samples.toSeq)
-            (name, samples.toSeq)
-          }
-        }
-      }
+    // is genuinely slow. Bounded: only cells with min >= SettleMin re-rep
+    // (~17 cells at 1.25s, well under a minute of extra wall).
+    val results1 = reRep("settle", results0,
+      ss => ss.forall(_ >= 0) && ss.min >= SettleMin, SettleReps) { (ss, taken) =>
+      taken == 0 || ss.last < ss.init.min * 0.9
+    }
     val results = results1
       .map { case (name, samples) =>
         // a failure inside the REQUIRED first-pass reps fails the cell; a
@@ -450,7 +328,7 @@ object Bench {
         // (ADVICE r17: those passes exist only to refine cells whose
         // required reps already proved the query runs — one flaky extra
         // sample must not erase valid timings from the suite total)
-        val requiredFailed = samples.take(reps).exists(_ < 0)
+        val requiredFailed = samples.take(Reps).exists(_ < 0)
         val valid = samples.filter(_ >= 0)
         if (requiredFailed || valid.isEmpty) (name, -1.0, -1.0, 1.0, samples.size)
         else {
@@ -480,7 +358,7 @@ object Bench {
         if (mn < 0) s"\"" + k + "\":{\"failed\":true}"
         else {
           val c = if (mn >= 0.05 && b2 > 2.0) ",\"contended\":true" else ""
-          val r = if (n > reps) s""","reps":$n""" else ""
+          val r = if (n > Reps) s""","reps":$n""" else ""
           s"\"" + k + "\":{\"min\":" + r3(mn) + ",\"max\":" + r3(mx) + c + r + "}"
         }
       }.mkString("{", ",", "}")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for the driver's synthetic testdata: reads the
@@ -43,13 +43,8 @@ object GenScale {
     val srcDir = args(0)
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 cores, not SPARK_GRAFT_CPUS: the generated corpus must not depend on the host
+    val spark = GraftSession.create(32)
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ByteType, FloatType, IntegerType, ShortType}
 import java.nio.file.{Files, Paths}
@@ -28,40 +28,7 @@ object Verify {
     // only; the driver always calls with (sfDir, outDir)
     val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
     def selected(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // r20, mirrored from Bench: pin the serialized sort shuffle writer so
-      // the oracle certifies the same shuffle machinery the bench measures
-      // (and that production reduce-partition counts >200 run anyway)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-    // r19 ops hook, mirrored from Bench: extra session confs as
-    // ';'-separated k=v pairs, so any engine knob the bench is measured
-    // under can be oracle-certified under the same session config. Absent
-    // (the driver's call) → byte-identical defaults. Overrides are logged
-    // (ADVICE r19), loudly when they collide with an oracle-pinned key.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entry needs k=v: $kv")
-        val k = kv.substring(0, i)
-        val pinned = Set("spark.sql.shuffle.partitions",
-          "spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
-        System.err.println(
-          s"[verify] SPARK_GRAFT_CONF override: $kv" +
-            (if (pinned(k)) "  ** WARNING: overrides an oracle-pinned config **" else ""))
-        builder.config(k, kv.substring(i + 1))
-      })
-    val spark = builder
-      // the engine's planner surface (TopKToNative etc.) is part of what the
-      // oracle gate certifies — run with the same extensions production uses
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name))

@@ -122,7 +122,8 @@ object SetSimJoin {
     // m < ⌈t·n⌉ now yields an EMPTY prefix — exactly the docs whose own
     // direction can never qualify since inter ≤ m; they remain reachable as
     // the full side of a qualifying partner's prefix join. Measured at
-    // sf0.1/t=0.5 (R20ProbeSetSim): prefix postings 99,016 → 1,078,
+    // sf0.1/t=0.5 (R20ProbeSetSim, deleted; source at commit a7c9aea):
+    // prefix postings 99,016 → 1,078,
     // distinct candidate pairs 56,261 → 802, verified rows 4,136 → 580,
     // identical qualifying pairs.) __m (pruned list size)
     // rides along for the positional bound — same window partitioning, so

@@ -1853,8 +1853,9 @@ object DedupPack extends QueryPack {
         // second full-width exchange of the pair stream (50M rows at 20x,
         // where multi-probe emits each true pair up to 4x(k+1) times) ON
         // TOP of the groupBy's own shuffle. One aggregate does both dedup
-        // and fold with map-side partial aggregation (D29Decomp attributes
-        // the 20x marginal to exactly this stage; the pair VOLUME itself is
+        // and fold with map-side partial aggregation (the D29Decomp probe,
+        // since deleted — source at commit a7c9aea — attributes the 20x
+        // marginal to exactly this stage; the pair VOLUME itself is
         // true duplicate mass — sharded corpora collide exact-dup codes at
         // any k — so the fix pays once per pair, never pretends fewer
         // exist). d28/d14 keep the literal DISTINCT as registered baselines.
@@ -1934,7 +1935,8 @@ object DedupPack extends QueryPack {
       (s, d) => {
         // d29 hardened against SKEWED cells — the failure mode the 100×
         // (sf10) decade measured on d29 itself: candidate pairs grew 3.05×
-        // for 2× vectors (D29Decomp: 252M → 767M, cell_max 1223 → 2320 at
+        // for 2× vectors (D29Decomp, deleted; source at commit a7c9aea:
+        // 252M → 767M, cell_max 1223 → 2320 at
         // stable ~10 avg density) because one extra adaptive plane halves a
         // UNIFORM background but shrinks a skew-concentrated one only
         // ~1.33×. The fix is the standard bounded-verification-set trick:

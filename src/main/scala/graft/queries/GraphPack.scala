@@ -322,7 +322,11 @@ object GraphPack extends QueryPack {
         // labels start as identity (lbl(v) = v) and adj rows are DISTINCT
         // (u, v) pairs (the w>=2 pair aggregate), so every round-1 (u, lbl)
         // count is exactly 1 and the mode-label argmax (min over
-        // (-cnt, lbl)) degenerates to min(v). One map-reducible aggregate
+        // (-cnt, lbl)) degenerates to min(v). It also needs every neighbor
+        // v to have a lab0 row — the generic round's inner join drops an
+        // unlabeled neighbor, min(v) counts it — which the FK premise
+        // l_suppkey ⊆ s_suppkey gives (LabelPropRound1Spec shows the
+        // divergence, QueriesSpec checks the premise). One map-reducible aggregate
         // (partial min collapses to ≤|V| rows per task) replaces a
         // no-reduction (u, lbl) exchange — 687 k rows at sf0.1, corpus-
         // pair-sized at scale — plus the two-level argmax. Round 2 runs

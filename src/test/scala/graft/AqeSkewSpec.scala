@@ -26,9 +26,7 @@ class AqeSkewSpec extends AnyFunSuite {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1"
     )
-    val saved = knobs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    knobs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    SparkTestSession.withConf(knobs: _*) {
       import spark.implicits._
       // 95% of the probe side lands on one key → one shuffle partition
       // dwarfs the rest
@@ -41,11 +39,6 @@ class AqeSkewSpec extends AnyFunSuite {
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), s"AQE skew split did not fire:\n$plan")
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 }

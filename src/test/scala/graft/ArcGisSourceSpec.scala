@@ -114,9 +114,7 @@ class ArcGisSourceSpec extends AnyFunSuite {
       "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10.0"
     )
     val spark2 = spark
-    val saved = knobs.map { case (k, _) => k -> spark2.conf.getOption(k) }
-    knobs.foreach { case (k, v) => spark2.conf.set(k, v) }
-    try {
+    SparkTestSession.withConf(knobs: _*) {
       import spark2.implicits._
       val client = mkClient(37, pageSize = 10)
       ArcGisClientRegistry.register("rtf37", client)
@@ -132,11 +130,6 @@ class ArcGisSourceSpec extends AnyFunSuite {
       // remote where, so the server filtered every page
       assert(client.whereLog.toArray.exists(_.toString.contains("objectid IN (3)")),
         client.whereLog.toArray.mkString(" | "))
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark2.conf.set(k, v)
-        case (k, None)    => spark2.conf.unset(k)
-      }
     }
   }
 

@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * smallest label. The query path ships the min(v) form for round 1 (one
   * map-reducible aggregate instead of a no-reduction (u, lbl) exchange); the
   * oracle keeps the generic two-round SQL, and this spec pins the algebra on
-  * synthetic graphs with isolated nodes and unlabeled-neighbor cases.
+  * synthetic graphs with isolated nodes. The specialization also needs every
+  * neighbor v to carry a label: the generic round's inner join drops an
+  * unlabeled neighbor, min(v) counts it. g9 gets that from the FK premise
+  * l_suppkey ⊆ s_suppkey, which QueriesSpec checks on the test corpus.
   */
 class LabelPropRound1Spec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -58,6 +61,16 @@ class LabelPropRound1Spec extends AnyFunSuite {
         .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(got.sameElements(want), s"trial $trial: ${got.zip(want).filter(p => p._1 != p._2).take(3).mkString(",")}")
     }
+  }
+
+  test("FK premise: a neighbor absent from lab0 makes the two rounds differ") {
+    // node 1's neighbors are 0 (no label row) and 2: the generic round only
+    // sees neighbor 2's label, min(v) picks the unlabeled 0
+    val adj = Seq((1L, 0L), (1L, 2L), (2L, 1L)).toDF("u", "v")
+    val lab0 = Seq(1L, 2L).toDF("node").withColumn("lbl", col("node"))
+    def labelOf1(df: DataFrame): Long = df.filter(col("node") === 1L).head().getLong(1)
+    assert(labelOf1(genericRound(lab0, adj)) == 2L)
+    assert(labelOf1(specializedRound1(lab0, adj)) == 0L)
   }
 
   test("specialization premise fails under NON-identity labels (guard)") {

@@ -6,14 +6,8 @@ package graft
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 32 cores, not SPARK_GRAFT_CPUS: PLANS.md must not depend on the host
+    val spark = GraftSession.create(32)
     val d = "/root/testdata/sf0.001"
 
     val picks: Seq[(String, String)] = Seq(

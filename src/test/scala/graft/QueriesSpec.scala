@@ -3,20 +3,22 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The session every spec shares: the engine's own configuration at 4
+  * cores, without SPARK_GRAFT_CONF so specs never depend on the caller's
+  * environment. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // same extensions as Verify/Bench: specs exercise the planner surface
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  lazy val spark: SparkSession = GraftSession.create(4, conf = "")
+
+  /** Runs `body` with `confs` set on the shared session, then restores the
+    * prior values (or unsets keys that had none). */
+  def withConf[A](confs: (String, String)*)(body: => A): A = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }
 
@@ -35,6 +37,16 @@ class QueriesSpec extends AnyFunSuite {
 
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("g9 FK premise: every l_suppkey is a supplier") {
+    // g9's round-1 min(v) equals the generic mode-label round only when
+    // every neighbor has a label row (LabelPropRound1Spec)
+    import org.apache.spark.sql.functions.col
+    val li = Tables.lineitem(spark, sf).select(col("l_suppkey").cast("long").as("k"))
+    val sup = Tables.supplier(spark, sf).select(col("s_suppkey").cast("long").as("k"))
+    assert(li.count() > 0)
+    assert(li.join(sup, Seq("k"), "left_anti").count() == 0)
   }
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {

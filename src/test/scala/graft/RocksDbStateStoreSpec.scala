@@ -25,16 +25,8 @@ class RocksDbStateStoreSpec extends AnyFunSuite {
     * restoring the previous value after (the provider class is read from
     * the session conf at query start, so the override scopes cleanly).
     */
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, RocksDb)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDb[T](body: => T): T =
+    SparkTestSession.withConf("spark.sql.streaming.stateStore.providerClass" -> RocksDb)(body)
 
   private def docs: Array[(Long, String)] = {
     import spark.implicits._

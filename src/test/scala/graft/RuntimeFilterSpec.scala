@@ -23,9 +23,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1"
     )
-    val saved = knobs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    knobs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    SparkTestSession.withConf(knobs: _*) {
       import spark.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
       (1 to 200000).map(i => (i.toLong % 10000, i.toLong)).toDF("k", "v")
@@ -43,11 +41,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
         s"no runtime bloom filter in plan:\n$plan")
       // and it must not change results: keys 1..99 x 20 fact rows each
       assert(rows.length == 99 && rows.forall(_.getLong(1) == 20L))
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 }

@@ -17,17 +17,8 @@ class TopKPerGroupSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private val ExcludeKey = "spark.sql.optimizer.excludedRules"
-
-  private def withRuleDisabled[A](f: => A): A = {
-    val prior = spark.conf.getOption(ExcludeKey)
-    spark.conf.set(ExcludeKey, "graft.plans.TopKToNative")
-    try f
-    finally prior match {
-      case Some(v) => spark.conf.set(ExcludeKey, v)
-      case None => spark.conf.unset(ExcludeKey)
-    }
-  }
+  private def withRuleDisabled[A](f: => A): A =
+    SparkTestSession.withConf("spark.sql.optimizer.excludedRules" -> "graft.plans.TopKToNative")(f)
 
   private def sample = (0 until 1000)
     .map(i => (s"g${i % 7}", (i * 131) % 997, i.toLong))

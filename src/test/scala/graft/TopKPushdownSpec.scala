@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.GraftExtensions
 import graft.sources.arcgis._
 
 /** The custom optimizer rule (SURVEY §4 stretch): window top-k over an
@@ -12,27 +10,7 @@ import graft.sources.arcgis._
   */
 class TopKPushdownSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    // getOrCreate would reuse the shared (extension-less) test session, so
-    // clear the registered sessions, build one with the graft extensions
-    // over the same SparkContext, then restore the shared default.
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-extensions-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    prior.foreach { p =>
-      SparkSession.setDefaultSession(p)
-      SparkSession.setActiveSession(p)
-    }
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   private def register(key: String): MockArcGisClient = {
     val fields = Seq(

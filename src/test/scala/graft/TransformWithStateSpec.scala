@@ -32,11 +32,8 @@ class TransformWithStateSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("transformWithState keeps per-key state across micro-batches (RocksDB store)") {
-    val knob = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(knob)
-    spark.conf.set(knob,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    SparkTestSession.withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       import spark.implicits._
       implicit val sql = spark.sqlContext
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -60,11 +57,6 @@ class TransformWithStateSpec extends AnyFunSuite {
       // update-mode emissions per batch: batch1 (1->5, 2->1), batch2 (1->5, 2->7)
       assert(rows.toSet == Set((1L, 5.0), (2L, 1.0), (2L, 7.0)))
       assert(rows.count(_ == ((1L, 5.0))) == 2, s"state lost across batches: ${rows.toSeq}")
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(knob, v)
-        case None    => spark.conf.unset(knob)
-      }
     }
   }
 }
