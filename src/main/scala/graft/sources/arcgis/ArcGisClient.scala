@@ -1,5 +1,7 @@
 package graft.sources.arcgis
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 import scala.collection.concurrent.TrieMap
 
 /** One ArcGIS layer field, as returned by the layer metadata endpoint
@@ -77,6 +79,23 @@ trait ArcGisClient extends Serializable {
       envelope: Option[Envelope] = None,
       outSR: Option[String] = None
   ): Seq[EsriFeature]
+
+  /** One offset window of `/query` as rows of `schema`, whose layer fields
+    * are the page's `outFields` ([[ArcGisSchema.outFields]]) — what the
+    * offset-mode scan reads. The default materializes [[queryPage]]'s
+    * features, so decorators and test doubles need not override it; a
+    * transport overrides it to decode its reply straight into rows.
+    */
+  def scanPage(
+      offset: Long,
+      count: Int,
+      where: String,
+      schema: StructType,
+      envelope: Option[Envelope] = None,
+      outSR: Option[String] = None
+  ): Iterator[InternalRow] =
+    queryPage(offset, count, where, ArcGisSchema.outFields(schema), envelope, outSR)
+      .iterator.map(ArcGisValues.toRow(schema, _))
 
   /** `queryTopFeatures` endpoint (strategy S2, `task.ts:16-19,400`). */
   def queryTopFeatures(
@@ -361,9 +380,9 @@ class MockArcGisClient(
         x >= e.xmin && x <= e.xmax && y >= e.ymin && y <= e.ymax
       }
     }
-    // count < 0 = no resultRecordCount sent: the server caps the response at
-    // its maxRecordCount (which this mock plays via pageSize)
-    val cap = if (count < 0) pageSize else count
+    // the server caps every response at its maxRecordCount (which this mock
+    // plays via pageSize), whether or not resultRecordCount was sent
+    val cap = if (count < 0) pageSize else math.min(count, pageSize)
     rows.filter(f => matches(f, where) && inEnv(f)).slice(offset.toInt, offset.toInt + cap)
       .map(project(_, outFields))
   }

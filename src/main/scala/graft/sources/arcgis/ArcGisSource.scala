@@ -1,6 +1,9 @@
 package graft.sources.arcgis
 
 import java.util
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -25,9 +28,10 @@ import scala.jdk.CollectionConverters._
   *
   * Improvements over the reference's esri-dump pagination
   * (`/root/reference/task.ts:398-418`), per SURVEY.md §4:
-  *   - **parallel pagination**: one InputPartition per offset window, so a
-  *     1000-executor cluster fans the HTTP pages out instead of the
-  *     reference's sequential single-threaded loop;
+  *   - **parallel pagination**: the offset windows are spread over one
+  *     InputPartition per task slot, each reading its run of pages with the
+  *     next one already in flight, so a 1000-executor cluster fans the HTTP
+  *     pages out instead of the reference's sequential single-threaded loop;
   *   - **typed predicate pushdown** (`SupportsPushDownFilters`): Catalyst
   *     filters compile to an ArcGIS SQL-92 `where`; what can't compile stays
   *     a residual Spark Filter (the reference only forwards raw user
@@ -427,7 +431,9 @@ class ArcGisScanBuilder(schema: StructType, options: CaseInsensitiveStringMap)
   }
 }
 
-/** One offset window of the remote `/query` endpoint. The effective `where`
+/** A contiguous run of offset windows `(offset, count)` of the remote
+  * `/query` endpoint, read in order by one [[ArcGisPageReader]]; a window
+  * with `count < 0` is one unpaginated request. The effective `where`
   * rides IN the partition (not the reader factory): runtime filters arrive
   * via [[SupportsRuntimeFiltering.filter]] AFTER the factory may already be
   * instantiated for planning (supportsColumnar probes it), but Spark always
@@ -435,11 +441,39 @@ class ArcGisScanBuilder(schema: StructType, options: CaseInsensitiveStringMap)
   * only carrier that reliably reflects runtime pruning.
   */
 case class ArcGisInputPartition(
-    offset: Long,
-    count: Int,
+    windows: Seq[(Long, Int)],
     where: String,
     envelope: Option[Envelope] = None
 ) extends InputPartition
+
+/** The single `queryTopFeatures` call (strategy S2). */
+case class ArcGisTopFeaturesPartition(where: String) extends InputPartition
+
+/** How offset windows become partitions. */
+private[arcgis] object OffsetPages {
+  /** `pages` windows as `min(pages, slots)` contiguous runs whose sizes
+    * differ by at most one (earlier runs take the remainder) — the rule
+    * Spark's file sources use to pack splits into task slots.
+    */
+  def pack(pages: Int, slots: Int): Seq[Range] = {
+    val parts = math.max(1, math.min(pages, slots))
+    val base = pages / parts
+    val extra = pages % parts
+    (0 until parts).map { p =>
+      val from = p * base + math.min(p, extra)
+      from until from + base + (if (p < extra) 1 else 0)
+    }
+  }
+
+  /** Task slots a leaf scan should fill: `spark.sql.leafNodeDefaultParallelism`,
+    * which defaults to the context's default parallelism.
+    */
+  def slots(): Int = {
+    val spark = SparkSession.active
+    spark.conf.getOption("spark.sql.leafNodeDefaultParallelism").map(_.toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+  }
+}
 
 /** An OBJECTID interval `[lo, hi)` under `where`, drained by
   * [[OidRanges.drain]]; `page` is the saturation threshold (the server's
@@ -708,10 +742,10 @@ class ArcGisScan(
       Array(ArcGisStatsPartition(effectiveWhere, pa.groupBy, pa.stats))
     } else if (strategy.equalsIgnoreCase("queryTopFeatures")) {
       // S2: the topFeatures endpoint is one remote group-top-k call.
-      Array(ArcGisInputPartition(-1, -1, effectiveWhere))
+      Array(ArcGisTopFeaturesPartition(effectiveWhere))
     } else {
-      val page = Option(options.get("pageSize")).map(_.toInt)
-        .getOrElse(info.maxRecordCount.max(1))
+      val cap = info.maxRecordCount.max(1)
+      val page = Option(options.get("pageSize")).map(_.toInt).getOrElse(cap)
       // OID-range mode: explicit opt-in, or forced when the server's /query
       // lacks resultOffset. A pushed LIMIT prefers offset mode (the limit
       // budget maps to offset pages) — but ONLY when the server actually
@@ -731,12 +765,11 @@ class ArcGisScan(
         // larger user pageSize would make a capped (= truncated)
         // response look unsaturated and silently drop the rest of the
         // range. pageSize still sizes the ranges themselves.
-        val saturation = info.maxRecordCount.max(1)
         OidRanges
           .layerRanges(ArcGisClientRegistry.get(options.get("client")), oid, info.totalCount,
             page, "strategy=oidRange")
           .map { case (lo, hi) =>
-            ArcGisOidRangePartition(lo, hi, oid, effectiveWhere, saturation, envelope)
+            ArcGisOidRangePartition(lo, hi, oid, effectiveWhere, cap, envelope)
           }
           .toArray
       }
@@ -744,18 +777,24 @@ class ArcGisScan(
         oidRangePartitions()
       } else if (limit.isDefined && !info.supportsPagination) {
         if (limit.get <= info.maxRecordCount)
-          Array(ArcGisInputPartition(0L, -1, effectiveWhere, envelope))
+          Array(ArcGisInputPartition(Seq((0L, -1)), effectiveWhere, envelope))
         else oidRangePartitions()
       } else {
+        // a server answers at most maxRecordCount rows whatever
+        // resultRecordCount asks for: a larger page would silently lose
+        // the rest of each window
+        val window = math.min(page, cap)
         // pushed LIMIT caps the total row budget: pages past it are never
         // requested, and the last page shrinks to the remainder (rows are
         // served in stable OBJECTID order, so these ARE the first rows)
         val budget = limit.map(l => math.min(l.toLong, info.totalCount)).getOrElse(info.totalCount)
-        val n = ((budget + page - 1) / page).toInt.max(1)
-        (0 until n).map { i =>
-          val off = i.toLong * page
-          ArcGisInputPartition(
-            off, math.min(page.toLong, budget - off).toInt.max(0), effectiveWhere, envelope)
+        val n = ((budget + window - 1) / window).toInt.max(1)
+        val windows = (0 until n).map { i =>
+          val off = i.toLong * window
+          (off, math.min(window.toLong, budget - off).toInt.max(0))
+        }
+        OffsetPages.pack(n, OffsetPages.slots()).map { run =>
+          ArcGisInputPartition(run.map(windows), effectiveWhere, envelope): InputPartition
         }.toArray
       }
     }
@@ -774,7 +813,8 @@ class ArcGisReaderFactory(
     case p: ArcGisOidRangePartition => new ArcGisOidRangeReader(schema, options, p)
     case p: ArcGisDeletesPartition => new ArcGisDeletesReader(schema, options, p)
     case p: ArcGisAttachmentsPartition => new ArcGisAttachmentsReader(schema, options, p)
-    case p: ArcGisInputPartition => new ArcGisPartitionReader(schema, options, p)
+    case p: ArcGisInputPartition => new ArcGisPageReader(schema, options, p)
+    case p: ArcGisTopFeaturesPartition => new ArcGisTopFeaturesReader(schema, options, p)
   }
 }
 
@@ -875,32 +915,91 @@ class ArcGisStatsReader(
   }
 }
 
-/** Executor-side page fetch + row materialization: one offset window, or
-  * (offset < 0) the single `queryTopFeatures` call.
+/** Shared daemon pool for the offset reader's next-page requests. Threads
+  * are made on demand and idle out; the readers bound the concurrency (one
+  * pending page per reading task).
   */
-class ArcGisPartitionReader(
+private[arcgis] object ArcGisPrefetch {
+  private val pool = Executors.newCachedThreadPool(new ThreadFactory {
+    private val n = new AtomicInteger()
+    override def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"arcgis-prefetch-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  })
+
+  def submit[T](work: () => T): Future[T] =
+    pool.submit(new Callable[T] { override def call(): T = work() })
+
+  /** `f`'s result; a failed request rethrows its own exception. */
+  def await[T](f: Future[T]): T =
+    try f.get()
+    catch { case e: ExecutionException => throw e.getCause }
+}
+
+/** Executor-side offset scan: reads the partition's windows in order
+  * through [[ArcGisClient.scanPage]], with the next window's request in
+  * flight on [[ArcGisPrefetch]] while the task consumes the current one.
+  * A task has one request out at any moment, so the server sees no more
+  * than one per task slot. Only the planned windows are ever requested, a
+  * failed page rethrows its own exception, and `close()` (early `take`,
+  * task kill) cancels the pending request.
+  */
+class ArcGisPageReader(
     schema: StructType,
     options: Map[String, String],
     partition: ArcGisInputPartition
+) extends PartitionReader[InternalRow] {
+
+  private lazy val client = ArcGisClientRegistry.get(options("client"))
+  private var requested = 0
+  private var pending: Future[Iterator[InternalRow]] = _
+  private var rows: Iterator[InternalRow] = Iterator.empty
+  private var current: InternalRow = _
+
+  private def requestNext(): Unit =
+    if (requested < partition.windows.size) {
+      val (offset, count) = partition.windows(requested)
+      requested += 1
+      pending = ArcGisPrefetch.submit(() => client.scanPage(
+        offset, count, partition.where, schema, partition.envelope, options.get("outSR")))
+    }
+
+  override def next(): Boolean = {
+    if (requested == 0) requestNext()
+    while (!rows.hasNext && pending != null) {
+      // cleared only once the page is in hand: a task interrupted while
+      // waiting leaves it for close() to cancel
+      rows = ArcGisPrefetch.await(pending)
+      pending = null
+      requestNext()
+    }
+    if (rows.hasNext) { current = rows.next(); true } else false
+  }
+
+  override def get(): InternalRow = current
+
+  override def close(): Unit =
+    if (pending != null) { pending.cancel(true); pending = null }
+}
+
+/** Executor-side `queryTopFeatures` call (strategy S2). */
+class ArcGisTopFeaturesReader(
+    schema: StructType,
+    options: Map[String, String],
+    partition: ArcGisTopFeaturesPartition
 ) extends ArcGisIteratorReader[EsriFeature] {
 
-  override protected def fetch(): Iterator[EsriFeature] = {
-    val client = ArcGisClientRegistry.get(options("client"))
-    val outFields = ArcGisSchema.outFields(schema)
-    val page =
-      if (partition.offset < 0)
-        client.queryTopFeatures(
-          options.getOrElse("topCount", "1").toInt,
-          options("groupByField"),
-          options("orderByField"),
-          partition.where,
-          outFields,
-          options.get("outSR")
-        )
-      else client.queryPage(partition.offset, partition.count, partition.where, outFields,
-        partition.envelope, options.get("outSR"))
-    page.iterator
-  }
+  override protected def fetch(): Iterator[EsriFeature] =
+    ArcGisClientRegistry.get(options("client")).queryTopFeatures(
+      options.getOrElse("topCount", "1").toInt,
+      options("groupByField"),
+      options("orderByField"),
+      partition.where,
+      ArcGisSchema.outFields(schema),
+      options.get("outSR")
+    ).iterator
 
   override protected def row(f: EsriFeature): InternalRow = ArcGisValues.toRow(schema, f)
 }

@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.URLEncoder
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 
 /** Production transport for [[ArcGisClient]] over the ArcGIS REST API —
   * the endpoints the reference drives: `/query` (`/root/reference/
@@ -12,12 +14,13 @@ import java.nio.charset.StandardCharsets
   * reference's token/referer pattern (`task.ts:373-388`) behind an
   * expiry-aware [[AuthCache]] amortized per executor.
   *
-  * Deliberately dependency-free (java.net.http + the minimal JSON
-  * read/write below) since the build is offline. Integration-tested
-  * against a loopback ArcGIS stub (`HttpArcGisClientSpec` — pagination,
-  * pushdown-over-the-wire, token/referer, write envelopes); engine logic
-  * above the transport is additionally exercised through
-  * [[MockArcGisClient]].
+  * Deliberately dependency-free (java.net.http, the streaming
+  * [[FeatureDecoder]] for feature pages and its tokenizer's [[MiniJson]]
+  * trees for every other reply) since the build is offline.
+  * Integration-tested against a loopback ArcGIS stub
+  * (`HttpArcGisClientSpec` — pagination, pushdown-over-the-wire,
+  * token/referer, write envelopes); engine logic above the transport is
+  * additionally exercised through [[MockArcGisClient]].
   */
 class HttpArcGisClient(
     layerUrl: String,
@@ -71,10 +74,6 @@ class HttpArcGisClient(
     case _: java.net.UnknownHostException => true
     case _ => false
   }
-
-  private def sendWithRetry(
-      what: String, build: () => HttpRequest, idempotent: Boolean = true): String =
-    sendRaw(what, build, HttpResponse.BodyHandlers.ofString(), idempotent)
 
   private def sendRaw[T](
       what: String, build: () => HttpRequest,
@@ -146,24 +145,54 @@ class HttpArcGisClient(
     */
   private val maxGetQueryChars = 2000
 
-  private def get(path: String, params: Seq[(String, String)]): String =
+  private def get[T](path: String, params: Seq[(String, String)], handler: HttpResponse.BodyHandler[T]): T =
     if (readQs(params).length <= maxGetQueryChars)
-      sendWithRetry(s"GET $path",
-        () => request(s"$layerUrl$path?${readQs(params)}")(_.GET()))
+      sendRaw(s"GET $path",
+        () => request(s"$layerUrl$path?${readQs(params)}")(_.GET()), handler, idempotent = true)
     else
-      sendWithRetry(s"POST(read) $path",
-        () => request(s"$layerUrl$path")(formPost(readQs(params))))
+      sendRaw(s"POST(read) $path",
+        () => request(s"$layerUrl$path")(formPost(readQs(params))), handler, idempotent = true)
 
-  private def post(path: String, params: Seq[(String, String)]): String =
-    sendWithRetry(s"POST $path", idempotent = false, build = () =>
-      request(s"$layerUrl$path")(formPost(encoded(withAuth(params) :+ ("f" -> "json")))))
+  /** A reply that is an error envelope fails here, and an auth code on it
+    * (498/499/401/403) drops the cached token so the next request
+    * re-authenticates.
+    */
+  private def checked[T](body: => T): T =
+    try body
+    catch {
+      case e: ArcGisServerError =>
+        if (e.authFailure) auth.foreach(_.invalidate())
+        throw e
+    }
+
+  /** A small JSON reply (metadata, count, statistics, listings, write
+    * results) as a [[MiniJson]] tree, its error envelope checked.
+    */
+  private def envelope(what: String, body: => String): MiniJson.JValue = checked {
+    val json = MiniJson.parse(body)
+    ArcGisServerError.check(json, what)
+    json
+  }
+
+  private def getJson(path: String, params: Seq[(String, String)]): MiniJson.JValue =
+    envelope(s"GET $path", get(path, params, HttpResponse.BodyHandlers.ofString()))
+
+  /** A feature page's raw bytes through the streaming [[FeatureDecoder]]. */
+  private def getFeatures[T](path: String, params: Seq[(String, String)])(
+      decode: (Array[Byte], String) => T): T =
+    checked(decode(get(path, params, HttpResponse.BodyHandlers.ofByteArray()), s"GET $path"))
+
+  private def post(path: String, params: Seq[(String, String)]): MiniJson.JValue =
+    envelope(s"POST $path", sendRaw(s"POST $path", () =>
+      request(s"$layerUrl$path")(formPost(encoded(withAuth(params) :+ ("f" -> "json")))),
+      HttpResponse.BodyHandlers.ofString(), idempotent = false))
 
   override def layerInfo(): LayerInfo = {
-    val json = MiniJson.parse(get("", Seq.empty))
+    val json = getJson("", Seq.empty)
     val fields = json.arr("fields").map { f =>
       ArcGisField(f.str("name"), f.str("type"))
     }
-    val count = MiniJson.parse(get("/query", Seq("where" -> "1=1", "returnCountOnly" -> "true")))
+    val count = getJson("/query", Seq("where" -> "1=1", "returnCountOnly" -> "true"))
     LayerInfo(
       fields,
       json.num("maxRecordCount").map(_.toInt).getOrElse(1000),
@@ -178,19 +207,10 @@ class HttpArcGisClient(
     )
   }
 
-  private def parseFeatures(body: String): Seq[EsriFeature] =
-    MiniJson.parse(body).arr("features").map { f =>
-      val attrs = f.obj("attributes").map(_.fields).getOrElse(Map.empty)
-      val geom = for {
-        g <- f.obj("geometry")
-        x <- g.num("x"); y <- g.num("y")
-      } yield (x, y)
-      EsriFeature(attrs.collect { case (k, v: Any) => k -> v }, geom)
-    }
-
-  /** `count < 0` = no explicit cap: the OID-range scan omits BOTH pagination
-    * parameters (they require `supportsPagination`, which is exactly what
-    * that mode works around) and lets the server cap at its maxRecordCount.
+  /** `/query` parameters of one feature page. `count < 0` = no explicit
+    * cap: the OID-range scan omits BOTH pagination parameters (they require
+    * `supportsPagination`, which is exactly what that mode works around)
+    * and lets the server cap at its maxRecordCount.
     *
     * SR discipline: every feature read requests `outSR=4326`, so geom_x /
     * geom_y are ALWAYS WGS-84 lon/lat regardless of the layer's native SR —
@@ -200,10 +220,10 @@ class HttpArcGisClient(
     * reproject the envelope while shipping native-SR coordinates, silently
     * excluding matching rows that no residual engine filter could recover.
     */
-  override def queryPage(
+  private def queryParams(
       offset: Long, count: Int, where: String, outFields: Seq[String],
-      envelope: Option[Envelope] = None, outSR: Option[String] = None
-  ): Seq[EsriFeature] = {
+      envelope: Option[Envelope], outSR: Option[String]
+  ): Seq[(String, String)] = {
     // user-chosen SR (read option `outSR`) replaces the 4326 default for
     // BOTH outSR and the envelope's inSR: predicates over geom_x/geom_y are
     // written against the coordinates the user receives, the pushed bbox is
@@ -212,7 +232,7 @@ class HttpArcGisClient(
     // envelope internally) — the SR discipline is preserved, just in the
     // caller's frame instead of WGS-84
     val sr = outSR.getOrElse("4326")
-    parseFeatures(get("/query", Seq(
+    Seq(
       "where" -> where,
       "outFields" -> (if (outFields.isEmpty) "*" else outFields.mkString(",")),
       "outSR" -> sr
@@ -220,25 +240,42 @@ class HttpArcGisClient(
       "resultOffset" -> offset.toString,
       "resultRecordCount" -> count.toString,
       "orderByFields" -> "OBJECTID" // stable pagination order
-    ) else Seq.empty)
-      ++ envelope.toSeq.flatMap(e => Seq(
+    ) else Seq.empty) ++
+      envelope.toSeq.flatMap(e => Seq(
         "geometry" -> s"""{"xmin":${e.xmin},"ymin":${e.ymin},"xmax":${e.xmax},"ymax":${e.ymax}}""",
         "geometryType" -> "esriGeometryEnvelope",
         "spatialRel" -> "esriSpatialRelIntersects",
         "inSR" -> sr // same SR as outSR — one unit system end to end
-      ))))
+      ))
   }
+
+  override def queryPage(
+      offset: Long, count: Int, where: String, outFields: Seq[String],
+      envelope: Option[Envelope] = None, outSR: Option[String] = None
+  ): Seq[EsriFeature] =
+    getFeatures("/query", queryParams(offset, count, where, outFields, envelope, outSR))(
+      FeatureDecoder.features)
+
+  /** The page decoded from the reply bytes straight into rows: no feature
+    * maps, no per-row field lookup by name.
+    */
+  override def scanPage(
+      offset: Long, count: Int, where: String, schema: StructType,
+      envelope: Option[Envelope] = None, outSR: Option[String] = None
+  ): Iterator[InternalRow] =
+    getFeatures("/query", queryParams(offset, count, where, ArcGisSchema.outFields(schema),
+      envelope, outSR))(FeatureDecoder.rows(_, schema, _)).iterator
 
   override def queryTopFeatures(
       topCount: Int, groupByField: String, orderByField: String,
       where: String, outFields: Seq[String], outSR: Option[String] = None
   ): Seq[EsriFeature] =
-    parseFeatures(get("/queryTopFeatures", Seq(
+    getFeatures("/queryTopFeatures", Seq(
       "where" -> where,
       "outFields" -> (if (outFields.isEmpty) "*" else outFields.mkString(",")),
       "outSR" -> outSR.getOrElse("4326"), // same SR discipline as queryPage
       "topFilter" -> s"""{"groupByFields":"$groupByField","topCount":$topCount,"orderByFields":"$orderByField"}"""
-    )))
+    ))(FeatureDecoder.features)
 
   private def attachmentInfo(a: MiniJson.JValue): AttachmentInfo =
     AttachmentInfo(
@@ -248,7 +285,7 @@ class HttpArcGisClient(
       a.num("size").map(_.toLong).getOrElse(0L))
 
   override def attachmentInfos(oid: Long): Seq[AttachmentInfo] =
-    MiniJson.parse(get(s"/$oid/attachments", Seq.empty)).arr("attachmentInfos").map(attachmentInfo)
+    getJson(s"/$oid/attachments", Seq.empty).arr("attachmentInfos").map(attachmentInfo)
 
   /** Bulk listing via the layer's `queryAttachments` endpoint — one
     * round-trip per OID window instead of one per feature. The public REST
@@ -259,10 +296,10 @@ class HttpArcGisClient(
     */
   override def queryAttachments(oids: Seq[Long]): Seq[(Long, AttachmentInfo)] =
     if (oids.isEmpty) Seq.empty
-    else MiniJson.parse(get("/queryAttachments", Seq(
+    else getJson("/queryAttachments", Seq(
       "objectIds" -> oids.mkString(","),
       "returnUrl" -> "false"
-    ))).arr("attachmentGroups").flatMap { g =>
+    )).arr("attachmentGroups").flatMap { g =>
       val parent = g.num("parentObjectId").map(_.toLong).getOrElse(-1L)
       g.arr("attachmentInfos").map(a => parent -> attachmentInfo(a))
     }
@@ -288,9 +325,8 @@ class HttpArcGisClient(
   /** ArcGIS servers commonly report download failures (expired/invalid
     * token, bad attachment id) as HTTP 200 with a JSON `{"error":...}`
     * envelope. Returning that body as the payload would silently feed
-    * corrupt bytes to the binary operators, so sniff and throw instead —
-    * invalidating the cached token on auth codes (498 invalid token, 499
-    * token required) so the next task attempt re-authenticates. The gate is
+    * corrupt bytes to the binary operators, so sniff and throw instead,
+    * through the same check every JSON reply gets. The gate is
     * conservative: bytes must start with '{' (after whitespace), be small
     * enough to plausibly be an envelope, parse as JSON, AND carry an
     * `error` object — a real binary attachment never trips all four.
@@ -302,18 +338,11 @@ class HttpArcGisClient(
     val parsed =
       try Some(MiniJson.parse(new String(bytes, StandardCharsets.UTF_8)))
       catch { case _: RuntimeException => None } // not JSON → a real payload
-    parsed.flatMap(_.obj("error")).foreach { e =>
-      val code = e.num("code").map(_.toInt).getOrElse(-1)
-      if (code == 498 || code == 499 || code == 401 || code == 403)
-        auth.foreach(_.invalidate())
-      throw new RuntimeException(
-        s"ArcGIS $what failed: server returned an error envelope " +
-          s"(code=$code, message='${e.str("message")}') instead of the payload")
-    }
+    parsed.foreach(json => checked(ArcGisServerError.check(json, what)))
   }
 
-  private def writeResults(body: String, resultKey: String): Seq[Either[String, Long]] =
-    MiniJson.parse(body).arr(resultKey).map { r =>
+  private def writeResults(reply: MiniJson.JValue, resultKey: String): Seq[Either[String, Long]] =
+    reply.arr(resultKey).map { r =>
       if (r.bool("success").contains(true))
         Right(r.num("objectId").map(_.toLong).getOrElse(-1L))
       else Left(r.obj("error").flatMap(_.strOpt("description")).getOrElse("unknown error"))
@@ -343,14 +372,14 @@ class HttpArcGisClient(
       "outStatistics" -> outStats,
       "returnGeometry" -> "false"
     ) ++ (if (groupBy.nonEmpty) Seq("groupByFieldsForStatistics" -> groupBy.mkString(",")) else Seq.empty)
-    MiniJson.parse(get("/query", params)).arr("features").map { f =>
+    getJson("/query", params).arr("features").map { f =>
       f.obj("attributes").map(_.fields).getOrElse(Map.empty)
         .collect { case (k, v: Any) => k -> v }
     }
   }
 }
 
-/** Minimal JSON reader/writer for the ArcGIS REST envelope — enough for
+/** Minimal JSON tree and writer for the ArcGIS REST envelope — enough for
   * fields/features/results; avoids any external dependency (offline build).
   */
 private[graft] object MiniJson {
@@ -375,13 +404,10 @@ private[graft] object MiniJson {
     def bool(k: String): Option[Boolean] = fields.get(k).collect { case b: Boolean => b }
   }
 
-  def parse(s: String): JValue =
-    try JValue(new Parser(s).parseValue())
-    catch {
-      case e: RuntimeException =>
-        throw new RuntimeException(
-          s"malformed ArcGIS JSON response (${e.getClass.getSimpleName}): ${s.take(120)}", e)
-    }
+  /** `s` read by [[FeatureDecoder]]'s tokenizer, the one JSON grammar of
+    * the connector; malformed input throws "malformed ArcGIS JSON response".
+    */
+  def parse(s: String): JValue = JValue(FeatureDecoder.tree(s.getBytes(StandardCharsets.UTF_8)))
 
   /** Serialize features to the ESRI JSON array `addFeatures` expects. */
   def featuresJson(feats: Seq[EsriFeature]): String =
@@ -406,71 +432,4 @@ private[graft] object MiniJson {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     }
-
-  private final class Parser(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    private def expect(c: Char): Unit = { ws(); require(s.charAt(i) == c, s"expected $c at $i"); i += 1 }
-
-    def parseValue(): Any = {
-      ws()
-      s.charAt(i) match {
-        case '{' => parseObj()
-        case '[' => parseArr()
-        case '"' => parseStr()
-        case 't' => i += 4; true
-        case 'f' => i += 5; false
-        case 'n' => i += 4; null
-        case _ => parseNum()
-      }
-    }
-    private def parseObj(): Map[String, Any] = {
-      expect('{'); ws()
-      if (s.charAt(i) == '}') { i += 1; return Map.empty }
-      val b = Map.newBuilder[String, Any]
-      var done = false
-      while (!done) {
-        ws(); val k = parseStr(); expect(':'); b += (k -> parseValue()); ws()
-        if (s.charAt(i) == ',') i += 1 else { expect('}'); done = true }
-      }
-      b.result()
-    }
-    private def parseArr(): Seq[Any] = {
-      expect('['); ws()
-      if (s.charAt(i) == ']') { i += 1; return Seq.empty }
-      val b = Seq.newBuilder[Any]
-      var done = false
-      while (!done) {
-        b += parseValue(); ws()
-        if (s.charAt(i) == ',') i += 1 else { expect(']'); done = true }
-      }
-      b.result()
-    }
-    private def parseStr(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') {
-          i += 1
-          s.charAt(i) match {
-            case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-            case 'r' => sb.append('\r'); case 'b' => sb.append('\b')
-            case 'f' => sb.append('\f')
-            case 'u' => sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar); i += 4
-            case other => sb.append(other)
-          }
-        } else sb.append(c)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    private def parseNum(): Any = {
-      val start = i
-      while (i < s.length && "+-0123456789.eE".indexOf(s.charAt(i)) >= 0) i += 1
-      val t = s.substring(start, i)
-      if (t.exists(c => c == '.' || c == 'e' || c == 'E')) t.toDouble else t.toLong
-    }
-  }
 }

@@ -161,6 +161,20 @@ class ArcGisSourceSpec extends AnyFunSuite {
     assert(plan.contains("pushedLimit=7"), plan)
   }
 
+  test("offset mode: a pageSize above the server's maxRecordCount is clamped, no row lost") {
+    // 37 rows behind a server that answers at most 10 per request: asking
+    // for 25 per page would get 10 back and silently skip the other 15
+    val client = mkClient(37, pageSize = 10)
+    assert(client.queryPage(0L, 25, "1=1", Seq("*")).size == 10, "the mock caps like a real server")
+    client.pageLog.clear()
+    ArcGisClientRegistry.register("clamp37", client)
+    val df = spark.read.format("arcgis").option("client", "clamp37").option("pageSize", "25").load()
+    val ids = df.select("objectid").collect().map(_.getLong(0)).sorted
+    assert(ids.toSeq == (0L until 37L))
+    val pages = client.pageLog.toArray.map(_.asInstanceOf[(Long, Int)]).sortBy(_._1)
+    assert(pages.toSeq == Seq((0L, 10), (10L, 10), (20L, 10), (30L, 7)), pages.toSeq.toString)
+  }
+
   test("bbox predicates compile to a server-side envelope; exactness stays residual") {
     val client = mkClient(30)
     ArcGisClientRegistry.register("env30", client)

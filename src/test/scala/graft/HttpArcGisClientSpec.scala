@@ -292,6 +292,56 @@ class HttpArcGisClientSpec extends AnyFunSuite {
     }
   }
 
+  test("HTTP-200 error envelope on a read fails loudly with its code and drops the token") {
+    val tokens = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var failing = "page"
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/ee", (ex: HttpExchange) => {
+      val p = params(ex)
+      p.get("token").foreach(tokens.add)
+      ex.getRequestURI.getPath match {
+        case "/ee" =>
+          reply(ex, """{"fields":[{"name":"objectid","type":"esriFieldTypeOID"}],"maxRecordCount":10}""")
+        case "/ee/query" if p.get("returnCountOnly").contains("true") =>
+          reply(ex, if (failing == "count") """{"error":{"code":499,"message":"Token Required"}}"""
+            else """{"count":37}""")
+        case "/ee/query" if p.contains("outStatistics") =>
+          reply(ex, """{"error":{"code":400,"message":"Unable to complete operation."}}""")
+        case "/ee/query" =>
+          // page 2 of 4: the token expired mid-pull
+          val off = p.getOrElse("resultOffset", "0").toInt
+          if (off == 10) reply(ex, """{"error":{"code":498,"message":"Invalid token","details":[]}}""")
+          else reply(ex, (off until math.min(37, off + 10))
+            .map(i => s"""{"attributes":{"objectid":$i}}""").mkString("""{"features":[""", ",", "]}"))
+        case _ => ex.sendResponseHeaders(404, -1); ex.close()
+      }
+    })
+    server.start()
+    try {
+      val fetched = new java.util.concurrent.atomic.AtomicInteger()
+      val auth = new AuthCache(() => (s"tok-${fetched.incrementAndGet()}", Long.MaxValue))
+      val client = new HttpArcGisClient(s"http://127.0.0.1:${server.getAddress.getPort}/ee",
+        auth = Some(auth))
+      ArcGisClientRegistry.register("http-errenv", client)
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+      // a short table would be the silent failure; the read must fail instead
+      val e = intercept[Exception](
+        spark.read.format("arcgis").option("client", "http-errenv").load().select("objectid").collect())
+      assert(messages(e).exists(m => m.contains("error envelope") && m.contains("code=498")), messages(e))
+      // the 498 dropped the cached token: the next request re-authenticates
+      client.layerInfo()
+      assert(fetched.get >= 2 && tokens.toArray.exists(_ != "tok-1"), tokens.toArray.toSeq)
+      // the same check guards the small envelopes: count and statistics
+      failing = "count"
+      val c = intercept[ArcGisServerError](client.layerInfo())
+      assert(c.code == 499 && c.getMessage.contains("Token Required"))
+      val st = intercept[ArcGisServerError](
+        client.queryStatistics("1=1", Nil, Seq(StatSpec("count", "objectid", "n"))))
+      assert(st.code == 400 && !st.authFailure)
+    } finally server.stop(0)
+  }
+
   test("PortalAuth.fetcher: generateToken exchange feeds the cache; error envelope surfaces") {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
