@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Registry/doc cross-check: the baseline-rung navigation layer stays true.
 
-Three invariants (VERDICT r16 item 7 — rung annotations had gone stale as
+Four invariants (VERDICT r16 item 7 — rung annotations had gone stale as
 newer production paths landed):
 
   1. Every query name mentioned in COVERAGE.md's "Baseline -> production
@@ -11,10 +11,15 @@ newer production paths landed):
   3. For every rung that appears in the COVERAGE table, the doc-string
      pointers are a SUBSET of the table row's production column — a doc
      that names a retired/renamed production twin fails here.
+  4. The names parsed from the packs are exactly the key set of
+     perfbench/digests.json (one result digest per registered query), so
+     a `Q(...)` whose name line the parser cannot see fails loudly instead
+     of silently shrinking invariants 1-3.
 
 Usage: python3 scripts/registry_check.py   (exit 0 = all green)
 """
 import glob
+import json
 import re
 import sys
 
@@ -91,6 +96,14 @@ def main():
     if len(reg) < 200:
         print(f"FAIL: only {len(reg)} registered queries parsed — regex drift?")
         sys.exit(1)
+
+    digested = set(json.load(open("perfbench/digests.json")))
+    for n in sorted(digested - reg):
+        print(f"FAIL: {n} has a digest but no parsable Q(\"{n}\", ...) line")
+        bad += 1
+    for n in sorted(reg - digested):
+        print(f"FAIL: {n} is registered but has no digest in perfbench/digests.json")
+        bad += 1
 
     rows = coverage_table()
     table_prod = {}

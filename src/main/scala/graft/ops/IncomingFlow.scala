@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.concurrent.TrieMap
+import graft.sources.arcgis.ArcGisSchema
 
 /** S7 — the TAK FeatureCollection sink (reference `this.submit(fc)`,
   * `/root/reference/task.ts:420-423,455-457`, [lib @tak-ps/etl] pin
@@ -52,8 +53,12 @@ object IncomingFlow {
     val propsMap = map(
       attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))).toSeq: _*
     )
+    // the feature id is the layer's esriFieldTypeOID field, whatever its
+    // name (hosted shapefile layers call it FID); `objectid` when the
+    // schema carries no OID marker (a user-supplied schema)
+    val oid = ArcGisSchema.oidColumn(scan.schema).getOrElse("objectid")
     val raw = scan.select(
-      col("objectid").cast("string").as("id"),
+      col(oid).cast("string").as("id"),
       propsMap.as("properties"),
       when(
         col("geom_x").isNotNull,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextOps._
@@ -244,6 +245,278 @@ object DedupPack extends QueryPack {
       |  JOIN m2 l2 ON l1.rep = l2.node
       |  JOIN m3 l3 ON l2.rep = l3.node
       |  LEFT JOIN comp3 c3 ON l3.rep = c3.node)""".stripMargin
+
+  /** SemDeDup's candidate generation over a multi-table LSH code (d28, and
+    * d29/d32 through [[semDedupAdaptive]]): `e(vec_id, embedding, nrm, …)`
+    * explodes into index entries (`idxCells`) and probes (`probeCells`), each
+    * an array of `(tbl, bucket)` structs; every lower-id index entry sharing a
+    * probed cell becomes a `(a_id, b_id, cos_sim)` candidate. `cap = Some(C)`
+    * keeps only each (table, cell)'s C lowest-id index entries — one hash
+    * exchange on the cell key (the SAME key the candidate join shuffles on)
+    * plus an in-partition sort; b_id is unique, so the kept set is
+    * deterministic. Zero-norm pairs drop out (NULL cosine).
+    */
+  private def lshCosineCands(e: DataFrame, idxCells: Column, probeCells: Column,
+      cap: Option[Int] = None): DataFrame = {
+    import graft.functions.VectorOps.dot
+    val idx0 = e
+      .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"), col("nrm").as("b_nrm"),
+        explode(idxCells).as("tb"))
+      .select(col("b_id"), col("b_emb"), col("b_nrm"),
+        col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
+    val idx = cap.fold(idx0) { c =>
+      val win = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("tbl"), col("bucket")).orderBy(col("b_id"))
+      idx0.withColumn("rn", row_number().over(win)).filter(col("rn") <= c).drop("rn")
+    }
+    val probes = e
+      .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"), col("nrm").as("a_nrm"),
+        explode(probeCells).as("tb"))
+      .select(col("a_id"), col("a_emb"), col("a_nrm"),
+        col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
+    idx.join(probes, Seq("tbl", "bucket"))
+      .filter(col("b_id") < col("a_id"))
+      .select(col("a_id"), col("b_id"),
+        quant(dot(col("a_emb"), col("b_emb")) /
+          when(col("a_nrm") * col("b_nrm") > 0.0, col("a_nrm") * col("b_nrm")), 1e6)
+          .as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
+  }
+
+  /** SemDeDup with a CORPUS-ADAPTIVE code width — the g12 pattern (derive the
+    * key space from a broadcast count IN-PLAN) applied to hyperplane LSH.
+    * d28 widened d14's 4 cells to 4 tables x 2^12, but any pinned k
+    * re-densifies eventually (measured: d28's marginal bends up at 20x as
+    * cells fill). Here k comes from [[LshCodes.adaptiveK]], so per-cell
+    * density stays ~8 vectors per table at ANY corpus size while the probe
+    * fan-out grows only as k (Hamming-1 over k planes); candidates,
+    * zero-norm guard, and keep-lowest-id semantics are exactly d28's. `cap`
+    * is d32's per-cell verification cap (None = d29).
+    */
+  private def semDedupAdaptive(s: SparkSession, d: String, cap: Option[Int]): DataFrame = {
+    val e = LshCodes.withAdaptiveCodes(
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+      LshCodes.adaptiveK(Tables.embeddings(s, d)))
+    val cand = lshCosineCands(e, LshCodes.adaptiveIdxCells, LshCodes.adaptiveProbeCells, cap)
+    // countDistinct, NOT distinct()-then-count: cos_sim is a pure
+    // function of (a_id, b_id), so the distinct pair count and the max
+    // over duplicates are unchanged — but the global DISTINCT was a
+    // second full-width exchange of the pair stream (50M rows at 20x,
+    // where multi-probe emits each true pair up to 4x(k+1) times) ON
+    // TOP of the groupBy's own shuffle. One aggregate does both dedup
+    // and fold with map-side partial aggregation (the D29Decomp probe,
+    // since deleted — source at commit a7c9aea — attributes the 20x
+    // marginal to exactly this stage; the pair VOLUME itself is
+    // true duplicate mass — sharded corpora collide exact-dup codes at
+    // any k — so the fix pays once per pair, never pretends fewer
+    // exist). d28/d14 keep the literal DISTINCT as registered baselines.
+    val best = cand.groupBy(col("a_id"))
+      .agg(countDistinct(col("b_id")).as("n_cand_prior"),
+        max(col("cos_sim")).as("best_prior_sim"))
+    val ids = e.select(col("vec_id"), col("k").cast("long").as("k_planes"))
+    ids
+      .join(best, ids("vec_id") === best("a_id"), "left")
+      .select(
+        col("vec_id"),
+        col("k_planes"),
+        coalesce(col("n_cand_prior"), lit(0L)).as("n_cand_prior"),
+        col("best_prior_sim"),
+        coalesce(col("best_prior_sim") >= 0.85, lit(false)).as("is_sem_dup"))
+      .orderBy(col("vec_id"))
+  }
+
+  /** DuckDB twin of [[lshCosineCands]] + the per-vector best-prior fold, as
+    * CTEs `cand` and `best` over CTEs `idx(b_id, b_emb, tbl, bucket)` and
+    * `pr(a_id, a_emb, tbl, bucket)`.
+    */
+  private val semDedupCandSql: String = {
+    val dotS = "list_sum(list_transform(list_zip(i.b_emb, p.a_emb), " +
+      "z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
+    def normS(c: String) =
+      s"sqrt(list_sum(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
+    s"""cand AS (
+       |  SELECT DISTINCT a_id, b_id, cos_sim FROM (
+       |    SELECT p.a_id, i.b_id,
+       |      floor($dotS /
+       |            nullif(${normS("i.b_emb")} * ${normS("p.a_emb")}, 0) * 1000000)
+       |        / 1000000 AS cos_sim
+       |    FROM idx i JOIN pr p
+       |      ON i.tbl = p.tbl AND i.bucket = p.bucket AND i.b_id < p.a_id) t
+       |  WHERE cos_sim IS NOT NULL),
+       |best AS (
+       |  SELECT a_id, COUNT(*) AS n_cand_prior, MAX(cos_sim) AS best_prior_sim
+       |  FROM cand GROUP BY a_id)""".stripMargin
+  }
+
+  /** DuckDB twin of [[semDedupAdaptive]]; `cap` ranks each cell's index
+    * entries by id and keeps the first C, as the engine does.
+    */
+  private def semDedupAdaptiveSql(cap: Option[Int]): String = {
+    val tcase = "CASE t.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
+    val capped = cap.fold("") { c =>
+      s"""
+         |idx AS (
+         |  SELECT b_id, b_emb, tbl, bucket FROM (
+         |    SELECT b_id, b_emb, tbl, bucket,
+         |      ROW_NUMBER() OVER (PARTITION BY tbl, bucket ORDER BY b_id) AS rn
+         |    FROM idx0) c WHERE rn <= $c),""".stripMargin
+    }
+    s"""WITH ${LshCodes.adaptiveKSql("embeddings")},
+       |e AS (
+       |  SELECT vec_id, emb AS embedding, k,
+       |    ${LshCodes.adaptiveColsSql("wb").mkString(",\n    ")}
+       |  FROM (SELECT vec_id, embedding AS emb FROM embeddings), kk),
+       |${if (cap.isEmpty) "idx" else "idx0"} AS (
+       |  SELECT e.vec_id AS b_id, e.embedding AS b_emb, t.tbl, $tcase AS bucket
+       |  FROM e, (SELECT unnest([0,1,2,3]) AS tbl) t),$capped
+       |pr AS (
+       |  SELECT e.vec_id AS a_id, e.embedding AS a_emb, t.tbl,
+       |    ${LshCodes.adaptiveProbeSql(tcase)} AS bucket
+       |  ${LshCodes.adaptiveProbeFromSql("e")}),
+       |$semDedupCandSql
+       |SELECT e.vec_id, CAST(e.k AS BIGINT) AS k_planes,
+       |  COALESCE(n_cand_prior, 0) AS n_cand_prior, best_prior_sim,
+       |  COALESCE(best_prior_sim >= 0.85, FALSE) AS is_sem_dup
+       |FROM e LEFT JOIN best ON e.vec_id = best.a_id
+       |ORDER BY e.vec_id""".stripMargin
+  }
+
+  /** Gram length of the d19/d31 duplicated-substring spans. */
+  private val SpanK = 10
+
+  /** d19/d31's shared plan: duplicated-substring spans per document. `grams`
+    * turns the tokenized docs `(doc_id, t, n_tokens)` into stride-1 gram
+    * postings `(doc_id, pos, <key>)`; the literal gram (d19) or its rolling
+    * fingerprint (d31) is the only difference. Global df>=2 grams → their
+    * positions per doc → overlapping/adjacent [pos, pos+k-1] intervals
+    * merged into MAXIMAL duplicated spans (one per-doc window pass, the e14
+    * interval-union shape). Grams explode to one row per corpus token —
+    * inherent to substring dedup; the df agg and the position join are
+    * plain hash shuffles on the key, the island window partitions per
+    * DOCUMENT.
+    */
+  private def substringSpans(s: SparkSession, d: String, key: String)(
+      grams: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val k = SpanK
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id"), tokens(col("text")).as("t"))
+      .withColumn("n_tokens", size(col("t")))
+      .filter(col("n_tokens") >= k)
+    val g = grams(docs)
+    val dup = g.groupBy(col(key)).agg(count(lit(1)).as("df"))
+      .filter(col("df") >= 2).select(col(key))
+    val p = g.join(dup, Seq(key)).select(col("doc_id"), col("pos"))
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    val isl = p
+      .withColumn("prev_end",
+        max(col("pos") + (k - 1)).over(w.rowsBetween(Window.unboundedPreceding, -1)))
+      .withColumn("ni",
+        when(col("prev_end").isNull || col("pos") > col("prev_end") + 1, 1L).otherwise(0L))
+      .withColumn("island",
+        sum(col("ni")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val spans = isl.groupBy(col("doc_id"), col("island"))
+      .agg(min(col("pos")).as("s"), (max(col("pos")) + (k - 1)).as("e"))
+    val per = spans.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_dup_spans"),
+        sum(col("e") - col("s") + 1).cast("long").as("dup_tokens"))
+    docs.select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"))
+      .join(per, Seq("doc_id"), "left_outer")
+      .select(
+        col("doc_id"),
+        coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
+        coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
+        col("n_tokens"),
+        quant(coalesce(col("dup_tokens"), lit(0L)).cast("double") / col("n_tokens"), 1e6)
+          .as("dup_frac"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** DuckDB twin of [[substringSpans]]: `gramCtes` defines `g2(doc_id, pos,
+    * <key>)` over `d(doc_id, toks)`; `docs` is the CTE the output rows come
+    * from and `nTok` its token-count expression.
+    */
+  private def substringSpansSql(key: String, docs: String, nTok: String,
+      gramCtes: String): String =
+    s"""WITH d AS (
+       |  SELECT doc_id, string_split(text, ' ') AS toks
+       |  FROM documents WHERE len(string_split(text, ' ')) >= 10),
+       |$gramCtes,
+       |dup AS (SELECT $key FROM g2 GROUP BY $key HAVING COUNT(*) >= 2),
+       |p AS (SELECT doc_id, pos FROM g2 JOIN dup USING ($key)),
+       |m AS (
+       |  SELECT doc_id, pos,
+       |    MAX(pos + 9) OVER (PARTITION BY doc_id ORDER BY pos
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+       |  FROM p),
+       |i AS (
+       |  SELECT doc_id, pos,
+       |    CASE WHEN prev_end IS NULL OR pos > prev_end + 1 THEN 1 ELSE 0 END AS ni
+       |  FROM m),
+       |isl AS (
+       |  SELECT doc_id, pos,
+       |    SUM(ni) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING)
+       |      AS island
+       |  FROM i),
+       |sp AS (SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + 9 AS e
+       |       FROM isl GROUP BY 1, 2),
+       |per AS (SELECT doc_id, COUNT(*) AS n_dup_spans,
+       |          CAST(SUM(e - s + 1) AS BIGINT) AS dup_tokens
+       |        FROM sp GROUP BY 1)
+       |SELECT $docs.doc_id,
+       |  CAST(COALESCE(n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
+       |  CAST(COALESCE(dup_tokens, 0) AS BIGINT) AS dup_tokens,
+       |  CAST($nTok AS BIGINT) AS n_tokens,
+       |  floor(CAST(COALESCE(dup_tokens, 0) AS DOUBLE) / $nTok * 1000000) / 1000000
+       |    AS dup_frac
+       |FROM $docs LEFT JOIN per USING (doc_id)
+       |ORDER BY doc_id""".stripMargin
+
+  /** d24/d27's keep-manifest over a near-dup edge list `(src, dst)`: CC
+    * labels the clusters, then per multi-doc cluster ONE aggregate keyed by
+    * component picks the representative to KEEP — longest text, ties to the
+    * smallest doc_id, the deterministic min(struct(-len, id)) argmax (no
+    * corpus window) — and accounts the chars dropped. d24 feeds it d10's
+    * source-blocked exact Jaccard pairs, d27 d25's LSH-verified edges.
+    */
+  private def keepManifest(docs: DataFrame, edges: DataFrame): DataFrame = {
+    val nodes = docs.select(col("doc_id").as("id"))
+    val comp = graft.ops.ConnectedComponents.run(nodes, edges)
+    comp.join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
+      .groupBy(col("component"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_chars")).as("tot_chars"),
+        min(struct((-col("n_chars")).as("nl"), col("id").as("i"))).as("m"))
+      .filter(col("n_docs") >= 2)
+      .select(col("component"), col("n_docs"),
+        col("m.i").as("keep_id"), (-col("m.nl")).as("keep_chars"),
+        (col("tot_chars") - (-col("m.nl"))).as("dropped_chars"))
+      .orderBy(col("component"))
+  }
+
+  /** DuckDB twin of [[keepManifest]] over a CTE chain ending in
+    * `cc(doc_id, component)`; `alias` names the joined documents table.
+    */
+  private def keepManifestSql(ccCtes: String, alias: String): String =
+    s"""$ccCtes,
+       |j AS (SELECT cc.component, $alias.doc_id, $alias.n_chars
+       |      FROM cc JOIN documents $alias USING (doc_id)),
+       |ag AS (
+       |  SELECT component, COUNT(*) AS n_docs,
+       |    CAST(SUM(n_chars) AS BIGINT) AS tot_chars
+       |  FROM j GROUP BY component),
+       |keep AS (
+       |  SELECT component, doc_id AS keep_id, n_chars AS keep_chars FROM (
+       |    SELECT component, doc_id, n_chars,
+       |      ROW_NUMBER() OVER (PARTITION BY component
+       |                         ORDER BY n_chars DESC, doc_id) AS rn
+       |    FROM j) t WHERE rn = 1)
+       |SELECT ag.component, ag.n_docs, keep.keep_id, keep.keep_chars,
+       |  ag.tot_chars - keep.keep_chars AS dropped_chars
+       |FROM ag JOIN keep USING (component)
+       |WHERE ag.n_docs >= 2
+       |ORDER BY ag.component""".stripMargin
 
   override def queries: Seq[Q] = Seq(
     // ---------------------------------------------------------------- exact
@@ -1031,103 +1304,33 @@ object DedupPack extends QueryPack {
     // ---------------------------------------------------------------- substring spans
     Q(
       "d19_substring_spans",
-      (s, d) => {
-        // EXACT duplicated-substring spans (the Lee et al. "Deduplicating
-        // Training Data" signal): overlapping stride-1 token 10-grams →
-        // global gram frequency → positions of df≥2 grams per doc → merge
-        // overlapping/adjacent [pos, pos+9] intervals into MAXIMAL
-        // duplicated spans (one per-doc window pass, the e14 interval-union
-        // shape). Per doc: span count, duplicated-token count, fraction.
-        // Scale: grams explode to one row per corpus token — inherent to
-        // substring dedup; the gram JOIN key is the literal 10-token string
-        // here (human-auditable baseline rung); the PRODUCTION path is d31,
-        // identical plan shape with the gram key hashed to an 8-byte rolling
-        // fingerprint (TextOps.gramFingerprints) — ~10× less shuffle bytes
-        // per posting; df agg and the position join are plain hash
-        // shuffles, the island window partitions per DOCUMENT.
-        import org.apache.spark.sql.expressions.Window
-        val k = 10
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), tokens(col("text")).as("t"))
-          .withColumn("n_tokens", size(col("t")))
-          .filter(col("n_tokens") >= k)
+      // EXACT duplicated-substring spans (the Lee et al. "Deduplicating
+      // Training Data" signal) over the literal 10-token gram string as the
+      // join key (human-auditable baseline rung); the PRODUCTION path is
+      // d31, identical plan shape with the gram key hashed to an 8-byte
+      // rolling fingerprint (TextOps.gramFingerprints) — ~10× less shuffle
+      // bytes per posting.
+      (s, d) => substringSpans(s, d, "gram") { docs =>
         // grams feed two subtrees (df aggregate + position join): spread
         // the docs through an explicit-count repartition and materialize
         // the postings once (profiled: the re-run explode was a ~630ms
         // single-task stage per reference on the single-file corpus)
-        val grams = docs
+        docs
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
           .select(col("doc_id"),
             posexplode(expr(
-              s"transform(sequence(1, n_tokens - ${k - 1}), i -> array_join(slice(t, i, $k), ' '))"
+              s"transform(sequence(1, n_tokens - ${SpanK - 1}), i -> array_join(slice(t, i, $SpanK), ' '))"
             )).as(Seq("p0", "gram")))
           .select(col("doc_id"), (col("p0") + 1).as("pos"), col("gram"))
           .localCheckpoint()
-        val dup = grams.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2).select(col("gram"))
-        val p = grams.join(dup, Seq("gram")).select(col("doc_id"), col("pos"))
-        val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-        val isl = p
-          .withColumn("prev_end",
-            max(col("pos") + (k - 1)).over(w.rowsBetween(Window.unboundedPreceding, -1)))
-          .withColumn("ni",
-            when(col("prev_end").isNull || col("pos") > col("prev_end") + 1, 1L).otherwise(0L))
-          .withColumn("island",
-            sum(col("ni")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        val spans = isl.groupBy(col("doc_id"), col("island"))
-          .agg(min(col("pos")).as("s"), (max(col("pos")) + (k - 1)).as("e"))
-        val per = spans.groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_dup_spans"),
-            sum(col("e") - col("s") + 1).cast("long").as("dup_tokens"))
-        docs.select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"))
-          .join(per, Seq("doc_id"), "left_outer")
-          .select(
-            col("doc_id"),
-            coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
-            coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
-            col("n_tokens"),
-            quant(coalesce(col("dup_tokens"), lit(0L)).cast("double") / col("n_tokens"), 1e6)
-              .as("dup_frac"))
-          .orderBy(col("doc_id"))
       },
-      Some("""WITH d AS (
-             |  SELECT doc_id, string_split(text, ' ') AS toks
-             |  FROM documents WHERE len(string_split(text, ' ')) >= 10),
-             |g AS (
-             |  SELECT doc_id, toks,
-             |    unnest(generate_series(1, len(toks) - 9)) AS pos
-             |  FROM d),
-             |g2 AS (
-             |  SELECT doc_id, pos, array_to_string(toks[pos:pos+9], ' ') AS gram FROM g),
-             |dup AS (SELECT gram FROM g2 GROUP BY gram HAVING COUNT(*) >= 2),
-             |p AS (SELECT doc_id, pos FROM g2 JOIN dup USING (gram)),
-             |m AS (
-             |  SELECT doc_id, pos,
-             |    MAX(pos + 9) OVER (PARTITION BY doc_id ORDER BY pos
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-             |  FROM p),
-             |i AS (
-             |  SELECT doc_id, pos,
-             |    CASE WHEN prev_end IS NULL OR pos > prev_end + 1 THEN 1 ELSE 0 END AS ni
-             |  FROM m),
-             |isl AS (
-             |  SELECT doc_id, pos,
-             |    SUM(ni) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING)
-             |      AS island
-             |  FROM i),
-             |sp AS (SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + 9 AS e
-             |       FROM isl GROUP BY 1, 2),
-             |per AS (SELECT doc_id, COUNT(*) AS n_dup_spans,
-             |          CAST(SUM(e - s + 1) AS BIGINT) AS dup_tokens
-             |        FROM sp GROUP BY 1)
-             |SELECT d.doc_id,
-             |  CAST(COALESCE(n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-             |  CAST(COALESCE(dup_tokens, 0) AS BIGINT) AS dup_tokens,
-             |  CAST(len(toks) AS BIGINT) AS n_tokens,
-             |  floor(CAST(COALESCE(dup_tokens, 0) AS DOUBLE) / len(toks) * 1000000) / 1000000
-             |    AS dup_frac
-             |FROM d LEFT JOIN per USING (doc_id)
-             |ORDER BY doc_id""".stripMargin),
+      Some(substringSpansSql("gram", "d", "len(toks)",
+        """g AS (
+          |  SELECT doc_id, toks,
+          |    unnest(generate_series(1, len(toks) - 9)) AS pos
+          |  FROM d),
+          |g2 AS (
+          |  SELECT doc_id, pos, array_to_string(toks[pos:pos+9], ' ') AS gram FROM g)""".stripMargin)),
       doc = "exact duplicated-substring spans (Lee et al. substring dedup): " +
         "stride-1 10-gram postings, global df>=2, per-doc maximal interval merge — " +
         "span count, duplicated tokens and fraction per document"
@@ -1135,100 +1338,37 @@ object DedupPack extends QueryPack {
     // ---------------------------------------------------------------- substring spans, hashed
     Q(
       "d31_substring_spans_hashed",
-      (s, d) => {
-        // d19's PRODUCTION twin: identical duplicated-substring plan, but
-        // the gram shuffle key is an 8-byte rolling fingerprint (polynomial
-        // fold of the token hashes mod the 49-bit prime FpM) instead of the
-        // literal 10-token string, computed by the compiled
-        // TextExpressions.gramFingerprintsK kernel (the Column/HOF spelling
-        // TextOps.gramFingerprints is its pinned-parity twin; interpreted
-        // HOF lambdas cost ~10 s/query here, the kernel milliseconds). At
-        // corpus scale the df aggregation + position join shuffle one long
-        // per posting (~8 bytes) where d19 ships the whole gram text (~10×
-        // token bytes) — this is THE reason Lee et al. fingerprint grams.
-        // Fingerprint collisions can in principle merge two distinct grams
-        // (odds < 1% per 10^8 grams at 49 bits; the d19↔d31 differential
-        // spec pins zero divergence on the test corpus); the oracle
-        // computes the identical fingerprints, so the check stays
-        // cell-exact regardless.
-        import org.apache.spark.sql.expressions.Window
-        val k = 10
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), tokens(col("text")).as("t"))
-          .withColumn("n_tokens", size(col("t")))
-          .filter(col("n_tokens") >= k)
-        val grams = docs
+      // d19's PRODUCTION twin: identical duplicated-substring plan, but
+      // the gram shuffle key is an 8-byte rolling fingerprint (polynomial
+      // fold of the token hashes mod the 49-bit prime FpM) instead of the
+      // literal 10-token string, computed by the compiled
+      // TextExpressions.gramFingerprintsK kernel (the Column/HOF spelling
+      // TextOps.gramFingerprints is its pinned-parity twin; interpreted
+      // HOF lambdas cost ~10 s/query here, the kernel milliseconds). At
+      // corpus scale the df aggregation + position join shuffle one long
+      // per posting (~8 bytes) where d19 ships the whole gram text (~10×
+      // token bytes) — this is THE reason Lee et al. fingerprint grams.
+      // Fingerprint collisions can in principle merge two distinct grams
+      // (odds < 1% per 10^8 grams at 49 bits; the d19↔d31 differential
+      // spec pins zero divergence on the test corpus); the oracle
+      // computes the identical fingerprints, so the check stays
+      // cell-exact regardless.
+      (s, d) => substringSpans(s, d, "fp") { docs =>
+        docs
           .select(col("doc_id"),
-            posexplode(graft.functions.TextExpressions.gramFingerprintsK(col("t"), k))
+            posexplode(graft.functions.TextExpressions.gramFingerprintsK(col("t"), SpanK))
               .as(Seq("p0", "fp")))
           .select(col("doc_id"), (col("p0") + 1).as("pos"), col("fp"))
-        val dup = grams.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2).select(col("fp"))
-        val p = grams.join(dup, Seq("fp")).select(col("doc_id"), col("pos"))
-        val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-        val isl = p
-          .withColumn("prev_end",
-            max(col("pos") + (k - 1)).over(w.rowsBetween(Window.unboundedPreceding, -1)))
-          .withColumn("ni",
-            when(col("prev_end").isNull || col("pos") > col("prev_end") + 1, 1L).otherwise(0L))
-          .withColumn("island",
-            sum(col("ni")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        val spans = isl.groupBy(col("doc_id"), col("island"))
-          .agg(min(col("pos")).as("s"), (max(col("pos")) + (k - 1)).as("e"))
-        val per = spans.groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_dup_spans"),
-            sum(col("e") - col("s") + 1).cast("long").as("dup_tokens"))
-        docs.select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"))
-          .join(per, Seq("doc_id"), "left_outer")
-          .select(
-            col("doc_id"),
-            coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
-            coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
-            col("n_tokens"),
-            quant(coalesce(col("dup_tokens"), lit(0L)).cast("double") / col("n_tokens"), 1e6)
-              .as("dup_frac"))
-          .orderBy(col("doc_id"))
       },
-      Some(s"""WITH d AS (
-             |  SELECT doc_id, string_split(text, ' ') AS toks
-             |  FROM documents WHERE len(string_split(text, ' ')) >= 10),
-             |hd AS (
-             |  SELECT doc_id, len(toks) AS n_toks,
-             |    list_transform(toks, x -> ${thSql("x")}) AS h
-             |  FROM d),
-             |f AS (SELECT doc_id, n_toks, ${fpSql(10)} AS fps FROM hd),
-             |g AS (SELECT doc_id, n_toks, fps,
-             |        unnest(generate_series(1, len(fps))) AS pos FROM f),
-             |g2 AS (SELECT doc_id, pos, fps[pos] AS fp FROM g),
-             |dup AS (SELECT fp FROM g2 GROUP BY fp HAVING COUNT(*) >= 2),
-             |p AS (SELECT doc_id, pos FROM g2 JOIN dup USING (fp)),
-             |m AS (
-             |  SELECT doc_id, pos,
-             |    MAX(pos + 9) OVER (PARTITION BY doc_id ORDER BY pos
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-             |  FROM p),
-             |i AS (
-             |  SELECT doc_id, pos,
-             |    CASE WHEN prev_end IS NULL OR pos > prev_end + 1 THEN 1 ELSE 0 END AS ni
-             |  FROM m),
-             |isl AS (
-             |  SELECT doc_id, pos,
-             |    SUM(ni) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING)
-             |      AS island
-             |  FROM i),
-             |sp AS (SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + 9 AS e
-             |       FROM isl GROUP BY 1, 2),
-             |per AS (SELECT doc_id, COUNT(*) AS n_dup_spans,
-             |          CAST(SUM(e - s + 1) AS BIGINT) AS dup_tokens
-             |        FROM sp GROUP BY 1)
-             |SELECT hd.doc_id,
-             |  CAST(COALESCE(n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-             |  CAST(COALESCE(dup_tokens, 0) AS BIGINT) AS dup_tokens,
-             |  CAST(n_toks AS BIGINT) AS n_tokens,
-             |  floor(CAST(COALESCE(dup_tokens, 0) AS DOUBLE) / n_toks * 1000000) / 1000000
-             |    AS dup_frac
-             |FROM hd LEFT JOIN per USING (doc_id)
-             |ORDER BY doc_id""".stripMargin),
+      Some(substringSpansSql("fp", "hd", "n_toks",
+        s"""hd AS (
+           |  SELECT doc_id, len(toks) AS n_toks,
+           |    list_transform(toks, x -> ${thSql("x")}) AS h
+           |  FROM d),
+           |f AS (SELECT doc_id, n_toks, ${fpSql(10)} AS fps FROM hd),
+           |g AS (SELECT doc_id, n_toks, fps,
+           |        unnest(generate_series(1, len(fps))) AS pos FROM f),
+           |g2 AS (SELECT doc_id, pos, fps[pos] AS fp FROM g)""".stripMargin)),
       doc = "duplicated-substring spans over 8-byte ROLLING-FINGERPRINT gram keys " +
         "(d19's production twin, Lee et al. §4.1): the gram postings shuffle " +
         "carries one u64 per gram instead of the literal 10-token string — " +
@@ -1492,41 +1632,11 @@ object DedupPack extends QueryPack {
         // manifest a dedup job emits: keep-list + reclaimed bytes per
         // cluster.
         val docs = Tables.documents(s, d)
-        val edges = graft.ops.TokenSets
+        keepManifest(docs, graft.ops.TokenSets
           .jaccardPairs(docs, "doc_id", "source", tokens(col("text")), 0.8)
-          .select(col("a_id").as("src"), col("b_id").as("dst"))
-        val nodes = docs.select(col("doc_id").as("id"))
-        val comp = graft.ops.ConnectedComponents.run(nodes, edges)
-        comp.join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-          .groupBy(col("component"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("n_chars")).as("tot_chars"),
-            min(struct((-col("n_chars")).as("nl"), col("id").as("i"))).as("m"))
-          .filter(col("n_docs") >= 2)
-          .select(col("component"), col("n_docs"),
-            col("m.i").as("keep_id"), (-col("m.nl")).as("keep_chars"),
-            (col("tot_chars") - (-col("m.nl"))).as("dropped_chars"))
-          .orderBy(col("component"))
+          .select(col("a_id").as("src"), col("b_id").as("dst")))
       },
-      Some(s"""$ccSql,
-             |j AS (SELECT cc.component, d.doc_id, d.n_chars
-             |      FROM cc JOIN documents d USING (doc_id)),
-             |ag AS (
-             |  SELECT component, COUNT(*) AS n_docs,
-             |    CAST(SUM(n_chars) AS BIGINT) AS tot_chars
-             |  FROM j GROUP BY component),
-             |keep AS (
-             |  SELECT component, doc_id AS keep_id, n_chars AS keep_chars FROM (
-             |    SELECT component, doc_id, n_chars,
-             |      ROW_NUMBER() OVER (PARTITION BY component
-             |                         ORDER BY n_chars DESC, doc_id) AS rn
-             |    FROM j) t WHERE rn = 1)
-             |SELECT ag.component, ag.n_docs, keep.keep_id, keep.keep_chars,
-             |  ag.tot_chars - keep.keep_chars AS dropped_chars
-             |FROM ag JOIN keep USING (component)
-             |WHERE ag.n_docs >= 2
-             |ORDER BY ag.component""".stripMargin),
+      Some(keepManifestSql(ccSql, "d")),
       doc = "dedup keep-list: per near-dup cluster (d10's CC graph) pick the " +
         "longest-text representative (deterministic min(struct(-len, id)) " +
         "argmax, no corpus window) and account reclaimed chars — the manifest " +
@@ -1580,39 +1690,9 @@ object DedupPack extends QueryPack {
         // curves (d24 inherits d10's density-quadratic edges, this stays
         // near-linear).
         val docs = Tables.documents(s, d)
-        val verified = lshVerifiedEdges(docs)
-        val nodes = docs.select(col("doc_id").as("id"))
-        val comp = graft.ops.ConnectedComponents.run(nodes, verified)
-        comp.join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-          .groupBy(col("component"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("n_chars")).as("tot_chars"),
-            min(struct((-col("n_chars")).as("nl"), col("id").as("i"))).as("m"))
-          .filter(col("n_docs") >= 2)
-          .select(col("component"), col("n_docs"),
-            col("m.i").as("keep_id"), (-col("m.nl")).as("keep_chars"),
-            (col("tot_chars") - (-col("m.nl"))).as("dropped_chars"))
-          .orderBy(col("component"))
+        keepManifest(docs, lshVerifiedEdges(docs))
       },
-      Some(s"""$lshCcSql,
-           |j AS (SELECT cc.component, dd.doc_id, dd.n_chars
-           |      FROM cc JOIN documents dd USING (doc_id)),
-           |ag AS (
-           |  SELECT component, COUNT(*) AS n_docs,
-           |    CAST(SUM(n_chars) AS BIGINT) AS tot_chars
-           |  FROM j GROUP BY component),
-           |keep AS (
-           |  SELECT component, doc_id AS keep_id, n_chars AS keep_chars FROM (
-           |    SELECT component, doc_id, n_chars,
-           |      ROW_NUMBER() OVER (PARTITION BY component
-           |                         ORDER BY n_chars DESC, doc_id) AS rn
-           |    FROM j) t WHERE rn = 1)
-           |SELECT ag.component, ag.n_docs, keep.keep_id, keep.keep_chars,
-           |  ag.tot_chars - keep.keep_chars AS dropped_chars
-           |FROM ag JOIN keep USING (component)
-           |WHERE ag.n_docs >= 2
-           |ORDER BY ag.component""".stripMargin),
+      Some(keepManifestSql(lshCcSql, "dd")),
       doc = "end-to-end dedup scale path: d24's keep-manifest (representative " +
         "+ reclaimed chars) over d25's LSH-verified edges — every stage " +
         "corpus-linear, keeper argmax one component-keyed aggregate"
@@ -1702,32 +1782,18 @@ object DedupPack extends QueryPack {
         // the deterministic candidate set is replicated exactly in the
         // oracle, and n_cand_prior rides in the output so the artifact
         // shows the bounded candidate volume. Zero-norm guard as s19/s20.
-        import graft.functions.VectorOps.{dot, lshBucketAt, norm}
+        import graft.functions.VectorOps.{lshBucketAt, norm}
         val K = 12
         val L = 4
         val masks = 0L +: (0 until K).map(b => 1L << b)
         val e = Tables.embeddings(s, d).select(
           Seq(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm")) ++
             (0 until L).map(t => lshBucketAt(col("embedding"), K, t * K).as(s"wb$t")): _*)
-        val idx = e
-          .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"), col("nrm").as("b_nrm"),
-            explode(array((0 until L).map(t =>
-              struct(lit(t).as("tbl"), col(s"wb$t").as("bucket"))): _*)).as("tb"))
-          .select(col("b_id"), col("b_emb"), col("b_nrm"),
-            col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val probes = e
-          .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"), col("nrm").as("a_nrm"),
-            explode(array((for { t <- 0 until L; m <- masks } yield
-              struct(lit(t).as("tbl"), col(s"wb$t").bitwiseXOR(lit(m)).as("bucket"))): _*)).as("tb"))
-          .select(col("a_id"), col("a_emb"), col("a_nrm"),
-            col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val cand = idx.join(probes, Seq("tbl", "bucket"))
-          .filter(col("b_id") < col("a_id"))
-          .select(col("a_id"), col("b_id"),
-            quant(dot(col("a_emb"), col("b_emb")) /
-              when(col("a_nrm") * col("b_nrm") > 0.0, col("a_nrm") * col("b_nrm")), 1e6)
-              .as("cos_sim"))
-          .filter(col("cos_sim").isNotNull)
+        val cand = lshCosineCands(e,
+          array((0 until L).map(t =>
+            struct(lit(t).as("tbl"), col(s"wb$t").as("bucket"))): _*),
+          array((for { t <- 0 until L; m <- masks } yield
+            struct(lit(t).as("tbl"), col(s"wb$t").bitwiseXOR(lit(m)).as("bucket"))): _*))
           .distinct()
         val best = cand.groupBy(col("a_id"))
           .agg(count(lit(1)).as("n_cand_prior"), max(col("cos_sim")).as("best_prior_sim"))
@@ -1742,22 +1808,9 @@ object DedupPack extends QueryPack {
           .orderBy(col("vec_id"))
       },
       Some {
-        def planeSql(j: Int) =
-          s"list_sum(list_transform(emb, (x, i) -> CAST(x AS DOUBLE) * (((($j*64 + (i-1)) * 2654435761) % 1000000007) / 1000000000.0 - 0.5)))"
-        def bucketAt(k: Int, offset: Int): String = (0 until k)
-          .map(b => s"CASE WHEN ${planeSql(offset + b)} > 0 THEN ${1L << b} ELSE 0 END")
-          .mkString(" + ")
-        val wcols = (0 until 4)
-          .map(t => s"CAST(${bucketAt(12, t * 12)} AS BIGINT) AS wb$t")
-          .mkString(",\n    ")
+        val wcols = LshCodes.pinnedColsSql("wb").mkString(",\n    ")
         val tcase = "CASE t.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
         val pcase = "CASE p.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
-        val probeRows = (for { t <- 0 until 4; m <- 0L +: (0 until 12).map(b => 1L << b) }
-          yield s"($t,$m)").mkString(",")
-        val dotS = "list_sum(list_transform(list_zip(i.b_emb, p.a_emb), " +
-          "z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
-        def normS(c: String) =
-          s"sqrt(list_sum(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
         s"""WITH e AS (
            |  SELECT vec_id, emb AS embedding,
            |    $wcols
@@ -1768,19 +1821,8 @@ object DedupPack extends QueryPack {
            |pr AS (
            |  SELECT e.vec_id AS a_id, e.embedding AS a_emb, p.tbl,
            |    xor($pcase, p.m) AS bucket
-           |  FROM e, (VALUES $probeRows) p(tbl, m)),
-           |cand AS (
-           |  SELECT DISTINCT a_id, b_id, cos_sim FROM (
-           |    SELECT p.a_id, i.b_id,
-           |      floor($dotS /
-           |            nullif(${normS("i.b_emb")} * ${normS("p.a_emb")}, 0) * 1000000)
-           |        / 1000000 AS cos_sim
-           |    FROM idx i JOIN pr p
-           |      ON i.tbl = p.tbl AND i.bucket = p.bucket AND i.b_id < p.a_id) t
-           |  WHERE cos_sim IS NOT NULL),
-           |best AS (
-           |  SELECT a_id, COUNT(*) AS n_cand_prior, MAX(cos_sim) AS best_prior_sim
-           |  FROM cand GROUP BY a_id)
+           |  FROM e, (VALUES ${LshCodes.pinnedProbeRows}) p(tbl, m)),
+           |$semDedupCandSql
            |SELECT e.vec_id, COALESCE(n_cand_prior, 0) AS n_cand_prior, best_prior_sim,
            |  COALESCE(best_prior_sim >= 0.85, FALSE) AS is_sem_dup
            |FROM e LEFT JOIN best ON e.vec_id = best.a_id
@@ -1794,133 +1836,8 @@ object DedupPack extends QueryPack {
     // ---------------------------------------------------------------- d29
     Q(
       "d29_semdedup_adaptive",
-      (s, d) => {
-        // SemDeDup with a CORPUS-ADAPTIVE code width — the g12 pattern
-        // (derive the key space from a broadcast count IN-PLAN) applied to
-        // hyperplane LSH. d28 widened d14's 4 cells to 4 tables x 2^12, but
-        // any pinned k re-densifies eventually (measured: d28's marginal
-        // bends up at 20x as cells fill). Here k = len(bin(ceil(n/8)))
-        // clamped to [4,16] — an INTEGER-EXACT formula both engines
-        // evaluate identically (no float log2 at a cell boundary) — so
-        // per-cell density stays ~8 vectors per table at ANY corpus size
-        // while the probe fan-out grows only as k (Hamming-1 over k
-        // planes). Plane dots ride the same deterministic hash family
-        // (disjoint offsets t*20+b), expressed as nested HOFs over the
-        // runtime k on both engines; candidates, zero-norm guard, and
-        // keep-lowest-id semantics are exactly d28's.
-        import graft.functions.VectorOps.{dot, norm}
-        import graft.functions.VectorExpressions.lshBucketDyn
-        val kdf = Tables.embeddings(s, d)
-          .agg(count(lit(1)).as("n"))
-          .select(expr("GREATEST(4, LEAST(16, length(bin((n + 7) DIV 8)))) AS k"))
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("embedding"))
-          .crossJoin(broadcast(kdf))
-          .select(
-            Seq(col("vec_id"), col("embedding"), col("k"), norm(col("embedding")).as("nrm")) ++
-              // compiled dynamic-k kernel — bit-identical to the oracle's
-              // nested-HOF spelling (same left-to-right plane dots), one
-              // tight loop instead of a 64-element array per plane per row
-              (0 until 4).map(t => lshBucketDyn(col("embedding"), col("k"), t * 20).as(s"wb$t")): _*)
-        val idxArr = (0 until 4)
-          .map(t => s"named_struct('tbl', $t, 'bucket', wb$t)")
-          .mkString("array(", ", ", ")")
-        val probeArr = (0 until 4)
-          .map(t => s"""transform(sequence(0, k), p -> named_struct('tbl', $t,
-             |  'bucket', CASE WHEN p = 0 THEN wb$t
-             |            ELSE wb$t ^ shiftleft(CAST(1 AS BIGINT), p - 1) END))""".stripMargin)
-          .mkString("concat(", ", ", ")")
-        val idx = e
-          .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"), col("nrm").as("b_nrm"),
-            explode(expr(idxArr)).as("tb"))
-          .select(col("b_id"), col("b_emb"), col("b_nrm"),
-            col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val probes = e
-          .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"), col("nrm").as("a_nrm"),
-            explode(expr(probeArr)).as("tb"))
-          .select(col("a_id"), col("a_emb"), col("a_nrm"),
-            col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val cand = idx.join(probes, Seq("tbl", "bucket"))
-          .filter(col("b_id") < col("a_id"))
-          .select(col("a_id"), col("b_id"),
-            quant(dot(col("a_emb"), col("b_emb")) /
-              when(col("a_nrm") * col("b_nrm") > 0.0, col("a_nrm") * col("b_nrm")), 1e6)
-              .as("cos_sim"))
-          .filter(col("cos_sim").isNotNull)
-        // countDistinct, NOT distinct()-then-count: cos_sim is a pure
-        // function of (a_id, b_id), so the distinct pair count and the max
-        // over duplicates are unchanged — but the global DISTINCT was a
-        // second full-width exchange of the pair stream (50M rows at 20x,
-        // where multi-probe emits each true pair up to 4x(k+1) times) ON
-        // TOP of the groupBy's own shuffle. One aggregate does both dedup
-        // and fold with map-side partial aggregation (the D29Decomp probe,
-        // since deleted — source at commit a7c9aea — attributes the 20x
-        // marginal to exactly this stage; the pair VOLUME itself is
-        // true duplicate mass — sharded corpora collide exact-dup codes at
-        // any k — so the fix pays once per pair, never pretends fewer
-        // exist). d28/d14 keep the literal DISTINCT as registered baselines.
-        val best = cand.groupBy(col("a_id"))
-          .agg(countDistinct(col("b_id")).as("n_cand_prior"),
-            max(col("cos_sim")).as("best_prior_sim"))
-        val ids = e.select(col("vec_id"), col("k").cast("long").as("k_planes"))
-        ids
-          .join(best, ids("vec_id") === best("a_id"), "left")
-          .select(
-            col("vec_id"),
-            col("k_planes"),
-            coalesce(col("n_cand_prior"), lit(0L)).as("n_cand_prior"),
-            col("best_prior_sim"),
-            coalesce(col("best_prior_sim") >= 0.85, lit(false)).as("is_sem_dup"))
-          .orderBy(col("vec_id"))
-      },
-      Some {
-        def wbSql(t: Int): String = {
-          val j = s"((${t * 20} + b) * 64 + (i - 1))"
-          s"""CAST(list_sum(list_transform(generate_series(0, k - 1), b ->
-             |    CASE WHEN list_sum(list_transform(emb, (x, i) ->
-             |        CAST(x AS DOUBLE) * ((($j * 2654435761) % 1000000007) / 1000000000.0 - 0.5))) > 0
-             |      THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END)) AS BIGINT)""".stripMargin
-        }
-        val wcols = (0 until 4).map(t => s"${wbSql(t)} AS wb$t").mkString(",\n    ")
-        val tcase = "CASE t.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
-        val dotS = "list_sum(list_transform(list_zip(i.b_emb, p.a_emb), " +
-          "z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
-        def normS(c: String) =
-          s"sqrt(list_sum(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        s"""WITH kk AS (
-           |  SELECT GREATEST(4, LEAST(16, length(bin((COUNT(*) + 7) // 8)))) AS k
-           |  FROM embeddings),
-           |e AS (
-           |  SELECT vec_id, emb AS embedding, k,
-           |    $wcols
-           |  FROM (SELECT vec_id, embedding AS emb FROM embeddings), kk),
-           |idx AS (
-           |  SELECT e.vec_id AS b_id, e.embedding AS b_emb, t.tbl, $tcase AS bucket
-           |  FROM e, (SELECT unnest([0,1,2,3]) AS tbl) t),
-           |pr AS (
-           |  SELECT e.vec_id AS a_id, e.embedding AS a_emb, t.tbl,
-           |    CASE WHEN pp.p = 0 THEN $tcase
-           |         ELSE xor($tcase, CAST(1 AS BIGINT) << (pp.p - 1)) END AS bucket
-           |  FROM e, (SELECT unnest([0,1,2,3]) AS tbl) t,
-           |       (SELECT unnest(generate_series(0, (SELECT k FROM kk))) AS p) pp),
-           |cand AS (
-           |  SELECT DISTINCT a_id, b_id, cos_sim FROM (
-           |    SELECT p.a_id, i.b_id,
-           |      floor($dotS /
-           |            nullif(${normS("i.b_emb")} * ${normS("p.a_emb")}, 0) * 1000000)
-           |        / 1000000 AS cos_sim
-           |    FROM idx i JOIN pr p
-           |      ON i.tbl = p.tbl AND i.bucket = p.bucket AND i.b_id < p.a_id) t
-           |  WHERE cos_sim IS NOT NULL),
-           |best AS (
-           |  SELECT a_id, COUNT(*) AS n_cand_prior, MAX(cos_sim) AS best_prior_sim
-           |  FROM cand GROUP BY a_id)
-           |SELECT e.vec_id, CAST(e.k AS BIGINT) AS k_planes,
-           |  COALESCE(n_cand_prior, 0) AS n_cand_prior, best_prior_sim,
-           |  COALESCE(best_prior_sim >= 0.85, FALSE) AS is_sem_dup
-           |FROM e LEFT JOIN best ON e.vec_id = best.a_id
-           |ORDER BY e.vec_id""".stripMargin
-      },
+      (s, d) => semDedupAdaptive(s, d, cap = None),
+      Some(semDedupAdaptiveSql(cap = None)),
       doc = "SemDeDup with corpus-adaptive code width (the g12 pattern for " +
         "hyperplane LSH): k = len(bin(ceil(n/8))) planes per table derived " +
         "in-plan from a broadcast count — integer-exact on both engines — so " +
@@ -1932,136 +1849,25 @@ object DedupPack extends QueryPack {
     // ------------------------------------------------- d32 capped semdedup
     Q(
       "d32_semdedup_capped",
-      (s, d) => {
-        // d29 hardened against SKEWED cells — the failure mode the 100×
-        // (sf10) decade measured on d29 itself: candidate pairs grew 3.05×
-        // for 2× vectors (D29Decomp, deleted; source at commit a7c9aea:
-        // 252M → 767M, cell_max 1223 → 2320 at
-        // stable ~10 avg density) because one extra adaptive plane halves a
-        // UNIFORM background but shrinks a skew-concentrated one only
-        // ~1.33×. The fix is the standard bounded-verification-set trick:
-        // each (table, cell)'s INDEX side keeps only its C=32 lowest-id
-        // entries (deterministic, oracle-replicable), so per-cell join cost
-        // is density×C instead of density², killing the quadratic skew term
-        // while preserving SemDeDup's keep-lowest-exemplar recall where it
-        // matters — a hot cell IS a near-dup cluster, and the cluster's
-        // exemplar (its lowest id) is by construction inside the capped
-        // set. On cells at or below the cap (every cell at the committed
-        // sf0.01–sf1 gates) the candidate set — and therefore the whole
-        // output — is IDENTICAL to d29's (SemDedupCapSpec proves it
-        // cell-exact); k, probes, zero-norm guard, output shape unchanged.
-        import graft.functions.VectorOps.{dot, norm}
-        import graft.functions.VectorExpressions.lshBucketDyn
-        val C = 32
-        val kdf = Tables.embeddings(s, d)
-          .agg(count(lit(1)).as("n"))
-          .select(expr("GREATEST(4, LEAST(16, length(bin((n + 7) DIV 8)))) AS k"))
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("embedding"))
-          .crossJoin(broadcast(kdf))
-          .select(
-            Seq(col("vec_id"), col("embedding"), col("k"), norm(col("embedding")).as("nrm")) ++
-              (0 until 4).map(t => lshBucketDyn(col("embedding"), col("k"), t * 20).as(s"wb$t")): _*)
-        val idxArr = (0 until 4)
-          .map(t => s"named_struct('tbl', $t, 'bucket', wb$t)")
-          .mkString("array(", ", ", ")")
-        val probeArr = (0 until 4)
-          .map(t => s"""transform(sequence(0, k), p -> named_struct('tbl', $t,
-             |  'bucket', CASE WHEN p = 0 THEN wb$t
-             |            ELSE wb$t ^ shiftleft(CAST(1 AS BIGINT), p - 1) END))""".stripMargin)
-          .mkString("concat(", ", ", ")")
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("tbl"), col("bucket")).orderBy(col("b_id"))
-        val idx = e
-          .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"), col("nrm").as("b_nrm"),
-            explode(expr(idxArr)).as("tb"))
-          .select(col("b_id"), col("b_emb"), col("b_nrm"),
-            col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-          // the cap: one hash exchange on the cell key (the SAME key the
-          // candidate join shuffles on) + in-partition sort; b_id is unique
-          // so the order — and the kept set — is total and deterministic
-          .withColumn("rn", row_number().over(win))
-          .filter(col("rn") <= C)
-          .drop("rn")
-        val probes = e
-          .select(col("vec_id").as("a_id"), col("embedding").as("a_emb"), col("nrm").as("a_nrm"),
-            explode(expr(probeArr)).as("tb"))
-          .select(col("a_id"), col("a_emb"), col("a_nrm"),
-            col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val cand = idx.join(probes, Seq("tbl", "bucket"))
-          .filter(col("b_id") < col("a_id"))
-          .select(col("a_id"), col("b_id"),
-            quant(dot(col("a_emb"), col("b_emb")) /
-              when(col("a_nrm") * col("b_nrm") > 0.0, col("a_nrm") * col("b_nrm")), 1e6)
-              .as("cos_sim"))
-          .filter(col("cos_sim").isNotNull)
-        val best = cand.groupBy(col("a_id"))
-          .agg(countDistinct(col("b_id")).as("n_cand_prior"),
-            max(col("cos_sim")).as("best_prior_sim"))
-        val ids = e.select(col("vec_id"), col("k").cast("long").as("k_planes"))
-        ids
-          .join(best, ids("vec_id") === best("a_id"), "left")
-          .select(
-            col("vec_id"),
-            col("k_planes"),
-            coalesce(col("n_cand_prior"), lit(0L)).as("n_cand_prior"),
-            col("best_prior_sim"),
-            coalesce(col("best_prior_sim") >= 0.85, lit(false)).as("is_sem_dup"))
-          .orderBy(col("vec_id"))
-      },
-      Some {
-        def wbSql(t: Int): String = {
-          val j = s"((${t * 20} + b) * 64 + (i - 1))"
-          s"""CAST(list_sum(list_transform(generate_series(0, k - 1), b ->
-             |    CASE WHEN list_sum(list_transform(emb, (x, i) ->
-             |        CAST(x AS DOUBLE) * ((($j * 2654435761) % 1000000007) / 1000000000.0 - 0.5))) > 0
-             |      THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END)) AS BIGINT)""".stripMargin
-        }
-        val wcols = (0 until 4).map(t => s"${wbSql(t)} AS wb$t").mkString(",\n    ")
-        val tcase = "CASE t.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
-        val dotS = "list_sum(list_transform(list_zip(i.b_emb, p.a_emb), " +
-          "z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))"
-        def normS(c: String) =
-          s"sqrt(list_sum(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        s"""WITH kk AS (
-           |  SELECT GREATEST(4, LEAST(16, length(bin((COUNT(*) + 7) // 8)))) AS k
-           |  FROM embeddings),
-           |e AS (
-           |  SELECT vec_id, emb AS embedding, k,
-           |    $wcols
-           |  FROM (SELECT vec_id, embedding AS emb FROM embeddings), kk),
-           |idx0 AS (
-           |  SELECT e.vec_id AS b_id, e.embedding AS b_emb, t.tbl, $tcase AS bucket
-           |  FROM e, (SELECT unnest([0,1,2,3]) AS tbl) t),
-           |idx AS (
-           |  SELECT b_id, b_emb, tbl, bucket FROM (
-           |    SELECT b_id, b_emb, tbl, bucket,
-           |      ROW_NUMBER() OVER (PARTITION BY tbl, bucket ORDER BY b_id) AS rn
-           |    FROM idx0) c WHERE rn <= 32),
-           |pr AS (
-           |  SELECT e.vec_id AS a_id, e.embedding AS a_emb, t.tbl,
-           |    CASE WHEN pp.p = 0 THEN $tcase
-           |         ELSE xor($tcase, CAST(1 AS BIGINT) << (pp.p - 1)) END AS bucket
-           |  FROM e, (SELECT unnest([0,1,2,3]) AS tbl) t,
-           |       (SELECT unnest(generate_series(0, (SELECT k FROM kk))) AS p) pp),
-           |cand AS (
-           |  SELECT DISTINCT a_id, b_id, cos_sim FROM (
-           |    SELECT p.a_id, i.b_id,
-           |      floor($dotS /
-           |            nullif(${normS("i.b_emb")} * ${normS("p.a_emb")}, 0) * 1000000)
-           |        / 1000000 AS cos_sim
-           |    FROM idx i JOIN pr p
-           |      ON i.tbl = p.tbl AND i.bucket = p.bucket AND i.b_id < p.a_id) t
-           |  WHERE cos_sim IS NOT NULL),
-           |best AS (
-           |  SELECT a_id, COUNT(*) AS n_cand_prior, MAX(cos_sim) AS best_prior_sim
-           |  FROM cand GROUP BY a_id)
-           |SELECT e.vec_id, CAST(e.k AS BIGINT) AS k_planes,
-           |  COALESCE(n_cand_prior, 0) AS n_cand_prior, best_prior_sim,
-           |  COALESCE(best_prior_sim >= 0.85, FALSE) AS is_sem_dup
-           |FROM e LEFT JOIN best ON e.vec_id = best.a_id
-           |ORDER BY e.vec_id""".stripMargin
-      },
+      // d29 hardened against SKEWED cells — the failure mode the 100×
+      // (sf10) decade measured on d29 itself: candidate pairs grew 3.05×
+      // for 2× vectors (D29Decomp, deleted; source at commit a7c9aea:
+      // 252M → 767M, cell_max 1223 → 2320 at
+      // stable ~10 avg density) because one extra adaptive plane halves a
+      // UNIFORM background but shrinks a skew-concentrated one only
+      // ~1.33×. The fix is the standard bounded-verification-set trick:
+      // each (table, cell)'s INDEX side keeps only its C=32 lowest-id
+      // entries (deterministic, oracle-replicable), so per-cell join cost
+      // is density×C instead of density², killing the quadratic skew term
+      // while preserving SemDeDup's keep-lowest-exemplar recall where it
+      // matters — a hot cell IS a near-dup cluster, and the cluster's
+      // exemplar (its lowest id) is by construction inside the capped
+      // set. On cells at or below the cap (every cell at the committed
+      // sf0.01–sf1 gates) the candidate set — and therefore the whole
+      // output — is IDENTICAL to d29's (SemDedupCapSpec proves it
+      // cell-exact); k, probes, zero-norm guard, output shape unchanged.
+      (s, d) => semDedupAdaptive(s, d, cap = Some(32)),
+      Some(semDedupAdaptiveSql(cap = Some(32))),
       doc = "SemDeDup with skew-capped cells — d29 plus a deterministic " +
         "C=32 lowest-id verification cap per (table, cell): per-cell join " +
         "cost density×C instead of density² (the sf10 decade measured d29's " +
@@ -2095,11 +1901,8 @@ object DedupPack extends QueryPack {
           .select(posexplode(array((0 until 4).map(k =>
             shiftright(col("sim"), 15 * k) % 32768): _*)))
           .select(col("pos").as("g1"), col("col").as("g2"))
-        val kdf = Tables.embeddings(s, d)
-          .agg(count(lit(1)).as("n"))
-          .select(expr("GREATEST(4, LEAST(16, length(bin((n + 7) DIV 8)))) AS k"))
         val cells = Tables.embeddings(s, d)
-          .select(col("embedding")).crossJoin(broadcast(kdf))
+          .select(col("embedding")).crossJoin(broadcast(LshCodes.adaptiveK(Tables.embeddings(s, d))))
           .select(posexplode(array((0 until 4).map(t =>
             lshBucketDyn(col("embedding"), col("k"), t * 20)): _*)))
           .select(col("pos").as("g1"), col("col").as("g2"))
@@ -2138,14 +1941,6 @@ object DedupPack extends QueryPack {
         val bits = (0 until 60).map { b =>
           s"(CASE WHEN SUM(CASE WHEN (v >> $b) % 2 = 1 THEN 1 ELSE -1 END) > 0 THEN ${1L << b} ELSE 0 END)"
         }.mkString(" + ")
-        def wbSql(t: Int): String = {
-          val j = s"((${t * 20} + b) * 64 + (i - 1))"
-          s"""CAST(list_sum(list_transform(generate_series(0, k - 1), b ->
-             |    CASE WHEN list_sum(list_transform(emb, (x, i) ->
-             |        CAST(x AS DOUBLE) * ((($j * 2654435761) % 1000000007) / 1000000000.0 - 0.5))) > 0
-             |      THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END)) AS BIGINT)""".stripMargin
-        }
-        val wcols = (0 until 4).map(t => s"${wbSql(t)} AS wb$t").mkString(",\n    ")
         val tcase = "CASE t.g1 WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
         s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS x FROM documents),
            |th AS (SELECT doc_id, ${thSql("x")} AS v FROM tok),
@@ -2154,12 +1949,10 @@ object DedupPack extends QueryPack {
            |sims AS (SELECT doc_id, CAST($bits AS BIGINT) AS sim FROM tv GROUP BY doc_id),
            |sb AS (SELECT b.g1, (sim >> (15 * b.g1)) % 32768 AS g2
            |       FROM sims, (SELECT unnest([0,1,2,3]) AS g1) b),
-           |kk AS (
-           |  SELECT GREATEST(4, LEAST(16, length(bin((COUNT(*) + 7) // 8)))) AS k
-           |  FROM embeddings),
+           |${LshCodes.adaptiveKSql("embeddings")},
            |e AS (
            |  SELECT vec_id, k,
-           |    $wcols
+           |    ${LshCodes.adaptiveColsSql("wb").mkString(",\n    ")}
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings), kk),
            |ec AS (SELECT t.g1, $tcase AS g2
            |       FROM e, (SELECT unnest([0,1,2,3]) AS g1) t),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.GeoExpressions
@@ -53,6 +54,49 @@ object GeoPack extends QueryPack {
     ((0 until 9).map(i => s"(((x >> $i) & 1) * ${1L << (2 * i)})") ++
       (0 until 8).map(i => s"(((y >> $i) & 1) * ${1L << (2 * i + 1)})"))
       .mkString(" + ")
+
+  /** g6/g12's grid kNN: supplier "stations" (qx, qy) find their 3 nearest
+    * customer points (x, y) via `knn`, the grid-blocked kNN operator with
+    * its cell size. Integer coordinates make dist² exact longs: no sqrt, no
+    * parity risk, ranks pinned by the customer key tiebreak.
+    */
+  private def gridKnn(s: SparkSession, d: String)(
+      knn: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val sp = Tables.supplier(s, d).select(
+      col("s_suppkey"),
+      ((col("s_suppkey") * 17) % 360).as("qx"),
+      ((col("s_suppkey") * 23) % 170).as("qy"))
+    val cp = Tables.customer(s, d).select(
+      col("c_custkey"),
+      ((col("c_custkey") * 29) % 360).as("x"),
+      ((col("c_custkey") * 31) % 170).as("y"))
+    knn(sp, cp)
+      .select(col("s_suppkey"), col("rn"), col("c_custkey"), col("dist2"))
+      .orderBy(col("s_suppkey"), col("rn"))
+  }
+
+  /** DuckDB twin of [[gridKnn]]: `cellCtes` precede the point CTEs, `cross`
+    * joins them into the pair scan, and `cell` is the cell-size expression.
+    */
+  private def gridKnnSql(cellCtes: String, cross: String, cell: String): String =
+    s"""WITH ${cellCtes}sp AS (
+       |  SELECT s_suppkey, (s_suppkey*17)%360 AS sx, (s_suppkey*23)%170 AS sy FROM supplier),
+       |cp AS (
+       |  SELECT c_custkey, (c_custkey*29)%360 AS cx, (c_custkey*31)%170 AS cy FROM customer),
+       |pairs AS (
+       |  SELECT s_suppkey, c_custkey,
+       |    (sx-cx)*(sx-cx) + (sy-cy)*(sy-cy) AS dist2
+       |  FROM sp ${cross}JOIN cp
+       |    ON CAST(floor(cx/$cell) AS BIGINT)
+       |         BETWEEN CAST(floor(sx/$cell) AS BIGINT) - 1 AND CAST(floor(sx/$cell) AS BIGINT) + 1
+       |   AND CAST(floor(cy/$cell) AS BIGINT)
+       |         BETWEEN CAST(floor(sy/$cell) AS BIGINT) - 1 AND CAST(floor(sy/$cell) AS BIGINT) + 1),
+       |r AS (
+       |  SELECT s_suppkey, c_custkey, dist2,
+       |    row_number() OVER (PARTITION BY s_suppkey ORDER BY dist2, c_custkey) AS rn
+       |  FROM pairs)
+       |SELECT s_suppkey, rn, c_custkey, dist2 FROM r WHERE rn <= 3
+       |ORDER BY s_suppkey, rn""".stripMargin
 
   override def queries: Seq[Q] = Seq(
     // ------------------------------------------------------ g1 grid spatial join
@@ -172,37 +216,10 @@ object GeoPack extends QueryPack {
         // pair meets at most once, candidates are a plain cell equi-join).
         // Integer coordinates make dist² exact longs: no sqrt, no parity
         // risk, ranks pinned by the customer key tiebreak.
-        val sp = Tables.supplier(s, d).select(
-          col("s_suppkey"),
-          ((col("s_suppkey") * 17) % 360).as("qx"),
-          ((col("s_suppkey") * 23) % 170).as("qy"))
-        val cp = Tables.customer(s, d).select(
-          col("c_custkey"),
-          ((col("c_custkey") * 29) % 360).as("x"),
-          ((col("c_custkey") * 31) % 170).as("y"))
-        graft.ops.SpatialJoin
-          .knnInGrid(sp, cp, cellSize = 30.0, k = 3, keyCol = "s_suppkey", tie = col("c_custkey"))
-          .select(col("s_suppkey"), col("rn"), col("c_custkey"), col("dist2"))
-          .orderBy(col("s_suppkey"), col("rn"))
+        gridKnn(s, d)(SpatialJoin.knnInGrid(_, _, cellSize = 30.0, k = 3,
+          keyCol = "s_suppkey", tie = col("c_custkey")))
       },
-      Some("""WITH sp AS (
-             |  SELECT s_suppkey, (s_suppkey*17)%360 AS sx, (s_suppkey*23)%170 AS sy FROM supplier),
-             |cp AS (
-             |  SELECT c_custkey, (c_custkey*29)%360 AS cx, (c_custkey*31)%170 AS cy FROM customer),
-             |pairs AS (
-             |  SELECT s_suppkey, c_custkey,
-             |    (sx-cx)*(sx-cx) + (sy-cy)*(sy-cy) AS dist2
-             |  FROM sp JOIN cp
-             |    ON CAST(floor(cx/30.0) AS BIGINT)
-             |         BETWEEN CAST(floor(sx/30.0) AS BIGINT) - 1 AND CAST(floor(sx/30.0) AS BIGINT) + 1
-             |   AND CAST(floor(cy/30.0) AS BIGINT)
-             |         BETWEEN CAST(floor(sy/30.0) AS BIGINT) - 1 AND CAST(floor(sy/30.0) AS BIGINT) + 1),
-             |r AS (
-             |  SELECT s_suppkey, c_custkey, dist2,
-             |    row_number() OVER (PARTITION BY s_suppkey ORDER BY dist2, c_custkey) AS rn
-             |  FROM pairs)
-             |SELECT s_suppkey, rn, c_custkey, dist2 FROM r WHERE rn <= 3
-             |ORDER BY s_suppkey, rn""".stripMargin),
+      Some(gridKnnSql("", "", "30.0")),
       doc = "grid-blocked spatial kNN (3 nearest customers per supplier station " +
         "within the 3×3 cell neighborhood) — cell equi-join candidates, exact " +
         "integer dist², per-query rank windows that scale with the query count; BASELINE RUNG (COVERAGE.md registry) — production path at scale: g12_adaptive_knn"
@@ -292,42 +309,15 @@ object GeoPack extends QueryPack {
         // configuration a standing corpus actually runs, and its oracle
         // recomputes the identical cell from the identical formula
         // (floor∘sqrt on IEEE doubles is engine-reproducible).
-        val sp = Tables.supplier(s, d).select(
-          col("s_suppkey"),
-          ((col("s_suppkey") * 17) % 360).as("qx"),
-          ((col("s_suppkey") * 23) % 170).as("qy"))
-        val cp = Tables.customer(s, d).select(
-          col("c_custkey"),
-          ((col("c_custkey") * 29) % 360).as("x"),
-          ((col("c_custkey") * 31) % 170).as("y"))
-        graft.ops.SpatialJoin
-          .knnInGridAdaptive(sp, cp, domainArea = 360.0 * 170.0,
-            targetPerCell = 8, k = 3, keyCol = "s_suppkey", tie = col("c_custkey"))
-          .select(col("s_suppkey"), col("rn"), col("c_custkey"), col("dist2"))
-          .orderBy(col("s_suppkey"), col("rn"))
+        gridKnn(s, d)(SpatialJoin.knnInGridAdaptive(_, _, domainArea = 360.0 * 170.0,
+          targetPerCell = 8, k = 3, keyCol = "s_suppkey", tie = col("c_custkey")))
       },
-      Some("""WITH g AS (
-             |  SELECT LEAST(64.0, GREATEST(1.0,
-             |           FLOOR(SQRT(360.0 * 170.0 * 8 / COUNT(*))))) AS cell
-             |  FROM customer),
-             |sp AS (
-             |  SELECT s_suppkey, (s_suppkey*17)%360 AS sx, (s_suppkey*23)%170 AS sy FROM supplier),
-             |cp AS (
-             |  SELECT c_custkey, (c_custkey*29)%360 AS cx, (c_custkey*31)%170 AS cy FROM customer),
-             |pairs AS (
-             |  SELECT s_suppkey, c_custkey,
-             |    (sx-cx)*(sx-cx) + (sy-cy)*(sy-cy) AS dist2
-             |  FROM sp CROSS JOIN g JOIN cp
-             |    ON CAST(floor(cx/cell) AS BIGINT)
-             |         BETWEEN CAST(floor(sx/cell) AS BIGINT) - 1 AND CAST(floor(sx/cell) AS BIGINT) + 1
-             |   AND CAST(floor(cy/cell) AS BIGINT)
-             |         BETWEEN CAST(floor(sy/cell) AS BIGINT) - 1 AND CAST(floor(sy/cell) AS BIGINT) + 1),
-             |r AS (
-             |  SELECT s_suppkey, c_custkey, dist2,
-             |    row_number() OVER (PARTITION BY s_suppkey ORDER BY dist2, c_custkey) AS rn
-             |  FROM pairs)
-             |SELECT s_suppkey, rn, c_custkey, dist2 FROM r WHERE rn <= 3
-             |ORDER BY s_suppkey, rn""".stripMargin),
+      Some(gridKnnSql(
+        """g AS (
+          |  SELECT LEAST(64.0, GREATEST(1.0,
+          |           FLOOR(SQRT(360.0 * 170.0 * 8 / COUNT(*))))) AS cell
+          |  FROM customer),
+          |""".stripMargin, "CROSS JOIN g ", "cell")),
       doc = "density-adaptive grid kNN (g6 with cell ∝ 1/√density computed in-plan " +
         "from a broadcast count): constant per-cell occupancy keeps candidate " +
         "volume linear in the corpus — the scale configuration for grid kNN"

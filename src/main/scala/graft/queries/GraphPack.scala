@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -18,6 +19,123 @@ import graft.Tables
   */
 object GraphPack extends QueryPack {
 
+  /** The trade-flow join shared by g4/g5/g8: every lineitem with its
+    * supplier's and customer's nation. Fact-fact shuffle join (lineitem ⋈
+    * orders) + broadcast dims; callers aggregate it to a ≤25²-edge list.
+    */
+  private def tradeJoin(s: SparkSession, d: String): DataFrame = {
+    val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
+    val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+    val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
+    val supp = Tables.supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))
+    li
+      .join(ord, li("l_orderkey") === ord("o_orderkey"))
+      .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
+      .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
+  }
+
+  /** g5/g8's thresholded undirected trade graph `(u, v)`, u < v: sparsified
+    * so triangles and cores are non-trivial by keeping edges of ABOVE-
+    * AVERAGE weight — scale-invariant (integer cross-multiply, exact).
+    */
+  private def keptTradeEdges(s: SparkSession, d: String): DataFrame = {
+    val edges = tradeJoin(s, d)
+      .select(
+        least(col("s_nationkey"), col("c_nationkey")).cast("long").as("u"),
+        greatest(col("s_nationkey"), col("c_nationkey")).cast("long").as("v")
+      )
+      .filter(col("u") =!= col("v"))
+      .groupBy(col("u"), col("v"))
+      .agg(count(lit(1)).as("w"))
+    val stats = edges.agg(sum(col("w")).as("tot"), count(lit(1)).as("n_pairs"))
+    edges.crossJoin(broadcast(stats))
+      .filter(col("w") * col("n_pairs") >= col("tot"))
+      .select(col("u"), col("v"))
+  }
+
+  /** DuckDB twin of [[keptTradeEdges]]'s weighted pairs: the body of CTE
+    * `ew(u, v, w)` and CTE `st(tot, n_pairs)`.
+    */
+  private val tradePairsSql: String =
+    """  SELECT u, v, COUNT(*) AS w FROM (
+      |    SELECT LEAST(s_nationkey, c_nationkey) AS u,
+      |           GREATEST(s_nationkey, c_nationkey) AS v
+      |    FROM lineitem
+      |    JOIN orders   ON l_orderkey = o_orderkey
+      |    JOIN supplier ON l_suppkey = s_suppkey
+      |    JOIN customer ON o_custkey = c_custkey
+      |    WHERE s_nationkey <> c_nationkey) p
+      |  GROUP BY u, v),
+      |st AS (SELECT CAST(SUM(w) AS BIGINT) AS tot, COUNT(*) AS n_pairs FROM ew)""".stripMargin
+
+  /** Co-order graph `(u, v)`, u < v, over `key` (g9/g10: l_suppkey, g11:
+    * l_partkey): values linked when they share an order at least twice.
+    * Co-occurrence pairs via per-order posting lists (d22's shape): one
+    * aggregation collapses each order to its value set (≤7 items in TPC-H
+    * shape, so the set is bounded), pairs generate LOCALLY inside the
+    * sorted set — no fact-table self-join, one corpus shuffle.
+    */
+  private def coOrderEdges(s: SparkSession, d: String, key: String): DataFrame =
+    Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col(key))
+      .groupBy(col("l_orderkey"))
+      .agg(sort_array(collect_set(col(key).cast("long"))).as("ss"))
+      .filter(size(col("ss")) >= 2)
+      // repartition on a WIDENED deterministic key before the explode:
+      // a repartition on l_orderkey itself is optimizer-removed (the
+      // aggregate already hash-partitions on that key) and AQE then
+      // coalesces the compact post-aggregate read by SIZE — measured 4
+      // tasks at sf0.1 carrying the whole ~6× pair explode (r20
+      // profile: 2.1 s executor-run, 0.6 s wall on 4 tasks). Hashing
+      // into a 32×-wider domain (guide §2.5: many more key values than
+      // partitions, derived deterministically — never rand()) keeps a
+      // real REPARTITION_BY_NUM exchange in the plan, which AQE never
+      // coalesces, so the explode spreads over every core at any scale.
+      .repartition(s.sessionState.conf.numShufflePartitions,
+        pmod(xxhash64(col("l_orderkey")),
+          lit(s.sessionState.conf.numShufflePartitions * 32)))
+      // pair generation as two chained codegen generators instead of
+      // flatten(transform(... transform(...))): higher-order functions
+      // are CodegenFallback — every pair paid an interpreted lambda
+      // tree + named_struct allocation (r20 profile: ~2.1 s executor-
+      // run for ~900 k pairs, ~10× the codegen cost of the same work).
+      // posexplode + explode(slice(...)) emit the identical pair
+      // multiset entirely inside whole-stage codegen.
+      .select(col("ss"), posexplode(col("ss")).as(Seq("i", "u")))
+      .select(col("u"), explode(slice(col("ss"), col("i") + 2,
+        size(col("ss")) - col("i") - 1)).as("v"))
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
+      .filter(col("w") >= 2).select(col("u"), col("v"))
+
+  /** g9/g10's supplier co-order adjacency, both edge directions, materialized
+    * once. Both directions via a local explode instead of e.union(e.swap):
+    * the union's two branches each re-read the full (u,v) pair exchange and
+    * re-run its final aggregate (r20 profile: 1.79 M records read = 2× the
+    * 897 k-row exchange, 1.9 s executor-run) — the explode reads the
+    * aggregate ONCE and doubles rows inside the same stage.
+    */
+  private def coOrderAdj(s: SparkSession, d: String): DataFrame =
+    coOrderEdges(s, d, "l_suppkey")
+      .select(explode(array(
+        struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("p"))
+      .select(col("p.u").as("u"), col("p.v").as("v"))
+      .localCheckpoint()
+
+  /** DuckDB twin of the co-order graph over `key`: CTEs `li`, `p`, `e(u, v)`
+    * and `adj(u, v)` (both directions), built with the naive self-join — a
+    * cross-formulation differential against the posting-list build.
+    */
+  private def coOrderAdjSql(key: String): String =
+    s"""WITH li AS (SELECT DISTINCT l_orderkey, $key FROM lineitem),
+       |p AS (
+       |  SELECT a.$key AS u, b.$key AS v, COUNT(*) AS w
+       |  FROM li a JOIN li b
+       |    ON a.l_orderkey = b.l_orderkey AND a.$key < b.$key
+       |  GROUP BY 1, 2),
+       |e AS (SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v FROM p WHERE w >= 2),
+       |adj AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e)""".stripMargin
+
   override def queries: Seq[Q] = Seq(
     // ---------------------------------------------------------------- pagerank
     Q(
@@ -26,14 +144,7 @@ object GraphPack extends QueryPack {
         // trade-flow graph: supplier nation → customer nation, weight =
         // number of lineitems shipped. Fact-fact shuffle join (lineitem ⋈
         // orders) + broadcast dims, then a 25×25-bounded edge aggregate.
-        val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
-        val supp = Tables.supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))
-        val edges = li
-          .join(ord, li("l_orderkey") === ord("o_orderkey"))
-          .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-          .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
+        val edges = tradeJoin(s, d)
           .select(
             col("s_nationkey").cast("long").as("src"),
             col("c_nationkey").cast("long").as("dst")
@@ -106,27 +217,7 @@ object GraphPack extends QueryPack {
         // two joins over the (tiny, aggregated) oriented edge list, never
         // the fact tables. Per-node participation via a generator over the
         // triangle's three corners.
-        val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
-        val supp = Tables.supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))
-        val edges = li
-          .join(ord, li("l_orderkey") === ord("o_orderkey"))
-          .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-          .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-          .select(
-            least(col("s_nationkey"), col("c_nationkey")).cast("long").as("u"),
-            greatest(col("s_nationkey"), col("c_nationkey")).cast("long").as("v")
-          )
-          .filter(col("u") =!= col("v"))
-          .groupBy(col("u"), col("v"))
-          .agg(count(lit(1)).as("w"))
-        // sparsify so triangles are non-trivial: keep edges with ABOVE-
-        // AVERAGE weight — scale-invariant (integer cross-multiply, exact)
-        val stats = edges.agg(sum(col("w")).as("tot"), count(lit(1)).as("n_pairs"))
-        val kept = edges.crossJoin(broadcast(stats))
-          .filter(col("w") * col("n_pairs") >= col("tot"))
-          .select(col("u"), col("v"))
+        val kept = keptTradeEdges(s, d)
         val e1 = kept.select(col("u").as("a"), col("v").as("b"))
         val e2 = kept.select(col("u").as("b"), col("v").as("c"))
         val e3 = kept.select(col("u").as("a"), col("v").as("c"))
@@ -137,17 +228,8 @@ object GraphPack extends QueryPack {
           .agg(count(lit(1)).as("n_triangles"))
           .orderBy(col("nation_key"))
       },
-      Some("""WITH ew AS (
-             |  SELECT u, v, COUNT(*) AS w FROM (
-             |    SELECT LEAST(s_nationkey, c_nationkey) AS u,
-             |           GREATEST(s_nationkey, c_nationkey) AS v
-             |    FROM lineitem
-             |    JOIN orders   ON l_orderkey = o_orderkey
-             |    JOIN supplier ON l_suppkey = s_suppkey
-             |    JOIN customer ON o_custkey = c_custkey
-             |    WHERE s_nationkey <> c_nationkey) p
-             |  GROUP BY u, v),
-             |st AS (SELECT CAST(SUM(w) AS BIGINT) AS tot, COUNT(*) AS n_pairs FROM ew),
+      Some(s"""WITH ew AS (
+             |$tradePairsSql,
              |e AS (SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v
              |      FROM ew CROSS JOIN st WHERE w * n_pairs >= tot),
              |tri AS (
@@ -176,25 +258,7 @@ object GraphPack extends QueryPack {
         // cost is edge-aggregate-sized, never corpus-sized. Degrees are
         // integer counts, so every round (and hence the fixed-round
         // output) is oracle-exact.
-        val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
-        val supp = Tables.supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))
-        val edges = li
-          .join(ord, li("l_orderkey") === ord("o_orderkey"))
-          .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-          .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-          .select(
-            least(col("s_nationkey"), col("c_nationkey")).cast("long").as("u"),
-            greatest(col("s_nationkey"), col("c_nationkey")).cast("long").as("v")
-          )
-          .filter(col("u") =!= col("v"))
-          .groupBy(col("u"), col("v"))
-          .agg(count(lit(1)).as("w"))
-        val stats = edges.agg(sum(col("w")).as("tot"), count(lit(1)).as("n_pairs"))
-        val kept = edges.crossJoin(broadcast(stats))
-          .filter(col("w") * col("n_pairs") >= col("tot"))
-          .select(col("u"), col("v"))
+        val kept = keptTradeEdges(s, d)
         // materialize the aggregated adjacency ONCE before iterating: the
         // peel rounds and the final degree pass re-read adj ~8 times, and
         // without this each re-read would re-run the fact-table joins
@@ -208,17 +272,8 @@ object GraphPack extends QueryPack {
           .select(col("a").as("nation_key"), col("core_degree"))
           .orderBy(col("nation_key"))
       },
-      Some("""WITH ew AS MATERIALIZED (
-             |  SELECT u, v, COUNT(*) AS w FROM (
-             |    SELECT LEAST(s_nationkey, c_nationkey) AS u,
-             |           GREATEST(s_nationkey, c_nationkey) AS v
-             |    FROM lineitem
-             |    JOIN orders   ON l_orderkey = o_orderkey
-             |    JOIN supplier ON l_suppkey = s_suppkey
-             |    JOIN customer ON o_custkey = c_custkey
-             |    WHERE s_nationkey <> c_nationkey) p
-             |  GROUP BY u, v),
-             |st AS (SELECT CAST(SUM(w) AS BIGINT) AS tot, COUNT(*) AS n_pairs FROM ew),
+      Some(s"""WITH ew AS MATERIALIZED (
+             |$tradePairsSql,
              |e AS MATERIALIZED (
              |  SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v
              |  FROM ew CROSS JOIN st WHERE w * n_pairs >= tot),
@@ -260,51 +315,7 @@ object GraphPack extends QueryPack {
         // materialized once (g8's discipline) and each round touches only
         // it; the DuckDB oracle builds the same edges with the naive
         // self-join — a cross-formulation differential.
-        // co-occurrence pairs via per-order posting lists (d22's shape): one
-        // aggregation collapses each order to its supplier set (≤7 items in
-        // TPC-H shape, so the set is bounded), pairs generate LOCALLY inside
-        // the sorted set — no fact-table self-join, one corpus shuffle
-        val pairs = Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_suppkey"))
-          .groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("l_suppkey").cast("long"))).as("ss"))
-          .filter(size(col("ss")) >= 2)
-          // repartition on a WIDENED deterministic key before the explode:
-          // a repartition on l_orderkey itself is optimizer-removed (the
-          // aggregate already hash-partitions on that key) and AQE then
-          // coalesces the compact post-aggregate read by SIZE — measured 4
-          // tasks at sf0.1 carrying the whole ~6× pair explode (r20
-          // profile: 2.1 s executor-run, 0.6 s wall on 4 tasks). Hashing
-          // into a 32×-wider domain (guide §2.5: many more key values than
-          // partitions, derived deterministically — never rand()) keeps a
-          // real REPARTITION_BY_NUM exchange in the plan, which AQE never
-          // coalesces, so the explode spreads over every core at any scale.
-          .repartition(s.sessionState.conf.numShufflePartitions,
-            pmod(xxhash64(col("l_orderkey")),
-              lit(s.sessionState.conf.numShufflePartitions * 32)))
-          // pair generation as two chained codegen generators instead of
-          // flatten(transform(... transform(...))): higher-order functions
-          // are CodegenFallback — every pair paid an interpreted lambda
-          // tree + named_struct allocation (r20 profile: ~2.1 s executor-
-          // run for ~900 k pairs, ~10× the codegen cost of the same work).
-          // posexplode + explode(slice(...)) emit the identical pair
-          // multiset entirely inside whole-stage codegen.
-          .select(col("ss"), posexplode(col("ss")).as(Seq("i", "u")))
-          .select(col("u"), explode(slice(col("ss"), col("i") + 2,
-            size(col("ss")) - col("i") - 1)).as("v"))
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
-        val e = pairs.filter(col("w") >= 2).select(col("u"), col("v"))
-        // both edge directions via a local explode instead of
-        // e.union(e.swap): the union's two branches each re-read the full
-        // (u,v) pair exchange and re-run its final aggregate (r20 profile:
-        // 1.79 M records read = 2× the 897 k-row exchange, 1.9 s executor-
-        // run) — the explode reads the aggregate ONCE and doubles rows
-        // inside the same stage, one fewer full pass at any scale
-        val adj = e.select(explode(array(
-            struct(col("u"), col("v")),
-            struct(col("v").as("u"), col("u").as("v")))).as("p"))
-          .select(col("p.u").as("u"), col("p.v").as("v"))
-          .localCheckpoint()
+        val adj = coOrderAdj(s, d)
         val lab0 = Tables.supplier(s, d)
           .select(col("s_suppkey").cast("long").as("node"))
           .withColumn("lbl", col("node"))
@@ -342,14 +353,7 @@ object GraphPack extends QueryPack {
           .select(col("node").as("s_suppkey"), col("lbl").as("community"))
           .orderBy(col("s_suppkey"))
       },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-             |p AS (
-             |  SELECT a.l_suppkey AS u, b.l_suppkey AS v, COUNT(*) AS w
-             |  FROM li a JOIN li b
-             |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-             |  GROUP BY 1, 2),
-             |e AS (SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v FROM p WHERE w >= 2),
-             |adj AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
+      Some(s"""${coOrderAdjSql("l_suppkey")},
              |l0 AS (SELECT CAST(s_suppkey AS BIGINT) AS node,
              |              CAST(s_suppkey AS BIGINT) AS lbl FROM supplier),
              |c1 AS (SELECT adj.u, l0.lbl, COUNT(*) AS cnt
@@ -389,37 +393,7 @@ object GraphPack extends QueryPack {
         // a 100 TB edge set. Adjacency is materialized once
         // (localCheckpoint) and re-joined per hop; the visited set carries
         // the minimal (node, hop) record.
-        val pairs = Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_suppkey"))
-          .groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("l_suppkey").cast("long"))).as("ss"))
-          .filter(size(col("ss")) >= 2)
-          // widened-key repartition before the explode — see g9: same-key
-          // repartition is optimizer-removed and AQE coalesces the explode
-          // onto 4 tasks; the widened deterministic key keeps a real
-          // REPARTITION_BY_NUM exchange that spreads it (guide §2.5)
-          .repartition(s.sessionState.conf.numShufflePartitions,
-            pmod(xxhash64(col("l_orderkey")),
-              lit(s.sessionState.conf.numShufflePartitions * 32)))
-          // pair generation as two chained codegen generators instead of
-          // flatten(transform(... transform(...))): higher-order functions
-          // are CodegenFallback — every pair paid an interpreted lambda
-          // tree + named_struct allocation (r20 profile: ~2.1 s executor-
-          // run for ~900 k pairs, ~10× the codegen cost of the same work).
-          // posexplode + explode(slice(...)) emit the identical pair
-          // multiset entirely inside whole-stage codegen.
-          .select(col("ss"), posexplode(col("ss")).as(Seq("i", "u")))
-          .select(col("u"), explode(slice(col("ss"), col("i") + 2,
-            size(col("ss")) - col("i") - 1)).as("v"))
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
-        val e = pairs.filter(col("w") >= 2).select(col("u"), col("v"))
-        // local explode instead of e.union(e.swap) — see g9: one read of
-        // the pair aggregate instead of two full passes
-        val adj = e.select(explode(array(
-            struct(col("u"), col("v")),
-            struct(col("v").as("u"), col("u").as("v")))).as("p"))
-          .select(col("p.u").as("u"), col("p.v").as("v"))
-          .localCheckpoint()
+        val adj = coOrderAdj(s, d)
         val seeds = Tables.supplier(s, d)
           .filter(col("s_suppkey") % 97 === 0)
           .select(col("s_suppkey").cast("long").as("node"))
@@ -447,14 +421,7 @@ object GraphPack extends QueryPack {
         }
         visited.orderBy(col("node"))
       },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-             |p AS (
-             |  SELECT a.l_suppkey AS u, b.l_suppkey AS v, COUNT(*) AS w
-             |  FROM li a JOIN li b
-             |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
-             |  GROUP BY 1, 2),
-             |e AS (SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v FROM p WHERE w >= 2),
-             |adj AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
+      Some(s"""${coOrderAdjSql("l_suppkey")},
              |s0 AS (SELECT CAST(s_suppkey AS BIGINT) AS node FROM supplier
              |       WHERE s_suppkey % 97 = 0),
              |v0 AS (SELECT node, CAST(0 AS BIGINT) AS hop FROM s0),
@@ -477,8 +444,8 @@ object GraphPack extends QueryPack {
     Q(
       "g11_link_prediction",
       (s, d) => {
-        // Common-neighbor link prediction on the supplier co-order graph
-        // (g9's edge build): score NON-edges by how many neighbors they
+        // Common-neighbor link prediction on the part co-order graph
+        // (g9's edge build over l_partkey): score NON-edges by how many neighbors they
         // share, Jaccard-normalized by their degrees. Candidate pairs come
         // from per-node neighbor POSTING LISTS — each node emits the pairs
         // among its own (sorted) neighbor set, so cost is Σ deg(w)², the
@@ -486,30 +453,7 @@ object GraphPack extends QueryPack {
         // standard guard is a degree cap on the posting list (hubs
         // contribute noise to common-neighbor scores anyway). Existing
         // edges leave via one anti-join; degrees broadcast back in.
-        val pairs = Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_partkey"))
-          .groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("l_partkey").cast("long"))).as("ss"))
-          .filter(size(col("ss")) >= 2)
-          // widened-key repartition before the explode — see g9: same-key
-          // repartition is optimizer-removed and AQE coalesces the explode
-          // onto 4 tasks; the widened deterministic key keeps a real
-          // REPARTITION_BY_NUM exchange that spreads it (guide §2.5)
-          .repartition(s.sessionState.conf.numShufflePartitions,
-            pmod(xxhash64(col("l_orderkey")),
-              lit(s.sessionState.conf.numShufflePartitions * 32)))
-          // pair generation as two chained codegen generators instead of
-          // flatten(transform(... transform(...))): higher-order functions
-          // are CodegenFallback — every pair paid an interpreted lambda
-          // tree + named_struct allocation (r20 profile: ~2.1 s executor-
-          // run for ~900 k pairs, ~10× the codegen cost of the same work).
-          // posexplode + explode(slice(...)) emit the identical pair
-          // multiset entirely inside whole-stage codegen.
-          .select(col("ss"), posexplode(col("ss")).as(Seq("i", "u")))
-          .select(col("u"), explode(slice(col("ss"), col("i") + 2,
-            size(col("ss")) - col("i") - 1)).as("v"))
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
-        val e = pairs.filter(col("w") >= 2).select(col("u"), col("v")).localCheckpoint()
+        val e = coOrderEdges(s, d, "l_partkey").localCheckpoint()
         val adj = e.union(e.select(col("v").as("u"), col("u").as("v")))
         val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         val cn = adj
@@ -517,7 +461,7 @@ object GraphPack extends QueryPack {
           .agg(sort_array(collect_set(col("v"))).as("ns"))
           .filter(size(col("ns")) >= 2)
           // codegen generator chain instead of interpreted HOF lambdas —
-          // same rewrite as the pair build above; this site is the Σdeg²
+          // same rewrite as coOrderEdges' pair build; this site is the Σdeg²
           // triangle-bound explode, where the per-pair cost matters most
           .select(col("ns"), posexplode(col("ns")).as(Seq("i", "u")))
           .select(col("u"), explode(slice(col("ns"), col("i") + 2,
@@ -532,14 +476,7 @@ object GraphPack extends QueryPack {
               (col("deg_u") + col("deg_v") - col("cn")), 1e6).as("jaccard"))
           .orderBy(col("u"), col("v"))
       },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-             |p AS (
-             |  SELECT a.l_partkey AS u, b.l_partkey AS v, COUNT(*) AS w
-             |  FROM li a JOIN li b
-             |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-             |  GROUP BY 1, 2),
-             |e AS (SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v FROM p WHERE w >= 2),
-             |adj AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
+      Some(s"""${coOrderAdjSql("l_partkey")},
              |deg AS (SELECT u, COUNT(*) AS deg FROM adj GROUP BY u),
              |cn AS (
              |  SELECT a.v AS u, b.v AS v, COUNT(*) AS cn

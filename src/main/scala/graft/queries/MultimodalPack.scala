@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.MediaOps
@@ -15,6 +16,74 @@ import graft.ops.MediaOps
   * fake inside the m3/m4 batch-shape tests.
   */
 object MultimodalPack extends QueryPack {
+
+  /** m12/m13's per-frame byte sums over the ≥32-byte payloads (FrameSums
+    * custom expression, one compiled pass) and consecutive-frame absolute
+    * `deltas`, beside `keep`.
+    */
+  private def frameDeltas(s: SparkSession, d: String, keep: Column): DataFrame = {
+    import graft.functions.MediaExpressions.frameSums
+    Tables.documents(s, d)
+      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
+      .filter(length(col("payload")) >= 32)
+      .select(col("doc_id"), frameSums(col("payload"), 16).as("fs"))
+      .select(col("doc_id"), keep,
+        zip_with(
+          slice(col("fs"), lit(2), size(col("fs")) - 1),
+          slice(col("fs"), lit(1), size(col("fs")) - 1),
+          (a, b) => abs(a - b)).as("deltas"))
+  }
+
+  /** DuckDB twin of [[frameDeltas]]'s frame sums from the payload's hex
+    * dump: CTEs `b` and `f(doc_id, nf, fs)`.
+    */
+  private val frameSumsSql: String =
+    """WITH b AS (
+      |  SELECT doc_id, hex(encode(text)) AS h,
+      |    octet_length(encode(text)) AS nb
+      |  FROM documents
+      |  WHERE octet_length(encode(text)) >= 32),
+      |f AS (
+      |  SELECT doc_id, (nb + 15) // 16 AS nf,
+      |    list_transform(generate_series(1, (nb + 15) // 16),
+      |      k -> list_sum(list_transform(
+      |        generate_series((k-1)*16 + 1, least(k*16, nb)),
+      |        j -> CAST(('0x' || substring(h, 2*j-1, 2)) AS INT)))) AS fs
+      |  FROM b)""".stripMargin
+
+  /** m14/m16's output: the decoded image-stats struct `st` flattened beside
+    * doc_id and the `extra` columns.
+    */
+  private def decodedPlaneStats(df: DataFrame, extra: String*): DataFrame =
+    df.select((col("doc_id") +: extra.map(col)) ++
+        Seq("width_px", "height_px", "n_pixels", "pixel_sum", "pixel_max", "pixel_min")
+          .map(f => col(s"st.$f").as(f)): _*)
+      .orderBy(col("doc_id"))
+
+  /** DuckDB twin of [[decodedPlaneStats]]: the 16-px-wide gray plane's stats
+    * recomputed from the source bytes' hex dump (byte-exact for non-ASCII,
+    * zero-padded last row); `extra` is spliced in after `SELECT doc_id,`.
+    */
+  private def grayPlaneStatsSql(extra: String): String =
+    s"""WITH b AS (
+       |  SELECT doc_id, hex(encode(text)) AS h,
+       |    octet_length(encode(text)) AS nb
+       |  FROM documents),
+       |v AS (
+       |  SELECT doc_id, nb,
+       |    CASE WHEN nb = 0 THEN 1 ELSE (nb + 15) // 16 END AS hh,
+       |    list_transform(generate_series(1, nb),
+       |      k -> CAST(('0x' || substring(h, 2*k-1, 2)) AS INT)) AS bs
+       |  FROM b)
+       |SELECT doc_id,$extra
+       |  CAST(16 AS BIGINT) AS width_px,
+       |  CAST(hh AS BIGINT) AS height_px,
+       |  CAST(16 * hh AS BIGINT) AS n_pixels,
+       |  CAST(coalesce(list_sum(bs), 0) AS BIGINT) AS pixel_sum,
+       |  CAST(coalesce(list_max(bs), 0) AS BIGINT) AS pixel_max,
+       |  CAST(CASE WHEN 16 * hh > nb THEN 0 ELSE list_min(bs) END AS BIGINT) AS pixel_min
+       |FROM v
+       |ORDER BY doc_id""".stripMargin
 
   override def queries: Seq[Q] = Seq(
     // ---------------------------------------------------------------- pack
@@ -469,36 +538,14 @@ object MultimodalPack extends QueryPack {
         // (doc_id, 3 longs) survives. Oracle recomputes every frame sum
         // from the payload's hex dump, certifying window boundaries and
         // the short last frame byte-exactly.
-        import graft.functions.MediaExpressions.frameSums
-        Tables.documents(s, d)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-          .filter(length(col("payload")) >= 32)
-          .select(col("doc_id"), frameSums(col("payload"), 16).as("fs"))
-          .select(
-            col("doc_id"),
-            size(col("fs")).cast("long").as("n_frames"),
-            zip_with(
-              slice(col("fs"), lit(2), size(col("fs")) - 1),
-              slice(col("fs"), lit(1), size(col("fs")) - 1),
-              (a, b) => abs(a - b)).as("deltas"))
+        frameDeltas(s, d, size(col("fs")).cast("long").as("n_frames"))
           .select(
             col("doc_id"), col("n_frames"),
             (lit(1L) + size(filter(col("deltas"), x => x > 64L)).cast("long")).as("n_scenes"),
             array_max(col("deltas")).as("max_delta"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH b AS (
-             |  SELECT doc_id, hex(encode(text)) AS h,
-             |    octet_length(encode(text)) AS nb
-             |  FROM documents
-             |  WHERE octet_length(encode(text)) >= 32),
-             |f AS (
-             |  SELECT doc_id, (nb + 15) // 16 AS nf,
-             |    list_transform(generate_series(1, (nb + 15) // 16),
-             |      k -> list_sum(list_transform(
-             |        generate_series((k-1)*16 + 1, least(k*16, nb)),
-             |        j -> CAST(('0x' || substring(h, 2*j-1, 2)) AS INT)))) AS fs
-             |  FROM b),
+      Some(s"""$frameSumsSql,
              |dl AS (
              |  SELECT doc_id, nf, list_transform(generate_series(2, nf),
              |    k -> abs(fs[k] - fs[k-1])) AS deltas
@@ -525,17 +572,7 @@ object MultimodalPack extends QueryPack {
         // bytes never leave the scan, and the shuffle carries #frames rows
         // of 4 longs, not media bytes. Argmax is the deterministic
         // min(struct(-sum, idx)) trick, no window over the whole corpus.
-        import graft.functions.MediaExpressions.frameSums
-        val base = Tables.documents(s, d)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-          .filter(length(col("payload")) >= 32)
-          .select(col("doc_id"), frameSums(col("payload"), 16).as("fs"))
-          .select(col("doc_id"), col("fs"),
-            zip_with(
-              slice(col("fs"), lit(2), size(col("fs")) - 1),
-              slice(col("fs"), lit(1), size(col("fs")) - 1),
-              (a, b) => abs(a - b)).as("deltas"))
-        val frames = base.select(
+        val frames = frameDeltas(s, d, col("fs")).select(
           col("doc_id"),
           explode(expr(
             "transform(fs, (v, i) -> named_struct(" +
@@ -551,18 +588,7 @@ object MultimodalPack extends QueryPack {
             col("m.i").as("key_frame"), (-col("m.ns")).as("key_sum"), col("n_frames"))
           .orderBy(col("doc_id"), col("scene_id"))
       },
-      Some("""WITH b AS (
-             |  SELECT doc_id, hex(encode(text)) AS h,
-             |    octet_length(encode(text)) AS nb
-             |  FROM documents
-             |  WHERE octet_length(encode(text)) >= 32),
-             |f AS (
-             |  SELECT doc_id, (nb + 15) // 16 AS nf,
-             |    list_transform(generate_series(1, (nb + 15) // 16),
-             |      k -> list_sum(list_transform(
-             |        generate_series((k-1)*16 + 1, least(k*16, nb)),
-             |        j -> CAST(('0x' || substring(h, 2*j-1, 2)) AS INT)))) AS fs
-             |  FROM b),
+      Some(s"""$frameSumsSql,
              |f2 AS (
              |  SELECT doc_id, nf, fs,
              |    list_transform(generate_series(2, nf), k -> abs(fs[k] - fs[k-1])) AS deltas
@@ -610,38 +636,11 @@ object MultimodalPack extends QueryPack {
         // this is the decode shape an image corpus runs: bytes stay
         // columnar, one decoder pass per row, stats/features out.
         import graft.functions.MediaExpressions.{pngEncodeGray, pngStats}
-        Tables.documents(s, d)
+        decodedPlaneStats(Tables.documents(s, d)
           .select(col("doc_id"),
-            pngStats(pngEncodeGray(encode(col("text"), "UTF-8"), 16)).as("st"))
-          .select(
-            col("doc_id"),
-            col("st.width_px").as("width_px"),
-            col("st.height_px").as("height_px"),
-            col("st.n_pixels").as("n_pixels"),
-            col("st.pixel_sum").as("pixel_sum"),
-            col("st.pixel_max").as("pixel_max"),
-            col("st.pixel_min").as("pixel_min"))
-          .orderBy(col("doc_id"))
+            pngStats(pngEncodeGray(encode(col("text"), "UTF-8"), 16)).as("st")))
       },
-      Some("""WITH b AS (
-             |  SELECT doc_id, hex(encode(text)) AS h,
-             |    octet_length(encode(text)) AS nb
-             |  FROM documents),
-             |v AS (
-             |  SELECT doc_id, nb,
-             |    CASE WHEN nb = 0 THEN 1 ELSE (nb + 15) // 16 END AS hh,
-             |    list_transform(generate_series(1, nb),
-             |      k -> CAST(('0x' || substring(h, 2*k-1, 2)) AS INT)) AS bs
-             |  FROM b)
-             |SELECT doc_id,
-             |  CAST(16 AS BIGINT) AS width_px,
-             |  CAST(hh AS BIGINT) AS height_px,
-             |  CAST(16 * hh AS BIGINT) AS n_pixels,
-             |  CAST(coalesce(list_sum(bs), 0) AS BIGINT) AS pixel_sum,
-             |  CAST(coalesce(list_max(bs), 0) AS BIGINT) AS pixel_max,
-             |  CAST(CASE WHEN 16 * hh > nb THEN 0 ELSE list_min(bs) END AS BIGINT) AS pixel_min
-             |FROM v
-             |ORDER BY doc_id""".stripMargin),
+      Some(grayPlaneStatsSql("")),
       doc = "real PNG codec round trip via the JDK's javax.imageio: encode the " +
         "document bytes as a genuine grayscale PNG in-plan, decode it with the " +
         "real PNG decoder, emit dimension + pixel stats; the oracle recomputes " +
@@ -737,43 +736,14 @@ object MultimodalPack extends QueryPack {
         // passthrough, sat between encode and decode. Payloads never
         // shuffle; 7 longs per row leave the scan.
         import graft.functions.MediaExpressions.{bmpEncodeGray, imageStats}
-        Tables.documents(s, d)
+        decodedPlaneStats(Tables.documents(s, d)
           .select(col("doc_id"),
             bmpEncodeGray(encode(col("text"), "UTF-8"), 16).as("bmp"))
           .select(col("doc_id"),
             length(col("bmp")).cast("long").as("n_bytes"),
-            imageStats(col("bmp")).as("st"))
-          .select(
-            col("doc_id"),
-            col("n_bytes"),
-            col("st.width_px").as("width_px"),
-            col("st.height_px").as("height_px"),
-            col("st.n_pixels").as("n_pixels"),
-            col("st.pixel_sum").as("pixel_sum"),
-            col("st.pixel_max").as("pixel_max"),
-            col("st.pixel_min").as("pixel_min"))
-          .orderBy(col("doc_id"))
+            imageStats(col("bmp")).as("st")), "n_bytes")
       },
-      Some("""WITH b AS (
-             |  SELECT doc_id, hex(encode(text)) AS h,
-             |    octet_length(encode(text)) AS nb
-             |  FROM documents),
-             |v AS (
-             |  SELECT doc_id, nb,
-             |    CASE WHEN nb = 0 THEN 1 ELSE (nb + 15) // 16 END AS hh,
-             |    list_transform(generate_series(1, nb),
-             |      k -> CAST(('0x' || substring(h, 2*k-1, 2)) AS INT)) AS bs
-             |  FROM b)
-             |SELECT doc_id,
-             |  CAST(1078 + 16 * hh AS BIGINT) AS n_bytes,
-             |  CAST(16 AS BIGINT) AS width_px,
-             |  CAST(hh AS BIGINT) AS height_px,
-             |  CAST(16 * hh AS BIGINT) AS n_pixels,
-             |  CAST(coalesce(list_sum(bs), 0) AS BIGINT) AS pixel_sum,
-             |  CAST(coalesce(list_max(bs), 0) AS BIGINT) AS pixel_max,
-             |  CAST(CASE WHEN 16 * hh > nb THEN 0 ELSE list_min(bs) END AS BIGINT) AS pixel_min
-             |FROM v
-             |ORDER BY doc_id""".stripMargin),
+      Some(grayPlaneStatsSql("\n  CAST(1078 + 16 * hh AS BIGINT) AS n_bytes,")),
       doc = "second real image codec (BMP via the JDK encoder/decoder, " +
         "magic-sniffing container dispatch) — the format matrix proof that the " +
         "image path is container-agnostic; the oracle recomputes decoded stats " +

@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorOps._
+import LshCodes.{bucketAtSql, pinnedColsSql, pinnedProbeRows}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.9):
   * brute-force cosine top-k (baseline), label-blocked pairwise similarity
@@ -21,8 +23,277 @@ object SimilarityPack extends QueryPack {
   private def dotSql(a: String, b: String) = sqDot.format(a, b)
   private def normSql(a: String) =
     s"sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-  private def planeSql(j: Int) =
-    s"list_sum(list_transform(emb, (x, i) -> CAST(x AS DOUBLE) * (((($j*64 + (i-1)) * 2654435761) % 1000000007) / 1000000000.0 - 0.5)))"
+
+  /** Quantized cosine of an index row (`embedding`, `nrm`) against a query
+    * (`q_emb`, `q_nrm`). NULL divisor on a zero-norm vector (when-guard
+    * here, nullif in the oracle) — floor(NaN) would be 0 in Spark but NaN
+    * in DuckDB.
+    */
+  private def qCos: Column = quant(dot(col("embedding"), col("q_emb")) /
+    when(col("nrm") * col("q_nrm") > 0.0, col("nrm") * col("q_nrm")), 1e6)
+
+  /** DuckDB twin of [[qCos]] over the list columns `a` and `b`; its second
+    * and third lines are indented `pad` and `pad - 4` spaces.
+    */
+  private def cosSql(a: String, b: String, pad: Int): String =
+    s"floor(${dotSql(a, b)} /\n${" " * pad}nullif(${normSql(a)} * ${normSql(b)}, 0) * 1000000)" +
+      s"\n${" " * (pad - 4)}/ 1000000"
+
+  /** Exact top-3 neighbours per query, the recall truth of s18/s21/s23: the
+    * |Q|x|DB| pair work is a BLOCK equi-join (db blocked by vec_id%8, queries
+    * replicated x8) — distributed, no cartesian, no single-key shuffle.
+    * NULL (zero-norm) similarities are dropped BEFORE ranking so parity
+    * never leans on an engine's default null order (ADVICE r11 — Spark
+    * desc = nulls-last happens to match DuckDB's default_null_order, but a
+    * non-default session setting would silently flip membership). `qCols`
+    * project `qs` to (q_id, q_emb, q_nrm).
+    */
+  private def exactTop3(db: DataFrame, qs: DataFrame, qCols: Column*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    db.withColumn("blk", pmod(col("vec_id"), lit(8)))
+      .join(qs.select(qCols :+ explode(sequence(lit(0L), lit(7L))).as("blk"): _*), Seq("blk"))
+      .select(col("q_id"), col("vec_id").as("nn_id"), qCos.as("cs"))
+      .filter(col("cs").isNotNull)
+      .withColumn("rk",
+        row_number().over(Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("nn_id"))))
+      .filter(col("rk") <= 3)
+      .select(col("q_id"), col("nn_id"))
+  }
+
+  /** DuckDB twin of [[exactTop3]] as CTE `truth` over CTEs `db` and `q`;
+    * `row` selects (q_id, nn_id, cs) from them.
+    */
+  private def truthSql(row: String): String =
+    s"""truth AS (
+       |  SELECT q_id, nn_id FROM (
+       |    SELECT q_id, nn_id,
+       |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cs DESC, nn_id) AS rk
+       |    FROM (
+       |      $row
+       |      FROM db, q) t0 WHERE cs IS NOT NULL) t WHERE rk <= 3)""".stripMargin
+
+  /** Top-3 per query over a multi-table (tbl, bucket) equi-join (s20/s22).
+    * Tables overlap, so candidates dedup by (q_id, nn_id) — quantized cosine
+    * is deterministic per pair, so distinct() after scoring is exact; n_cand
+    * is each query's deduped candidate volume. `extra` query-side columns
+    * ride through to the output.
+    */
+  private def annTop3(db: DataFrame, qs: DataFrame, extra: Column*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cand = db.join(qs, Seq("tbl", "bucket"))
+      .select((col("q_id") +: extra) ++ Seq(col("vec_id").as("nn_id"), qCos.as("cos_sim")): _*)
+      .filter(col("cos_sim").isNotNull)
+      .distinct()
+    cand
+      .withColumn("n_cand", count(lit(1)).over(Window.partitionBy(col("q_id"))))
+      .withColumn("rank",
+        row_number().over(
+          Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("nn_id")))
+          .cast("long"))
+      .filter(col("rank") <= 3)
+      .select(Seq(col("q_id"), col("rank"), col("nn_id"), col("cos_sim"), col("n_cand")) ++
+        extra: _*)
+      .orderBy(col("q_id"), col("rank"))
+  }
+
+  /** DuckDB twin of [[annTop3]] over CTE `db` and the query CTE `qFrom`
+    * (aliased `q`); `extra` is the carried query column.
+    */
+  private def annTop3Sql(qFrom: String, extra: Option[String]): String = {
+    val x = extra.fold("")(c => s"$c, ")
+    s"""cand AS (
+       |  SELECT DISTINCT q_id, ${x}nn_id, cos_sim FROM (
+       |    SELECT q.q_id, ${extra.fold("")(c => s"q.$c, ")}db.vec_id AS nn_id,
+       |      ${cosSql("db.embedding", "q.q_emb", 12)} AS cos_sim
+       |    FROM db JOIN $qFrom ON db.tbl = q.tbl AND db.bucket = q.bucket) t
+       |  WHERE cos_sim IS NOT NULL)
+       |SELECT q_id, rank, nn_id, cos_sim, n_cand${extra.fold("")(c => s", $c")} FROM (
+       |  SELECT q_id, ${x}nn_id, cos_sim,
+       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, nn_id) AS rank,
+       |    COUNT(*) OVER (PARTITION BY q_id) AS n_cand
+       |  FROM cand) t
+       |WHERE rank <= 3
+       |ORDER BY q_id, rank""".stripMargin
+  }
+
+  /** s21/s23's recall/cost ladder: ONE (tbl, bucket) equi-join serves every
+    * config — `idxCells` explodes each index vector (every vector not a
+    * 50th) to its `(tbl, bucket)` rows over disjoint table ids, and
+    * `probeCells` fans each query out per config x probe
+    * `(config, tbl, bucket)` — and candidates dedup per (config, query,
+    * neighbor). Per config: candidate volume and recall@3 against
+    * [[exactTop3]].
+    */
+  private def recallLadder(e: DataFrame, idxCells: Column, probeCells: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val db = e.filter(col("vec_id") % 50 =!= 0)
+    val qs = e.filter(col("vec_id") % 50 === 0)
+    val dbx = db
+      .select(col("vec_id"), col("embedding"), col("nrm"), explode(idxCells).as("tb"))
+      .select(col("vec_id"), col("embedding"), col("nrm"),
+        col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
+    val qp = qs
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
+        explode(probeCells).as("pr"))
+      .select(col("q_id"), col("q_emb"), col("q_nrm"),
+        col("pr.config").as("config"), col("pr.tbl").as("tbl"), col("pr.bucket").as("bucket"))
+    val cand = dbx.join(qp, Seq("tbl", "bucket"))
+      .select(col("config"), col("q_id"), col("vec_id").as("nn_id"), qCos.as("cos_sim"))
+      .filter(col("cos_sim").isNotNull)
+      .distinct()
+    val counts = cand.groupBy(col("config")).agg(count(lit(1)).as("n_cand"))
+    val top3 = cand
+      .withColumn("rk",
+        row_number().over(
+          Window.partitionBy(col("config"), col("q_id"))
+            .orderBy(col("cos_sim").desc, col("nn_id"))))
+      .filter(col("rk") <= 3)
+      .select(col("config"), col("q_id"), col("nn_id"))
+    val truth = exactTop3(db, qs,
+      col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
+    val hits = top3
+      .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "nn_id"), "left")
+      .groupBy(col("config"))
+      .agg(count(lit(1)).as("n_retrieved"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+    val nq = qs.agg(count(lit(1)).as("n_q"))
+    counts.join(hits, Seq("config"))
+      .crossJoin(broadcast(nq))
+      .select(col("config"), col("n_cand"), col("n_retrieved"), col("n_hits"),
+        expr("n_hits * 1000000 DIV (3 * n_q)").as("recall_ppm"))
+      .orderBy(col("config"))
+  }
+
+  /** DuckDB twin of [[recallLadder]] from CTE `cand` on, over CTEs `dbx`,
+    * `qp`, `db` and `q`; `truthRow` is [[truthSql]]'s row.
+    */
+  private def recallLadderTailSql(truthRow: String): String =
+    s"""cand AS (
+       |  SELECT DISTINCT config, q_id, nn_id, cos_sim FROM (
+       |    SELECT p.config, p.q_id, d.vec_id AS nn_id,
+       |      ${cosSql("d.embedding", "p.q_emb", 12)} AS cos_sim
+       |    FROM dbx d JOIN qp p ON d.tbl = p.tbl AND d.bucket = p.bucket) t
+       |  WHERE cos_sim IS NOT NULL),
+       |counts AS (SELECT config, COUNT(*) AS n_cand FROM cand GROUP BY config),
+       |top3 AS (
+       |  SELECT config, q_id, nn_id FROM (
+       |    SELECT config, q_id, nn_id,
+       |      ROW_NUMBER() OVER (PARTITION BY config, q_id
+       |                         ORDER BY cos_sim DESC, nn_id) AS rk
+       |    FROM cand) t WHERE rk <= 3),
+       |${truthSql(truthRow)},
+       |hits AS (
+       |  SELECT config, COUNT(*) AS n_retrieved,
+       |    CAST(SUM(CASE WHEN truth.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+       |  FROM top3 LEFT JOIN truth USING (q_id, nn_id)
+       |  GROUP BY config),
+       |nq AS (SELECT COUNT(*) AS n_q FROM q)
+       |SELECT counts.config, n_cand, n_retrieved, n_hits,
+       |  n_hits * 1000000 // (3 * (SELECT n_q FROM nq)) AS recall_ppm
+       |FROM counts JOIN hits USING (config)
+       |ORDER BY config""".stripMargin
+
+  /** Hard-negative mining (s19/s24): per anchor, the top-3 most-similar
+    * DIFFERENT-label index vectors. The label guard rides the candidate
+    * join on `keys`, exact cosine reranks, and a zero-norm vector (NULL
+    * cos_sim) is dropped BEFORE ranking so it can't claim a top-3 slot in
+    * a sparse cell (ADVICE r10). Top-3 is the row_number window
+    * TopKToNative lowers to the bounded-heap operator. `multiTable`
+    * (s24's adaptive code) carries `k_planes` through and dedups per
+    * (anchor, negative), since overlapping tables meet a pair more than once.
+    */
+  private def hardNegatives(idx: DataFrame, anchors: DataFrame, keys: Seq[String],
+      multiTable: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val kp = if (multiTable) Seq(col("k_planes")) else Nil
+    val scored = idx.join(anchors, keys)
+      .filter(col("label") =!= col("q_lbl"))
+      .select((Seq(col("q_id"), col("q_lbl").cast("long").as("q_label")) ++ kp ++
+        Seq(col("vec_id").as("neg_id"), col("label").cast("long").as("neg_label"),
+          qCos.as("cos_sim"))): _*)
+      .filter(col("cos_sim").isNotNull)
+    (if (multiTable) scored.distinct() else scored)
+      .withColumn("rank",
+        row_number().over(
+          Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("neg_id")))
+          .cast("long"))
+      .filter(col("rank") <= 3)
+      .select(Seq(col("q_id"), col("rank"), col("neg_id"), col("q_label"),
+        col("neg_label"), col("cos_sim")) ++ kp: _*)
+      .orderBy(col("q_id"), col("rank"))
+  }
+
+  /** The deterministic 4-centroid coarse quantizer of s5/s6/s8/s10: centroid
+    * j's element i = ((j*64+i)*2654435761 % P)/1e9, the same integer-hash
+    * formula as the LSH planes (codegen'd hashPlaneDot kernel, shift=0).
+    * Adds the quantized scores `s0..s3` and the argmax `centroid`, ties to
+    * the lower id; `ids` are the four centroid labels, whose literal type
+    * (Int or Long) is the column's type.
+    */
+  private def coarseAssign(e: DataFrame, ids: Seq[Any]): DataFrame =
+    (0 until 4)
+      .foldLeft(e.select(col("vec_id"), col("embedding"))) { case (df, j) =>
+        df.withColumn(s"s$j", quant(hashPlaneDot(col("embedding"), j, 0.0), 1e6))
+      }
+      .withColumn(
+        "centroid",
+        when(col("s0") >= col("s1") && col("s0") >= col("s2") && col("s0") >= col("s3"), ids(0))
+          .when(col("s1") >= col("s2") && col("s1") >= col("s3"), ids(1))
+          .when(col("s2") >= col("s3"), ids(2))
+          .otherwise(ids(3))
+      )
+
+  /** The query's nprobe=2 cells, picked by (score desc, centroid asc) — all
+    * inside the plan (array_sort on (-score, id) structs), no collect.
+    */
+  private def top2Cells: Column =
+    slice(
+      array_sort(array((0 until 4).map(j =>
+        struct((-col(s"s$j")).as("neg"), lit(j).as("c"))): _*)),
+      1, 2
+    )
+
+  /** IVF nprobe=2 search over [[coarseAssign]]'s frame (s6/s8): query vector
+    * 0 probes only its top-2 centroid cells, exact cosine ranks the probed
+    * subset; top-10 rows of `out` plus `cos_sim`.
+    */
+  private def ivfTop10(scored: DataFrame, out: Column*): DataFrame = {
+    val q = scored
+      .filter(col("vec_id") === 0)
+      .select(col("embedding").as("q_emb"), top2Cells.as("probe_structs"))
+      .select(col("q_emb"),
+        transform(col("probe_structs"), p => p.getField("c")).as("probes"))
+    scored
+      .filter(col("vec_id") =!= 0)
+      .crossJoin(broadcast(q))
+      .filter(array_contains(col("probes"), col("centroid")))
+      .select(out :+ quant(cosine(col("embedding"), col("q_emb")), 1e6).as("cos_sim"): _*)
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+      .limit(10)
+  }
+
+  /** DuckDB twin of centroid j's quantized score (see [[coarseAssign]]). */
+  private def centroidDotSql(j: Int): String =
+    s"floor(list_sum(list_transform(embedding, (x, i) -> CAST(x AS DOUBLE) * (((($j*64 + (i-1)) * 2654435761) % 1000000007) / 1000000000.0))) * 1000000) / 1000000"
+
+  /** DuckDB twin of [[coarseAssign]] plus the query's probed cells: CTEs
+    * `scored`, `q` (vector 0) and `probes(c)`.
+    */
+  private val coarseProbesSql: String =
+    s"""WITH scored AS (
+       |  SELECT vec_id, embedding, s0, s1, s2, s3, CAST(CASE
+       |    WHEN s0 >= s1 AND s0 >= s2 AND s0 >= s3 THEN 0
+       |    WHEN s1 >= s2 AND s1 >= s3 THEN 1
+       |    WHEN s2 >= s3 THEN 2
+       |    ELSE 3 END AS BIGINT) AS centroid
+       |  FROM (SELECT vec_id, embedding,
+       |          ${centroidDotSql(0)} AS s0, ${centroidDotSql(1)} AS s1, ${centroidDotSql(2)} AS s2, ${centroidDotSql(3)} AS s3
+       |        FROM embeddings) t),
+       |q AS (SELECT * FROM scored WHERE vec_id = 0),
+       |probes AS (
+       |  SELECT c FROM (
+       |    SELECT 0 AS c, s0 AS sc FROM q UNION ALL SELECT 1, s1 FROM q
+       |    UNION ALL SELECT 2, s2 FROM q UNION ALL SELECT 3, s3 FROM q) u
+       |  ORDER BY sc DESC, c LIMIT 2)""".stripMargin
 
   override def queries: Seq[Q] = Seq(
     // ---------------------------------------------------------------- topk
@@ -95,9 +366,7 @@ object SimilarityPack extends QueryPack {
           .agg(count(lit(1)).as("n_vectors"))
           .orderBy(col("bucket")),
       Some {
-        val bits = (0 until 4)
-          .map(j => s"CASE WHEN ${planeSql(j)} > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
+        val bits = bucketAtSql(4, 0)
         s"""SELECT bucket, COUNT(*) AS n_vectors
            |FROM (SELECT vec_id, CAST($bits AS BIGINT) AS bucket
            |      FROM (SELECT vec_id, embedding AS emb FROM embeddings))
@@ -126,9 +395,7 @@ object SimilarityPack extends QueryPack {
           .orderBy(col("bucket"))
       },
       Some {
-        val bits = (0 until 4)
-          .map(j => s"CASE WHEN ${planeSql(j)} > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
+        val bits = bucketAtSql(4, 0)
         s"""WITH e AS (
            |  SELECT vec_id, emb AS embedding, CAST($bits AS BIGINT) AS bucket
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings))
@@ -148,35 +415,19 @@ object SimilarityPack extends QueryPack {
     Q(
       "s5_centroid_assign",
       (s, d) => {
-        // 4 deterministic centroids from the same integer-hash formula as the
-        // LSH planes: centroid j, element i = ((j*64+i)*2654435761 % P)/1e9
-        // (codegen'd hashPlaneDot kernel, shift=0)
-        val e = Tables.embeddings(s, d)
-        val scored = (0 until 4).foldLeft(e.select(col("vec_id"), col("embedding"))) {
-          case (df, j) => df.withColumn(s"s$j", quant(hashPlaneDot(col("embedding"), j, 0.0), 1e6))
-        }
-        scored
-          .withColumn(
-            "centroid",
-            when(col("s0") >= col("s1") && col("s0") >= col("s2") && col("s0") >= col("s3"), 0)
-              .when(col("s1") >= col("s2") && col("s1") >= col("s3"), 1)
-              .when(col("s2") >= col("s3"), 2)
-              .otherwise(3)
-          )
+        coarseAssign(Tables.embeddings(s, d), 0 until 4)
           .groupBy(col("centroid"))
           .agg(count(lit(1)).as("n_vectors"))
           .orderBy(col("centroid"))
       },
       Some {
-        def dot(j: Int) =
-          s"floor(list_sum(list_transform(embedding, (x, i) -> CAST(x AS DOUBLE) * (((($j*64 + (i-1)) * 2654435761) % 1000000007) / 1000000000.0))) * 1000000) / 1000000"
         s"""SELECT centroid, COUNT(*) AS n_vectors FROM (
            |  SELECT CAST(CASE
            |    WHEN s0 >= s1 AND s0 >= s2 AND s0 >= s3 THEN 0
            |    WHEN s1 >= s2 AND s1 >= s3 THEN 1
            |    WHEN s2 >= s3 THEN 2
            |    ELSE 3 END AS BIGINT) AS centroid
-           |  FROM (SELECT ${dot(0)} AS s0, ${dot(1)} AS s1, ${dot(2)} AS s2, ${dot(3)} AS s3
+           |  FROM (SELECT ${centroidDotSql(0)} AS s0, ${centroidDotSql(1)} AS s1, ${centroidDotSql(2)} AS s2, ${centroidDotSql(3)} AS s3
            |        FROM embeddings) t) a
            |GROUP BY centroid
            |ORDER BY centroid""".stripMargin
@@ -189,62 +440,10 @@ object SimilarityPack extends QueryPack {
       "s6_ivf_topk",
       (s, d) => {
         // same deterministic coarse quantizer as s5 (codegen'd kernel)
-        val e = Tables.embeddings(s, d)
-        val scored = (0 until 4)
-          .foldLeft(e.select(col("vec_id"), col("embedding"))) { case (df, j) =>
-            df.withColumn(s"s$j", quant(hashPlaneDot(col("embedding"), j, 0.0), 1e6))
-          }
-          .withColumn(
-            "centroid",
-            when(col("s0") >= col("s1") && col("s0") >= col("s2") && col("s0") >= col("s3"), 0)
-              .when(col("s1") >= col("s2") && col("s1") >= col("s3"), 1)
-              .when(col("s2") >= col("s3"), 2)
-              .otherwise(3)
-          )
-        // query's nprobe=2 partitions, picked by (score desc, centroid asc) —
-        // all inside the plan (array_sort on (-score, id) structs), no collect
-        val q = scored
-          .filter(col("vec_id") === 0)
-          .select(
-            col("embedding").as("q_emb"),
-            slice(
-              array_sort(array((0 until 4).map(j =>
-                struct((-col(s"s$j")).as("neg"), lit(j).as("c"))): _*)),
-              1, 2
-            ).as("probe_structs")
-          )
-          .select(col("q_emb"),
-            transform(col("probe_structs"), p => p.getField("c")).as("probes"))
-        scored
-          .filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .filter(array_contains(col("probes"), col("centroid")))
-          .select(
-            col("vec_id"),
-            col("centroid"),
-            quant(cosine(col("embedding"), col("q_emb")), 1e6).as("cos_sim")
-          )
-          .orderBy(col("cos_sim").desc, col("vec_id"))
-          .limit(10)
+        ivfTop10(coarseAssign(Tables.embeddings(s, d), 0 until 4), col("vec_id"), col("centroid"))
       },
       Some {
-        def dotj(j: Int, emb: String = "embedding") =
-          s"floor(list_sum(list_transform($emb, (x, i) -> CAST(x AS DOUBLE) * (((($j*64 + (i-1)) * 2654435761) % 1000000007) / 1000000000.0))) * 1000000) / 1000000"
-        s"""WITH scored AS (
-           |  SELECT vec_id, embedding, s0, s1, s2, s3, CAST(CASE
-           |    WHEN s0 >= s1 AND s0 >= s2 AND s0 >= s3 THEN 0
-           |    WHEN s1 >= s2 AND s1 >= s3 THEN 1
-           |    WHEN s2 >= s3 THEN 2
-           |    ELSE 3 END AS BIGINT) AS centroid
-           |  FROM (SELECT vec_id, embedding,
-           |          ${dotj(0)} AS s0, ${dotj(1)} AS s1, ${dotj(2)} AS s2, ${dotj(3)} AS s3
-           |        FROM embeddings) t),
-           |q AS (SELECT * FROM scored WHERE vec_id = 0),
-           |probes AS (
-           |  SELECT c FROM (
-           |    SELECT 0 AS c, s0 AS sc FROM q UNION ALL SELECT 1, s1 FROM q
-           |    UNION ALL SELECT 2, s2 FROM q UNION ALL SELECT 3, s3 FROM q) u
-           |  ORDER BY sc DESC, c LIMIT 2)
+        s"""$coarseProbesSql
            |SELECT s.vec_id, s.centroid,
            |  floor(${dotSql("s.embedding", "q.embedding")} /
            |        (${normSql("s.embedding")} * ${normSql("q.embedding")}) * 1000000) / 1000000 AS cos_sim
@@ -302,39 +501,7 @@ object SimilarityPack extends QueryPack {
           .select(col("vec_id"), quant(cosine(col("embedding"), col("q_emb")), 1e6).as("cos_sim"))
           .orderBy(col("cos_sim").desc, col("vec_id"))
           .limit(10)
-        val scored = (0 until 4)
-          .foldLeft(e.select(col("vec_id"), col("embedding"))) { case (df, j) =>
-            df.withColumn(s"s$j", quant(hashPlaneDot(col("embedding"), j, 0.0), 1e6))
-          }
-          .withColumn(
-            "centroid",
-            when(col("s0") >= col("s1") && col("s0") >= col("s2") && col("s0") >= col("s3"), 0)
-              .when(col("s1") >= col("s2") && col("s1") >= col("s3"), 1)
-              .when(col("s2") >= col("s3"), 2)
-              .otherwise(3)
-          )
-        val qp = scored
-          .filter(col("vec_id") === 0)
-          .select(
-            col("embedding").as("q_emb"),
-            slice(
-              array_sort(array((0 until 4).map(j =>
-                struct((-col(s"s$j")).as("neg"), lit(j).as("c"))): _*)),
-              1, 2
-            ).as("probe_structs")
-          )
-          .select(col("q_emb"),
-            transform(col("probe_structs"), p => p.getField("c")).as("probes"))
-        val ivf = scored
-          .filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(qp))
-          .filter(array_contains(col("probes"), col("centroid")))
-          .select(
-            col("vec_id"),
-            quant(cosine(col("embedding"), col("q_emb")), 1e6).as("cos_sim")
-          )
-          .orderBy(col("cos_sim").desc, col("vec_id"))
-          .limit(10)
+        val ivf = ivfTop10(coarseAssign(e, 0 until 4), col("vec_id"))
         bf.select(col("vec_id"))
           .join(ivf.select(col("vec_id")), Seq("vec_id"))
           .agg(count(lit(1)).as("n_overlap"))
@@ -345,23 +512,7 @@ object SimilarityPack extends QueryPack {
           )
       },
       Some {
-        def dotj(j: Int) =
-          s"floor(list_sum(list_transform(embedding, (x, i) -> CAST(x AS DOUBLE) * (((($j*64 + (i-1)) * 2654435761) % 1000000007) / 1000000000.0))) * 1000000) / 1000000"
-        s"""WITH scored AS (
-           |  SELECT vec_id, embedding, s0, s1, s2, s3, CAST(CASE
-           |    WHEN s0 >= s1 AND s0 >= s2 AND s0 >= s3 THEN 0
-           |    WHEN s1 >= s2 AND s1 >= s3 THEN 1
-           |    WHEN s2 >= s3 THEN 2
-           |    ELSE 3 END AS BIGINT) AS centroid
-           |  FROM (SELECT vec_id, embedding,
-           |          ${dotj(0)} AS s0, ${dotj(1)} AS s1, ${dotj(2)} AS s2, ${dotj(3)} AS s3
-           |        FROM embeddings) t),
-           |q AS (SELECT * FROM scored WHERE vec_id = 0),
-           |probes AS (
-           |  SELECT c FROM (
-           |    SELECT 0 AS c, s0 AS sc FROM q UNION ALL SELECT 1, s1 FROM q
-           |    UNION ALL SELECT 2, s2 FROM q UNION ALL SELECT 3, s3 FROM q) u
-           |  ORDER BY sc DESC, c LIMIT 2),
+        s"""$coarseProbesSql,
            |bf AS (
            |  SELECT vec_id FROM (
            |    SELECT s.vec_id,
@@ -485,28 +636,12 @@ object SimilarityPack extends QueryPack {
       (s, d) => {
         // coarse stage: s6's quantizer (codegen'd hashPlaneDot); fine stage:
         // PQ/ADC via the compiled PqDists kernel over ONLY the probed cells
-        val e = Tables.embeddings(s, d)
-        val scored = (0 until 4)
-          .foldLeft(e.select(col("vec_id"), col("embedding"))) { case (df, j) =>
-            df.withColumn(s"s$j", quant(hashPlaneDot(col("embedding"), j, 0.0), 1e6))
-          }
-          .withColumn(
-            "centroid",
-            when(col("s0") >= col("s1") && col("s0") >= col("s2") && col("s0") >= col("s3"), 0L)
-              .when(col("s1") >= col("s2") && col("s1") >= col("s3"), 1L)
-              .when(col("s2") >= col("s3"), 2L)
-              .otherwise(3L)
-          )
+        val scored = coarseAssign(Tables.embeddings(s, d), (0 until 4).map(_.toLong))
         val qp = scored
           .filter(col("vec_id") === 0)
           .select(
             graft.functions.VectorExpressions.pqDists(col("embedding")).as("qds"),
-            slice(
-              array_sort(array((0 until 4).map(j =>
-                struct((-col(s"s$j")).as("neg"), lit(j).as("c"))): _*)),
-              1, 2
-            ).as("probe_structs")
-          )
+            top2Cells.as("probe_structs"))
           .select(col("qds"),
             transform(col("probe_structs"), p => p.getField("c").cast("long")).as("probes"))
         val cand = scored
@@ -602,18 +737,8 @@ object SimilarityPack extends QueryPack {
         // the margin is floor-quantized to integer micro-units BEFORE the
         // per-cell sum, so the aggregate is order-free and oracle-exact.
         // One scan, one 4-group aggregate — no joins.
-        val e = Tables.embeddings(s, d)
-        val scored = (0 until 4).foldLeft(e.select(col("vec_id"), col("embedding"))) {
-          case (df, j) => df.withColumn(s"s$j", quant(hashPlaneDot(col("embedding"), j, 0.0), 1e6))
-        }
         val sorted = sort_array(array(col("s0"), col("s1"), col("s2"), col("s3")), asc = false)
-        scored
-          .withColumn(
-            "centroid",
-            when(col("s0") >= col("s1") && col("s0") >= col("s2") && col("s0") >= col("s3"), 0L)
-              .when(col("s1") >= col("s2") && col("s1") >= col("s3"), 1L)
-              .when(col("s2") >= col("s3"), 2L)
-              .otherwise(3L))
+        coarseAssign(Tables.embeddings(s, d), (0 until 4).map(_.toLong))
           .withColumn(
             "margin_u",
             floor((sorted.getItem(0) - sorted.getItem(1)) * 1e6).cast("long"))
@@ -626,10 +751,8 @@ object SimilarityPack extends QueryPack {
           .orderBy(col("centroid"))
       },
       Some {
-        def dot(j: Int) =
-          s"floor(list_sum(list_transform(embedding, (x, i) -> CAST(x AS DOUBLE) * (((($j*64 + (i-1)) * 2654435761) % 1000000007) / 1000000000.0))) * 1000000) / 1000000"
         s"""WITH scored AS (
-           |  SELECT ${dot(0)} AS s0, ${dot(1)} AS s1, ${dot(2)} AS s2, ${dot(3)} AS s3
+           |  SELECT ${centroidDotSql(0)} AS s0, ${centroidDotSql(1)} AS s1, ${centroidDotSql(2)} AS s2, ${centroidDotSql(3)} AS s3
            |  FROM embeddings),
            |assigned AS (
            |  SELECT CAST(CASE
@@ -872,9 +995,7 @@ object SimilarityPack extends QueryPack {
           .orderBy(col("q_id"), col("rank"))
       },
       Some {
-        val bits = (0 until 4)
-          .map(j => s"CASE WHEN ${planeSql(j)} > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
+        val bits = bucketAtSql(4, 0)
         s"""WITH e AS (
            |  SELECT vec_id, emb AS embedding, CAST($bits AS BIGINT) AS bucket
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings)),
@@ -883,9 +1004,7 @@ object SimilarityPack extends QueryPack {
            |db AS (SELECT * FROM e WHERE vec_id % 50 <> 0),
            |sc AS (
            |  SELECT q.q_id, db.vec_id AS nn_id,
-           |    floor(${dotSql("db.embedding", "q.q_emb")} /
-           |          nullif(${normSql("db.embedding")} * ${normSql("q.q_emb")}, 0) * 1000000)
-           |      / 1000000 AS cos_sim
+           |    ${cosSql("db.embedding", "q.q_emb", 10)} AS cos_sim
            |  FROM db JOIN q ON db.bucket = q.bucket)
            |SELECT q_id, rank, nn_id, cos_sim FROM (
            |  SELECT q_id, nn_id, cos_sim,
@@ -939,9 +1058,7 @@ object SimilarityPack extends QueryPack {
           .orderBy(col("q_id"), col("rank"))
       },
       Some {
-        val bits = (0 until 4)
-          .map(j => s"CASE WHEN ${planeSql(j)} > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
+        val bits = bucketAtSql(4, 0)
         s"""WITH e AS (
            |  SELECT vec_id, emb AS embedding, CAST($bits AS BIGINT) AS bucket
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings)),
@@ -951,9 +1068,7 @@ object SimilarityPack extends QueryPack {
            |db AS (SELECT * FROM e WHERE vec_id % 50 <> 0),
            |sc AS (
            |  SELECT q.q_id, db.vec_id AS nn_id,
-           |    floor(${dotSql("db.embedding", "q.q_emb")} /
-           |          nullif(${normSql("db.embedding")} * ${normSql("q.q_emb")}, 0) * 1000000)
-           |      / 1000000 AS cos_sim
+           |    ${cosSql("db.embedding", "q.q_emb", 10)} AS cos_sim
            |  FROM db JOIN q ON db.bucket = q.bucket)
            |SELECT q_id, rank, nn_id, cos_sim, n_cand FROM (
            |  SELECT q_id, nn_id, cos_sim,
@@ -989,23 +1104,7 @@ object SimilarityPack extends QueryPack {
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
             col("nrm").as("q_nrm"), col("bucket").as("qb"))
         val db = e.filter(col("vec_id") % 50 =!= 0)
-        val cos = quant(dot(col("embedding"), col("q_emb")) /
-          when(col("nrm") * col("q_nrm") > 0.0, col("nrm") * col("q_nrm")), 1e6)
-        // exact truth: block join spreads the |Q|x|DB| pair work over 8 keys.
-        // NULL (zero-norm) similarities are dropped BEFORE ranking on both
-        // sides so parity never leans on an engine's default null order
-        // (ADVICE r11 — Spark desc = nulls-last happens to match DuckDB's
-        // default_null_order, but a non-default session setting would
-        // silently flip membership)
-        val truth = db.withColumn("blk", pmod(col("vec_id"), lit(8)))
-          .join(qs.select(col("q_id"), col("q_emb"), col("q_nrm"),
-            explode(sequence(lit(0L), lit(7L))).as("blk")), Seq("blk"))
-          .select(col("q_id"), col("vec_id").as("nn_id"), cos.as("cs"))
-          .filter(col("cs").isNotNull)
-          .withColumn("rk",
-            row_number().over(Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("nn_id"))))
-          .filter(col("rk") <= 3)
-          .select(col("q_id"), col("nn_id"))
+        val truth = exactTop3(db, qs, col("q_id"), col("q_emb"), col("q_nrm"))
         // probe sequence: pi=1 own cell, pi=2..5 the Hamming-1 flips
         val qcells = qs.select(col("q_id"), col("q_emb"), col("q_nrm"), col("qb"),
           explode(array(Seq((0L, 1), (1L, 2), (2L, 3), (4L, 4), (8L, 5)).map {
@@ -1014,7 +1113,7 @@ object SimilarityPack extends QueryPack {
           .select(col("q_id"), col("q_emb"), col("q_nrm"),
             col("qb").bitwiseXOR(col("pr.m")).as("bucket"), col("pr.pi").as("pi"))
         val cand = db.join(qcells, Seq("bucket"))
-          .select(col("q_id"), col("pi"), col("vec_id").as("nn_id"), cos.as("cs"))
+          .select(col("q_id"), col("pi"), col("vec_id").as("nn_id"), qCos.as("cs"))
           .filter(col("cs").isNotNull)
         val retrieved = cand
           .select(col("q_id"), col("nn_id"), col("cs"),
@@ -1035,29 +1134,19 @@ object SimilarityPack extends QueryPack {
           .orderBy(col("n_probes"))
       },
       Some {
-        val bits = (0 until 4)
-          .map(j => s"CASE WHEN ${planeSql(j)} > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
-        val cosSql = s"""floor(${dotSql("db.embedding", "q.q_emb")} /
-           |          nullif(${normSql("db.embedding")} * ${normSql("q.q_emb")}, 0) * 1000000)
-           |      / 1000000""".stripMargin
+        val bits = bucketAtSql(4, 0)
+        val cs = cosSql("db.embedding", "q.q_emb", 10)
         s"""WITH e AS (
            |  SELECT vec_id, emb AS embedding, CAST($bits AS BIGINT) AS bucket
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings)),
            |q AS (SELECT vec_id AS q_id, bucket AS qb, embedding AS q_emb
            |      FROM e WHERE vec_id % 50 = 0),
            |db AS (SELECT * FROM e WHERE vec_id % 50 <> 0),
-           |truth AS (
-           |  SELECT q_id, nn_id FROM (
-           |    SELECT q_id, nn_id,
-           |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cs DESC, nn_id) AS rk
-           |    FROM (
-           |      SELECT q.q_id, db.vec_id AS nn_id, $cosSql AS cs
-           |      FROM db, q) t0 WHERE cs IS NOT NULL) t WHERE rk <= 3),
+           |${truthSql(s"SELECT q.q_id, db.vec_id AS nn_id, $cs AS cs")},
            |pr AS (SELECT unnest([0, 1, 2, 4, 8]) AS m, unnest([1, 2, 3, 4, 5]) AS pi),
            |cand AS (
            |  SELECT * FROM (
-           |    SELECT q.q_id, q.pi, db.vec_id AS nn_id, $cosSql AS cs
+           |    SELECT q.q_id, q.pi, db.vec_id AS nn_id, $cs AS cs
            |    FROM db JOIN (SELECT q_id, q_emb, xor(qb, m) AS bucket, pi FROM q, pr) q
            |      ON db.bucket = q.bucket) c WHERE cs IS NOT NULL),
            |ret AS (
@@ -1090,57 +1179,27 @@ object SimilarityPack extends QueryPack {
         // contrastive/embedding training run actually wants (easy negatives
         // teach nothing; the hard ones define the margin). Candidates come
         // from the anchor's 4-plane LSH cell (equi-join — per-cell fan-out,
-        // never |A|x|DB|), the different-label predicate rides the join,
-        // exact cosine reranks, and top-3 per anchor is the row_number
-        // window the TopKToNative rule lowers to the bounded-heap operator.
-        // At 100 TB this is s16's batched-ANN shape plus a label guard:
-        // mining cost stays proportional to cell density and the anchor
-        // set is the small side of every stage.
-        import org.apache.spark.sql.expressions.Window
+        // never |A|x|DB|). At 100 TB this is s16's batched-ANN shape plus a
+        // label guard: mining cost stays proportional to cell density and
+        // the anchor set is the small side of every stage.
         val e = Tables.embeddings(s, d)
           .select(col("vec_id"), col("label"), col("embedding"),
             lshBucket(col("embedding"), 4).as("bucket"), norm(col("embedding")).as("nrm"))
         val anchors = e.filter(col("vec_id") % 25 === 0)
           .select(col("vec_id").as("q_id"), col("label").as("q_lbl"),
             col("bucket"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-        val scored = e.join(anchors, Seq("bucket"))
-          .filter(col("label") =!= col("q_lbl"))
-          .select(col("q_id"), col("q_lbl").cast("long").as("q_label"),
-            col("vec_id").as("neg_id"), col("label").cast("long").as("neg_label"),
-            // NULL divisor on a zero-norm vector (when-guard here, nullif in
-            // the oracle) — floor(NaN) is 0 in Spark but NaN in DuckDB.
-            quant(dot(col("embedding"), col("q_emb")) /
-              when(col("nrm") * col("q_nrm") > 0.0, col("nrm") * col("q_nrm")), 1e6)
-              .as("cos_sim"))
-        scored
-          // a zero-norm vector (NULL cos_sim) is not a meaningful hard
-          // negative — drop it BEFORE ranking so it can't claim a top-3
-          // slot in a sparse cell (ADVICE r10); same predicate in the oracle
-          .filter(col("cos_sim").isNotNull)
-          .withColumn("rank",
-            row_number().over(
-              Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("neg_id")))
-              .cast("long"))
-          .filter(col("rank") <= 3)
-          .select(col("q_id"), col("rank"), col("neg_id"), col("q_label"),
-            col("neg_label"), col("cos_sim"))
-          .orderBy(col("q_id"), col("rank"))
+        hardNegatives(e, anchors, Seq("bucket"), multiTable = false)
       },
       Some {
-        val bits = (0 until 4)
-          .map(j => s"CASE WHEN ${planeSql(j)} > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
         s"""WITH e AS (
-           |  SELECT vec_id, label, emb AS embedding, CAST($bits AS BIGINT) AS bucket
+           |  SELECT vec_id, label, emb AS embedding, CAST(${bucketAtSql(4, 0)} AS BIGINT) AS bucket
            |  FROM (SELECT vec_id, label, embedding AS emb FROM embeddings)),
            |a AS (SELECT vec_id AS q_id, label AS q_lbl, bucket, embedding AS q_emb
            |      FROM e WHERE vec_id % 25 = 0),
            |sc AS (
            |  SELECT a.q_id, CAST(a.q_lbl AS BIGINT) AS q_label,
            |    e.vec_id AS neg_id, CAST(e.label AS BIGINT) AS neg_label,
-           |    floor(${dotSql("e.embedding", "a.q_emb")} /
-           |          nullif(${normSql("e.embedding")} * ${normSql("a.q_emb")}, 0) * 1000000)
-           |      / 1000000 AS cos_sim
+           |    ${cosSql("e.embedding", "a.q_emb", 10)} AS cos_sim
            |  FROM e JOIN a ON e.bucket = a.bucket AND e.label <> a.q_lbl)
            |SELECT q_id, rank, neg_id, q_label, neg_label, cos_sim FROM (
            |  SELECT q_id, q_label, neg_id, neg_label, cos_sim,
@@ -1173,10 +1232,7 @@ object SimilarityPack extends QueryPack {
         // disjoint plane sets) and Hamming-1 multi-probe within each table
         // (13 probe cells/table). Index side carries L rows per vector —
         // the standard L-times space trade; query side fans out 52x; the
-        // join stays an equi-join on (table, bucket). Tables overlap, so
-        // candidates dedup by (q_id, nn_id) — quantized cosine is
-        // deterministic per pair, so distinct() after scoring is exact.
-        import org.apache.spark.sql.expressions.Window
+        // join stays an equi-join on (table, bucket).
         val K = 12
         val L = 4
         val masks = 0L +: (0 until K).map(b => 1L << b)
@@ -1195,37 +1251,14 @@ object SimilarityPack extends QueryPack {
               struct(lit(t).as("tbl"), col(s"wb$t").bitwiseXOR(lit(m)).as("bucket"))): _*)).as("tb"))
           .select(col("q_id"), col("q_emb"), col("q_nrm"),
             col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val cand = db.join(qs, Seq("tbl", "bucket"))
-          .select(col("q_id"), col("vec_id").as("nn_id"),
-            quant(dot(col("embedding"), col("q_emb")) /
-              when(col("nrm") * col("q_nrm") > 0.0, col("nrm") * col("q_nrm")), 1e6)
-              .as("cos_sim"))
-          .filter(col("cos_sim").isNotNull)
-          .distinct()
-        cand
-          .withColumn("n_cand", count(lit(1)).over(Window.partitionBy(col("q_id"))))
-          .withColumn("rank",
-            row_number().over(
-              Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("nn_id")))
-              .cast("long"))
-          .filter(col("rank") <= 3)
-          .select(col("q_id"), col("rank"), col("nn_id"), col("cos_sim"), col("n_cand"))
-          .orderBy(col("q_id"), col("rank"))
+        annTop3(db, qs)
       },
       Some {
-        def bucketAt(k: Int, offset: Int): String = (0 until k)
-          .map(b => s"CASE WHEN ${planeSql(offset + b)} > 0 THEN ${1L << b} ELSE 0 END")
-          .mkString(" + ")
-        val wcols = (0 until 4)
-          .map(t => s"CAST(${bucketAt(12, t * 12)} AS BIGINT) AS wb$t")
-          .mkString(",\n    ")
         val wcase = "CASE t.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
         val pcase = "CASE p.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
-        val probeRows = (for { t <- 0 until 4; m <- 0L +: (0 until 12).map(b => 1L << b) }
-          yield s"($t,$m)").mkString(",")
         s"""WITH e AS (
            |  SELECT vec_id, emb AS embedding,
-           |    $wcols
+           |    ${pinnedColsSql("wb").mkString(",\n    ")}
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings)),
            |db AS (
            |  SELECT e.vec_id, e.embedding, t.tbl, $wcase AS bucket
@@ -1234,23 +1267,9 @@ object SimilarityPack extends QueryPack {
            |q AS (
            |  SELECT e.vec_id AS q_id, e.embedding AS q_emb, p.tbl,
            |    xor($pcase, p.m) AS bucket
-           |  FROM e, (VALUES $probeRows) p(tbl, m)
+           |  FROM e, (VALUES $pinnedProbeRows) p(tbl, m)
            |  WHERE e.vec_id % 50 = 0),
-           |cand AS (
-           |  SELECT DISTINCT q_id, nn_id, cos_sim FROM (
-           |    SELECT q.q_id, db.vec_id AS nn_id,
-           |      floor(${dotSql("db.embedding", "q.q_emb")} /
-           |            nullif(${normSql("db.embedding")} * ${normSql("q.q_emb")}, 0) * 1000000)
-           |        / 1000000 AS cos_sim
-           |    FROM db JOIN q ON db.tbl = q.tbl AND db.bucket = q.bucket) t
-           |  WHERE cos_sim IS NOT NULL)
-           |SELECT q_id, rank, nn_id, cos_sim, n_cand FROM (
-           |  SELECT q_id, nn_id, cos_sim,
-           |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, nn_id) AS rank,
-           |    COUNT(*) OVER (PARTITION BY q_id) AS n_cand
-           |  FROM cand) t
-           |WHERE rank <= 3
-           |ORDER BY q_id, rank""".stripMargin
+           |${annTop3Sql("q", None)}""".stripMargin
       },
       doc = "corpus-proof ANN config: 4 tables x 12 planes (4096 cells each, " +
         "E2LSH OR-construction) + Hamming-1 multi-probe per table — per-cell " +
@@ -1266,14 +1285,11 @@ object SimilarityPack extends QueryPack {
         // that justifies s20's config: recall@3 against exact blocked-join
         // truth AND total candidate volume for (a) the pinned 16-cell code
         // single-probe, (b) 16-cell with s17's 5-probe ladder, (c) s20's
-        // 4x12-plane multi-table Hamming-1 config. One (table, bucket)
-        // equi-join serves all three configs: the index explodes to 5 keyed
-        // rows per vector (tbl=-1 the narrow code, 0..3 the wide tables),
-        // the query side fans out per config x probe, and candidates dedup
-        // per (config, query, neighbor). The artifact shows the trade the
-        // 100 TB operator tunes: candidates per unit recall, with the wide
-        // config's candidate volume two orders below the narrow probes'.
-        import org.apache.spark.sql.expressions.Window
+        // 4x12-plane multi-table Hamming-1 config. The index explodes to 5
+        // keyed rows per vector (tbl=-1 the narrow code, 0..3 the wide
+        // tables). The artifact shows the trade the 100 TB operator tunes:
+        // candidates per unit recall, with the wide config's candidate
+        // volume two orders below the narrow probes'.
         val K = 12
         val L = 4
         val wmasks = 0L +: (0 until K).map(b => 1L << b)
@@ -1281,16 +1297,6 @@ object SimilarityPack extends QueryPack {
           Seq(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"),
             lshBucket(col("embedding"), 4).as("nb")) ++
             (0 until L).map(t => lshBucketAt(col("embedding"), K, t * K).as(s"wb$t")): _*)
-        val db = e.filter(col("vec_id") % 50 =!= 0)
-        val qs = e.filter(col("vec_id") % 50 === 0)
-        val dbx = db
-          .select(col("vec_id"), col("embedding"), col("nrm"),
-            explode(array(
-              struct(lit(-1).as("tbl"), col("nb").as("bucket")) +:
-                (0 until L).map(t => struct(lit(t).as("tbl"), col(s"wb$t").as("bucket"))): _*))
-              .as("tb"))
-          .select(col("vec_id"), col("embedding"), col("nrm"),
-            col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
         val probes =
           Seq(struct(lit("lsh_16c_1p").as("config"), lit(-1).as("tbl"), col("nb").as("bucket"))) ++
             Seq(0L, 1L, 2L, 4L, 8L).map(m =>
@@ -1299,58 +1305,13 @@ object SimilarityPack extends QueryPack {
             (for { t <- 0 until L; m <- wmasks } yield
               struct(lit("lsh_4096c_x4_h1").as("config"), lit(t).as("tbl"),
                 col(s"wb$t").bitwiseXOR(lit(m)).as("bucket")))
-        val qp = qs
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
-            explode(array(probes: _*)).as("pr"))
-          .select(col("q_id"), col("q_emb"), col("q_nrm"),
-            col("pr.config").as("config"), col("pr.tbl").as("tbl"), col("pr.bucket").as("bucket"))
-        val cosExpr = quant(dot(col("embedding"), col("q_emb")) /
-          when(col("nrm") * col("q_nrm") > 0.0, col("nrm") * col("q_nrm")), 1e6)
-        val cand = dbx.join(qp, Seq("tbl", "bucket"))
-          .select(col("config"), col("q_id"), col("vec_id").as("nn_id"), cosExpr.as("cos_sim"))
-          .filter(col("cos_sim").isNotNull)
-          .distinct()
-        val counts = cand.groupBy(col("config")).agg(count(lit(1)).as("n_cand"))
-        val top3 = cand
-          .withColumn("rk",
-            row_number().over(
-              Window.partitionBy(col("config"), col("q_id"))
-                .orderBy(col("cos_sim").desc, col("nn_id"))))
-          .filter(col("rk") <= 3)
-          .select(col("config"), col("q_id"), col("nn_id"))
-        // exact truth: block join spreads the |Q|x|DB| pair work over 8 keys
-        val truth = db.withColumn("blk", pmod(col("vec_id"), lit(8)))
-          .join(qs.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("nrm").as("q_nrm"), explode(sequence(lit(0L), lit(7L))).as("blk")), Seq("blk"))
-          .select(col("q_id"), col("vec_id").as("nn_id"), cosExpr.as("cs"))
-          // NULL (zero-norm) similarities dropped BEFORE the truth window so
-          // parity never leans on an engine's default null order (ADVICE r11)
-          .filter(col("cs").isNotNull)
-          .withColumn("rk",
-            row_number().over(Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("nn_id"))))
-          .filter(col("rk") <= 3)
-          .select(col("q_id"), col("nn_id"))
-        val hits = top3
-          .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "nn_id"), "left")
-          .groupBy(col("config"))
-          .agg(count(lit(1)).as("n_retrieved"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        val nq = qs.agg(count(lit(1)).as("n_q"))
-        counts.join(hits, Seq("config"))
-          .crossJoin(broadcast(nq))
-          .select(col("config"), col("n_cand"), col("n_retrieved"), col("n_hits"),
-            expr("n_hits * 1000000 DIV (3 * n_q)").as("recall_ppm"))
-          .orderBy(col("config"))
+        recallLadder(e,
+          array(
+            struct(lit(-1).as("tbl"), col("nb").as("bucket")) +:
+              (0 until L).map(t => struct(lit(t).as("tbl"), col(s"wb$t").as("bucket"))): _*),
+          array(probes: _*))
       },
       Some {
-        def bucketAt(k: Int, offset: Int): String = (0 until k)
-          .map(b => s"CASE WHEN ${planeSql(offset + b)} > 0 THEN ${1L << b} ELSE 0 END")
-          .mkString(" + ")
-        val nbits = (0 until 4)
-          .map(j => s"CASE WHEN ${planeSql(j)} > 0 THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
-        val wcols = (0 until 4)
-          .map(t => s"CAST(${bucketAt(12, t * 12)} AS BIGINT) AS wb$t")
-          .mkString(",\n    ")
         val tcase = "CASE t.tbl WHEN -1 THEN nb WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
         val pcase = "CASE p.tbl WHEN -1 THEN nb WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
         val probeRows = (
@@ -1359,16 +1320,10 @@ object SimilarityPack extends QueryPack {
             (for { t <- 0 until 4; m <- 0L +: (0 until 12).map(b => 1L << b) }
               yield s"('lsh_4096c_x4_h1',$t,$m)")
           ).mkString(",")
-        val candCos = s"""floor(${dotSql("d.embedding", "p.q_emb")} /
-           |            nullif(${normSql("d.embedding")} * ${normSql("p.q_emb")}, 0) * 1000000)
-           |        / 1000000""".stripMargin
-        val truthCos = s"""floor(${dotSql("db.embedding", "q.q_emb")} /
-           |          nullif(${normSql("db.embedding")} * ${normSql("q.q_emb")}, 0) * 1000000)
-           |      / 1000000""".stripMargin
         s"""WITH e AS (
            |  SELECT vec_id, emb AS embedding,
-           |    CAST($nbits AS BIGINT) AS nb,
-           |    $wcols
+           |    CAST(${bucketAtSql(4, 0)} AS BIGINT) AS nb,
+           |    ${pinnedColsSql("wb").mkString(",\n    ")}
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings)),
            |q AS (SELECT vec_id AS q_id, embedding AS q_emb, nb, wb0, wb1, wb2, wb3
            |      FROM e WHERE vec_id % 50 = 0),
@@ -1379,36 +1334,8 @@ object SimilarityPack extends QueryPack {
            |qp AS (
            |  SELECT q.q_id, q.q_emb, p.config, p.tbl, xor($pcase, p.m) AS bucket
            |  FROM q, (VALUES $probeRows) p(config, tbl, m)),
-           |cand AS (
-           |  SELECT DISTINCT config, q_id, nn_id, cos_sim FROM (
-           |    SELECT p.config, p.q_id, d.vec_id AS nn_id,
-           |      $candCos AS cos_sim
-           |    FROM dbx d JOIN qp p ON d.tbl = p.tbl AND d.bucket = p.bucket) t
-           |  WHERE cos_sim IS NOT NULL),
-           |counts AS (SELECT config, COUNT(*) AS n_cand FROM cand GROUP BY config),
-           |top3 AS (
-           |  SELECT config, q_id, nn_id FROM (
-           |    SELECT config, q_id, nn_id,
-           |      ROW_NUMBER() OVER (PARTITION BY config, q_id
-           |                         ORDER BY cos_sim DESC, nn_id) AS rk
-           |    FROM cand) t WHERE rk <= 3),
-           |truth AS (
-           |  SELECT q_id, nn_id FROM (
-           |    SELECT q_id, nn_id,
-           |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cs DESC, nn_id) AS rk
-           |    FROM (
-           |      SELECT q.q_id, db.vec_id AS nn_id, $truthCos AS cs
-           |      FROM db, q) t0 WHERE cs IS NOT NULL) t WHERE rk <= 3),
-           |hits AS (
-           |  SELECT config, COUNT(*) AS n_retrieved,
-           |    CAST(SUM(CASE WHEN truth.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-           |  FROM top3 LEFT JOIN truth USING (q_id, nn_id)
-           |  GROUP BY config),
-           |nq AS (SELECT COUNT(*) AS n_q FROM q)
-           |SELECT counts.config, n_cand, n_retrieved, n_hits,
-           |  n_hits * 1000000 // (3 * (SELECT n_q FROM nq)) AS recall_ppm
-           |FROM counts JOIN hits USING (config)
-           |ORDER BY config""".stripMargin
+           |${recallLadderTailSql(
+             s"SELECT q.q_id, db.vec_id AS nn_id, ${cosSql("db.embedding", "q.q_emb", 10)} AS cs")}""".stripMargin
       },
       doc = "recall@3/candidate-volume ladder vs exact blocked-join truth for the " +
         "pinned 16-cell code (1 and 5 probes) against s20's 4x12-plane multi-table " +
@@ -1424,82 +1351,36 @@ object SimilarityPack extends QueryPack {
         // adaptive-k pattern transplanted to the retrieval shape. s20 (the
         // pinned-k baseline this query is the production path for)
         // hardcodes K=12/L=4 and documents re-tuning as an offline step;
-        // here k = len(bin(ceil(n_db/8))) clamped to [4,16] is derived from
-        // a broadcast count of the INDEX side, so per-cell density stays ~8
-        // vectors per table at ANY corpus size — the index can never
-        // silently re-densify between retunes. The integer-exact formula
-        // (no float log2 at a cell boundary) and the compiled LshBucketDyn
-        // kernel are exactly d29's; plane offsets t*20 keep the 4 tables'
-        // plane sets disjoint at the max width. Query side fans out over
-        // the exact cell + Hamming-1 probes (k+1 probes/table, growing only
-        // as k ~ log2 n); index carries L=4 rows/vector; the candidate join
-        // stays an equi-join on (tbl, bucket). Scoring, zero-norm guard,
-        // dedup, and bounded-heap top-3 are exactly s20's.
-        import org.apache.spark.sql.expressions.Window
-        import graft.functions.VectorExpressions.lshBucketDyn
-        val L = 4
-        val kdf = Tables.embeddings(s, d)
-          .filter(col("vec_id") % 50 =!= 0)
-          .agg(count(lit(1)).as("n"))
-          .select(expr("GREATEST(4, LEAST(16, length(bin((n + 7) DIV 8)))) AS k"))
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("embedding"))
-          .crossJoin(broadcast(kdf))
-          .select(
-            Seq(col("vec_id"), col("embedding"), col("k"), norm(col("embedding")).as("nrm")) ++
-              (0 until L).map(t => lshBucketDyn(col("embedding"), col("k"), t * 20).as(s"wb$t")): _*)
-        val idxArr = (0 until L)
-          .map(t => s"named_struct('tbl', $t, 'bucket', wb$t)")
-          .mkString("array(", ", ", ")")
-        val probeArr = (0 until L)
-          .map(t => s"""transform(sequence(0, k), p -> named_struct('tbl', $t,
-             |  'bucket', CASE WHEN p = 0 THEN wb$t
-             |            ELSE wb$t ^ shiftleft(CAST(1 AS BIGINT), p - 1) END))""".stripMargin)
-          .mkString("concat(", ", ", ")")
+        // here k (LshCodes.adaptiveK) is derived from a broadcast count of
+        // the INDEX side, so per-cell density stays ~8 vectors per table at
+        // ANY corpus size — the index can never silently re-densify between
+        // retunes. Query side fans out over the exact cell + Hamming-1
+        // probes (k+1 probes/table, growing only as k ~ log2 n); index
+        // carries L=4 rows/vector; the candidate join stays an equi-join on
+        // (tbl, bucket). Scoring, zero-norm guard, dedup, and bounded-heap
+        // top-3 are exactly s20's.
+        val e = LshCodes.withAdaptiveCodes(
+          Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+          LshCodes.adaptiveK(Tables.embeddings(s, d).filter(col("vec_id") % 50 =!= 0)))
         val db = e.filter(col("vec_id") % 50 =!= 0)
-          .select(col("vec_id"), col("embedding"), col("nrm"), explode(expr(idxArr)).as("tb"))
+          .select(col("vec_id"), col("embedding"), col("nrm"),
+            explode(LshCodes.adaptiveIdxCells).as("tb"))
           .select(col("vec_id"), col("embedding"), col("nrm"),
             col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
         val qs = e.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
             col("nrm").as("q_nrm"), col("k").cast("long").as("k_planes"),
-            explode(expr(probeArr)).as("tb"))
+            explode(LshCodes.adaptiveProbeCells).as("tb"))
           .select(col("q_id"), col("q_emb"), col("q_nrm"), col("k_planes"),
             col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val cand = db.join(qs, Seq("tbl", "bucket"))
-          .select(col("q_id"), col("k_planes"), col("vec_id").as("nn_id"),
-            quant(dot(col("embedding"), col("q_emb")) /
-              when(col("nrm") * col("q_nrm") > 0.0, col("nrm") * col("q_nrm")), 1e6)
-              .as("cos_sim"))
-          .filter(col("cos_sim").isNotNull)
-          .distinct()
-        cand
-          .withColumn("n_cand", count(lit(1)).over(Window.partitionBy(col("q_id"))))
-          .withColumn("rank",
-            row_number().over(
-              Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("nn_id")))
-              .cast("long"))
-          .filter(col("rank") <= 3)
-          .select(col("q_id"), col("rank"), col("nn_id"), col("cos_sim"),
-            col("n_cand"), col("k_planes"))
-          .orderBy(col("q_id"), col("rank"))
+        annTop3(db, qs, col("k_planes"))
       },
       Some {
-        def wbSql(t: Int): String = {
-          val j = s"((${t * 20} + b) * 64 + (i - 1))"
-          s"""CAST(list_sum(list_transform(generate_series(0, k - 1), b ->
-             |    CASE WHEN list_sum(list_transform(emb, (x, i) ->
-             |        CAST(x AS DOUBLE) * ((($j * 2654435761) % 1000000007) / 1000000000.0 - 0.5))) > 0
-             |      THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END)) AS BIGINT)""".stripMargin
-        }
-        val wcols = (0 until 4).map(t => s"${wbSql(t)} AS wb$t").mkString(",\n    ")
         val tcase = "CASE t.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
-        s"""WITH kk AS (
-           |  SELECT GREATEST(4, LEAST(16, length(bin((COUNT(*) + 7) // 8)))) AS k
-           |  FROM embeddings WHERE vec_id % 50 <> 0),
+        s"""WITH ${LshCodes.adaptiveKSql("embeddings WHERE vec_id % 50 <> 0")},
            |e AS (
            |  SELECT vec_id, emb AS embedding, k,
-           |    $wcols
+           |    ${LshCodes.adaptiveColsSql("wb").mkString(",\n    ")}
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings), kk),
            |db AS (
            |  SELECT e.vec_id, e.embedding, t.tbl, $tcase AS bucket
@@ -1508,26 +1389,10 @@ object SimilarityPack extends QueryPack {
            |qp AS (
            |  SELECT e.vec_id AS q_id, e.embedding AS q_emb,
            |    CAST(e.k AS BIGINT) AS k_planes, t.tbl,
-           |    CASE WHEN pp.p = 0 THEN $tcase
-           |         ELSE xor($tcase, CAST(1 AS BIGINT) << (pp.p - 1)) END AS bucket
-           |  FROM e, (SELECT unnest([0,1,2,3]) AS tbl) t,
-           |       (SELECT unnest(generate_series(0, (SELECT k FROM kk))) AS p) pp
+           |    ${LshCodes.adaptiveProbeSql(tcase)} AS bucket
+           |  ${LshCodes.adaptiveProbeFromSql("e")}
            |  WHERE e.vec_id % 50 = 0),
-           |cand AS (
-           |  SELECT DISTINCT q_id, k_planes, nn_id, cos_sim FROM (
-           |    SELECT q.q_id, q.k_planes, db.vec_id AS nn_id,
-           |      floor(${dotSql("db.embedding", "q.q_emb")} /
-           |            nullif(${normSql("db.embedding")} * ${normSql("q.q_emb")}, 0) * 1000000)
-           |        / 1000000 AS cos_sim
-           |    FROM db JOIN qp q ON db.tbl = q.tbl AND db.bucket = q.bucket) t
-           |  WHERE cos_sim IS NOT NULL)
-           |SELECT q_id, rank, nn_id, cos_sim, n_cand, k_planes FROM (
-           |  SELECT q_id, k_planes, nn_id, cos_sim,
-           |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, nn_id) AS rank,
-           |    COUNT(*) OVER (PARTITION BY q_id) AS n_cand
-           |  FROM cand) t
-           |WHERE rank <= 3
-           |ORDER BY q_id, rank""".stripMargin
+           |${annTop3Sql("qp q", Some("k_planes"))}""".stripMargin
       },
       doc = "serving ANN with corpus-adaptive code width — the production path " +
         "for pinned-k s20: k = len(bin(ceil(n_db/8))) planes per table derived " +
@@ -1544,22 +1409,16 @@ object SimilarityPack extends QueryPack {
         // that certifies s22 as s20's production path: recall@3 against
         // exact blocked-join truth AND total candidate volume for (a) s20's
         // pinned 4x12-plane Hamming-1 config and (b) s22's adaptive-k
-        // config, in one frame. One (tbl, bucket) equi-join serves both:
-        // the index explodes to 8 keyed rows per vector (tbl 0..3 the
-        // pinned code, 10..13 the adaptive tables — disjoint key spaces),
-        // the query side fans out per config x probe, candidates dedup per
-        // (config, query, neighbor). At the test corpus the adaptive k
-        // lands BELOW 12, so the adaptive config trades more candidates for
+        // config, in one frame: the index explodes to 8 keyed rows per
+        // vector (tbl 0..3 the pinned code, 10..13 the adaptive tables —
+        // disjoint key spaces). At the test corpus the adaptive k lands
+        // BELOW 12, so the adaptive config trades more candidates for
         // recall >= pinned — the direction that matters: adaptivity never
         // loses recall at small corpora, and caps density at large ones.
-        import org.apache.spark.sql.expressions.Window
         import graft.functions.VectorExpressions.lshBucketDyn
         val K = 12
         val L = 4
-        val kdf = Tables.embeddings(s, d)
-          .filter(col("vec_id") % 50 =!= 0)
-          .agg(count(lit(1)).as("n"))
-          .select(expr("GREATEST(4, LEAST(16, length(bin((n + 7) DIV 8)))) AS k"))
+        val kdf = LshCodes.adaptiveK(Tables.embeddings(s, d).filter(col("vec_id") % 50 =!= 0))
         val e = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding"))
           .crossJoin(broadcast(kdf))
@@ -1567,8 +1426,6 @@ object SimilarityPack extends QueryPack {
             Seq(col("vec_id"), col("embedding"), col("k"), norm(col("embedding")).as("nrm")) ++
               (0 until L).map(t => lshBucketAt(col("embedding"), K, t * K).as(s"fb$t")) ++
               (0 until L).map(t => lshBucketDyn(col("embedding"), col("k"), t * 20).as(s"ab$t")): _*)
-        val db = e.filter(col("vec_id") % 50 =!= 0)
-        val qs = e.filter(col("vec_id") % 50 === 0)
         val idxArr = (
           (0 until L).map(t => s"named_struct('tbl', $t, 'bucket', fb$t)") ++
             (0 until L).map(t => s"named_struct('tbl', ${10 + t}, 'bucket', ab$t)")
@@ -1583,84 +1440,17 @@ object SimilarityPack extends QueryPack {
              |            ELSE ab$t ^ shiftleft(CAST(1 AS BIGINT), p - 1) END))""".stripMargin)
         val probeArr =
           (s"array(${fixedProbes.mkString(", ")})" +: adaptProbes).mkString("concat(", ", ", ")")
-        val dbx = db
-          .select(col("vec_id"), col("embedding"), col("nrm"), explode(expr(idxArr)).as("tb"))
-          .select(col("vec_id"), col("embedding"), col("nrm"),
-            col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val qp = qs
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
-            explode(expr(probeArr)).as("pr"))
-          .select(col("q_id"), col("q_emb"), col("q_nrm"),
-            col("pr.config").as("config"), col("pr.tbl").as("tbl"), col("pr.bucket").as("bucket"))
-        val cosExpr = quant(dot(col("embedding"), col("q_emb")) /
-          when(col("nrm") * col("q_nrm") > 0.0, col("nrm") * col("q_nrm")), 1e6)
-        val cand = dbx.join(qp, Seq("tbl", "bucket"))
-          .select(col("config"), col("q_id"), col("vec_id").as("nn_id"), cosExpr.as("cos_sim"))
-          .filter(col("cos_sim").isNotNull)
-          .distinct()
-        val counts = cand.groupBy(col("config")).agg(count(lit(1)).as("n_cand"))
-        val top3 = cand
-          .withColumn("rk",
-            row_number().over(
-              Window.partitionBy(col("config"), col("q_id"))
-                .orderBy(col("cos_sim").desc, col("nn_id"))))
-          .filter(col("rk") <= 3)
-          .select(col("config"), col("q_id"), col("nn_id"))
-        // exact truth: block join spreads the |Q|x|DB| pair work over 8 keys;
-        // NULL (zero-norm) similarities are dropped BEFORE the truth window so
-        // parity never leans on an engine's default null order (ADVICE r11)
-        val truth = db.withColumn("blk", pmod(col("vec_id"), lit(8)))
-          .join(qs.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("nrm").as("q_nrm"), explode(sequence(lit(0L), lit(7L))).as("blk")), Seq("blk"))
-          .select(col("q_id"), col("vec_id").as("nn_id"), cosExpr.as("cs"))
-          .filter(col("cs").isNotNull)
-          .withColumn("rk",
-            row_number().over(Window.partitionBy(col("q_id")).orderBy(col("cs").desc, col("nn_id"))))
-          .filter(col("rk") <= 3)
-          .select(col("q_id"), col("nn_id"))
-        val hits = top3
-          .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "nn_id"), "left")
-          .groupBy(col("config"))
-          .agg(count(lit(1)).as("n_retrieved"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        val nq = qs.agg(count(lit(1)).as("n_q"))
-        counts.join(hits, Seq("config"))
-          .crossJoin(broadcast(nq))
-          .select(col("config"), col("n_cand"), col("n_retrieved"), col("n_hits"),
-            expr("n_hits * 1000000 DIV (3 * n_q)").as("recall_ppm"))
-          .orderBy(col("config"))
+        recallLadder(e, expr(idxArr), expr(probeArr))
       },
       Some {
-        def fbSql(k: Int, offset: Int): String = (0 until k)
-          .map(b => s"CASE WHEN ${planeSql(offset + b)} > 0 THEN ${1L << b} ELSE 0 END")
-          .mkString(" + ")
-        def abSql(t: Int): String = {
-          val j = s"((${t * 20} + b) * 64 + (i - 1))"
-          s"""CAST(list_sum(list_transform(generate_series(0, k - 1), b ->
-             |    CASE WHEN list_sum(list_transform(emb, (x, i) ->
-             |        CAST(x AS DOUBLE) * ((($j * 2654435761) % 1000000007) / 1000000000.0 - 0.5))) > 0
-             |      THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END)) AS BIGINT)""".stripMargin
-        }
-        val wcols = (
-          (0 until 4).map(t => s"CAST(${fbSql(12, t * 12)} AS BIGINT) AS fb$t") ++
-            (0 until 4).map(t => s"${abSql(t)} AS ab$t")
-          ).mkString(",\n    ")
         val fcase = "CASE t.tbl WHEN 0 THEN fb0 WHEN 1 THEN fb1 WHEN 2 THEN fb2 ELSE fb3 END"
         val acase = "CASE t.tbl WHEN 0 THEN ab0 WHEN 1 THEN ab1 WHEN 2 THEN ab2 ELSE ab3 END"
         val pfix = "CASE p.tbl WHEN 0 THEN fb0 WHEN 1 THEN fb1 WHEN 2 THEN fb2 ELSE fb3 END"
-        val fixedProbeRows = (for { t <- 0 until 4; m <- 0L +: (0 until 12).map(b => 1L << b) }
-          yield s"($t,$m)").mkString(",")
-        val candCos = s"""floor(${dotSql("d.embedding", "p.q_emb")} /
-           |            nullif(${normSql("d.embedding")} * ${normSql("p.q_emb")}, 0) * 1000000)
-           |        / 1000000""".stripMargin
-        val truthCos = s"""floor(${dotSql("db.embedding", "q.embedding")} /
-           |          nullif(${normSql("db.embedding")} * ${normSql("q.embedding")}, 0) * 1000000)
-           |      / 1000000""".stripMargin
-        s"""WITH kk AS (
-           |  SELECT GREATEST(4, LEAST(16, length(bin((COUNT(*) + 7) // 8)))) AS k
-           |  FROM embeddings WHERE vec_id % 50 <> 0),
+        val wcols = pinnedColsSql("fb") ++ LshCodes.adaptiveColsSql("ab")
+        s"""WITH ${LshCodes.adaptiveKSql("embeddings WHERE vec_id % 50 <> 0")},
            |e AS (
            |  SELECT vec_id, emb AS embedding, k,
-           |    $wcols
+           |    ${wcols.mkString(",\n    ")}
            |  FROM (SELECT vec_id, embedding AS emb FROM embeddings), kk),
            |q AS (SELECT * FROM e WHERE vec_id % 50 = 0),
            |db AS (SELECT * FROM e WHERE vec_id % 50 <> 0),
@@ -1673,44 +1463,13 @@ object SimilarityPack extends QueryPack {
            |qp AS (
            |  SELECT e.vec_id AS q_id, e.embedding AS q_emb,
            |    'wide_fixed_k12' AS config, p.tbl, xor($pfix, p.m) AS bucket
-           |  FROM q e, (VALUES $fixedProbeRows) p(tbl, m)
+           |  FROM q e, (VALUES $pinnedProbeRows) p(tbl, m)
            |  UNION ALL
            |  SELECT e.vec_id, e.embedding, 'wide_adaptive', 10 + t.tbl,
-           |    CASE WHEN pp.p = 0 THEN $acase
-           |         ELSE xor($acase, CAST(1 AS BIGINT) << (pp.p - 1)) END
-           |  FROM q e, (SELECT unnest([0,1,2,3]) AS tbl) t,
-           |       (SELECT unnest(generate_series(0, (SELECT k FROM kk))) AS p) pp),
-           |cand AS (
-           |  SELECT DISTINCT config, q_id, nn_id, cos_sim FROM (
-           |    SELECT p.config, p.q_id, d.vec_id AS nn_id,
-           |      $candCos AS cos_sim
-           |    FROM dbx d JOIN qp p ON d.tbl = p.tbl AND d.bucket = p.bucket) t
-           |  WHERE cos_sim IS NOT NULL),
-           |counts AS (SELECT config, COUNT(*) AS n_cand FROM cand GROUP BY config),
-           |top3 AS (
-           |  SELECT config, q_id, nn_id FROM (
-           |    SELECT config, q_id, nn_id,
-           |      ROW_NUMBER() OVER (PARTITION BY config, q_id
-           |                         ORDER BY cos_sim DESC, nn_id) AS rk
-           |    FROM cand) t WHERE rk <= 3),
-           |truth AS (
-           |  SELECT q_id, nn_id FROM (
-           |    SELECT q_id, nn_id,
-           |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cs DESC, nn_id) AS rk
-           |    FROM (
-           |      SELECT q.vec_id AS q_id, db.vec_id AS nn_id,
-           |        $truthCos AS cs
-           |      FROM db, q) t0 WHERE cs IS NOT NULL) t WHERE rk <= 3),
-           |hits AS (
-           |  SELECT config, COUNT(*) AS n_retrieved,
-           |    CAST(SUM(CASE WHEN truth.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-           |  FROM top3 LEFT JOIN truth USING (q_id, nn_id)
-           |  GROUP BY config),
-           |nq AS (SELECT COUNT(*) AS n_q FROM q)
-           |SELECT counts.config, n_cand, n_retrieved, n_hits,
-           |  n_hits * 1000000 // (3 * (SELECT n_q FROM nq)) AS recall_ppm
-           |FROM counts JOIN hits USING (config)
-           |ORDER BY config""".stripMargin
+           |    ${LshCodes.adaptiveProbeSql(acase)}
+           |  ${LshCodes.adaptiveProbeFromSql("q e")}),
+           |${recallLadderTailSql("SELECT q.vec_id AS q_id, db.vec_id AS nn_id,\n        " +
+             s"${cosSql("db.embedding", "q.embedding", 10)} AS cs")}""".stripMargin
       },
       doc = "recall@3/candidate-volume parity, pinned-k vs adaptive-k wide ANN " +
         "(s20 vs s22) against exact blocked-join truth — one (tbl,bucket) " +
@@ -1730,79 +1489,32 @@ object SimilarityPack extends QueryPack {
         // the candidate join exactly as in s19; k derives in-plan from the
         // full corpus count (every vector is a potential negative, so the
         // index side IS the corpus); multi-table + Hamming-1 probes buy
-        // back the recall the wider cells cost, and overlapping tables
-        // dedup per (anchor, negative) before the bounded-heap top-3.
+        // back the recall the wider cells cost.
         // At 100 TB: mining cost ∝ (anchors × probes × ~8 per cell),
         // never anchor-count × corpus-fraction — and never retuned.
-        import org.apache.spark.sql.expressions.Window
-        import graft.functions.VectorExpressions.lshBucketDyn
-        val L = 4
-        val kdf = Tables.embeddings(s, d)
-          .agg(count(lit(1)).as("n"))
-          .select(expr("GREATEST(4, LEAST(16, length(bin((n + 7) DIV 8)))) AS k"))
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), col("label"), col("embedding"))
-          .crossJoin(broadcast(kdf))
-          .select(
-            Seq(col("vec_id"), col("label"), col("embedding"), col("k"),
-              norm(col("embedding")).as("nrm")) ++
-              (0 until L).map(t => lshBucketDyn(col("embedding"), col("k"), t * 20).as(s"wb$t")): _*)
-        val idxArr = (0 until L)
-          .map(t => s"named_struct('tbl', $t, 'bucket', wb$t)")
-          .mkString("array(", ", ", ")")
-        val probeArr = (0 until L)
-          .map(t => s"""transform(sequence(0, k), p -> named_struct('tbl', $t,
-             |  'bucket', CASE WHEN p = 0 THEN wb$t
-             |            ELSE wb$t ^ shiftleft(CAST(1 AS BIGINT), p - 1) END))""".stripMargin)
-          .mkString("concat(", ", ", ")")
+        val e = LshCodes.withAdaptiveCodes(
+          Tables.embeddings(s, d).select(col("vec_id"), col("label"), col("embedding")),
+          LshCodes.adaptiveK(Tables.embeddings(s, d)))
         val idx = e
           .select(col("vec_id"), col("label"), col("embedding"), col("nrm"),
-            explode(expr(idxArr)).as("tb"))
+            explode(LshCodes.adaptiveIdxCells).as("tb"))
           .select(col("vec_id"), col("label"), col("embedding"), col("nrm"),
             col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
         val anchors = e.filter(col("vec_id") % 25 === 0)
           .select(col("vec_id").as("q_id"), col("label").as("q_lbl"),
             col("embedding").as("q_emb"), col("nrm").as("q_nrm"),
             col("k").cast("long").as("k_planes"),
-            explode(expr(probeArr)).as("tb"))
+            explode(LshCodes.adaptiveProbeCells).as("tb"))
           .select(col("q_id"), col("q_lbl"), col("q_emb"), col("q_nrm"), col("k_planes"),
             col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-        val cand = idx.join(anchors, Seq("tbl", "bucket"))
-          .filter(col("label") =!= col("q_lbl"))
-          .select(col("q_id"), col("q_lbl").cast("long").as("q_label"),
-            col("k_planes"), col("vec_id").as("neg_id"),
-            col("label").cast("long").as("neg_label"),
-            quant(dot(col("embedding"), col("q_emb")) /
-              when(col("nrm") * col("q_nrm") > 0.0, col("nrm") * col("q_nrm")), 1e6)
-              .as("cos_sim"))
-          .filter(col("cos_sim").isNotNull)
-          .distinct()
-        cand
-          .withColumn("rank",
-            row_number().over(
-              Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("neg_id")))
-              .cast("long"))
-          .filter(col("rank") <= 3)
-          .select(col("q_id"), col("rank"), col("neg_id"), col("q_label"),
-            col("neg_label"), col("cos_sim"), col("k_planes"))
-          .orderBy(col("q_id"), col("rank"))
+        hardNegatives(idx, anchors, Seq("tbl", "bucket"), multiTable = true)
       },
       Some {
-        def wbSql(t: Int): String = {
-          val j = s"((${t * 20} + b) * 64 + (i - 1))"
-          s"""CAST(list_sum(list_transform(generate_series(0, k - 1), b ->
-             |    CASE WHEN list_sum(list_transform(emb, (x, i) ->
-             |        CAST(x AS DOUBLE) * ((($j * 2654435761) % 1000000007) / 1000000000.0 - 0.5))) > 0
-             |      THEN CAST(1 AS BIGINT) << b ELSE CAST(0 AS BIGINT) END)) AS BIGINT)""".stripMargin
-        }
-        val wcols = (0 until 4).map(t => s"${wbSql(t)} AS wb$t").mkString(",\n    ")
         val tcase = "CASE t.tbl WHEN 0 THEN wb0 WHEN 1 THEN wb1 WHEN 2 THEN wb2 ELSE wb3 END"
-        s"""WITH kk AS (
-           |  SELECT GREATEST(4, LEAST(16, length(bin((COUNT(*) + 7) // 8)))) AS k
-           |  FROM embeddings),
+        s"""WITH ${LshCodes.adaptiveKSql("embeddings")},
            |e AS (
            |  SELECT vec_id, label, emb AS embedding, k,
-           |    $wcols
+           |    ${LshCodes.adaptiveColsSql("wb").mkString(",\n    ")}
            |  FROM (SELECT vec_id, label, embedding AS emb FROM embeddings), kk),
            |idx AS (
            |  SELECT e.vec_id, e.label, e.embedding, t.tbl, $tcase AS bucket
@@ -1810,18 +1522,14 @@ object SimilarityPack extends QueryPack {
            |qp AS (
            |  SELECT e.vec_id AS q_id, e.label AS q_lbl, e.embedding AS q_emb,
            |    CAST(e.k AS BIGINT) AS k_planes, t.tbl,
-           |    CASE WHEN pp.p = 0 THEN $tcase
-           |         ELSE xor($tcase, CAST(1 AS BIGINT) << (pp.p - 1)) END AS bucket
-           |  FROM e, (SELECT unnest([0,1,2,3]) AS tbl) t,
-           |       (SELECT unnest(generate_series(0, (SELECT k FROM kk))) AS p) pp
+           |    ${LshCodes.adaptiveProbeSql(tcase)} AS bucket
+           |  ${LshCodes.adaptiveProbeFromSql("e")}
            |  WHERE e.vec_id % 25 = 0),
            |cand AS (
            |  SELECT DISTINCT q_id, q_label, k_planes, neg_id, neg_label, cos_sim FROM (
            |    SELECT q.q_id, CAST(q.q_lbl AS BIGINT) AS q_label, q.k_planes,
            |      i.vec_id AS neg_id, CAST(i.label AS BIGINT) AS neg_label,
-           |      floor(${dotSql("i.embedding", "q.q_emb")} /
-           |            nullif(${normSql("i.embedding")} * ${normSql("q.q_emb")}, 0) * 1000000)
-           |        / 1000000 AS cos_sim
+           |      ${cosSql("i.embedding", "q.q_emb", 12)} AS cos_sim
            |    FROM idx i JOIN qp q
            |      ON i.tbl = q.tbl AND i.bucket = q.bucket AND i.label <> q.q_lbl) t
            |  WHERE cos_sim IS NOT NULL)
@@ -1927,17 +1635,11 @@ object SimilarityPack extends QueryPack {
            |  WHERE rn <= 2)
            |SELECT q_id, rank, nn_id, centroid, cos_sim, n_cent FROM (
            |  SELECT p.q_id, db.vec_id AS nn_id, db.centroid, p.n_cent,
-           |    floor(${dotSql("db.embedding", "p.q_emb")} /
-           |          nullif(${normSql("db.embedding")} * ${normSql("p.q_emb")}, 0) * 1000000)
-           |      / 1000000 AS cos_sim,
+           |    ${cosSql("db.embedding", "p.q_emb", 10)} AS cos_sim,
            |    ROW_NUMBER() OVER (PARTITION BY p.q_id ORDER BY
-           |      floor(${dotSql("db.embedding", "p.q_emb")} /
-           |            nullif(${normSql("db.embedding")} * ${normSql("p.q_emb")}, 0) * 1000000)
-           |        / 1000000 DESC, db.vec_id) AS rank
+           |      ${cosSql("db.embedding", "p.q_emb", 12)} DESC, db.vec_id) AS rank
            |  FROM db JOIN probes p ON db.centroid = p.centroid
-           |  WHERE floor(${dotSql("db.embedding", "p.q_emb")} /
-           |          nullif(${normSql("db.embedding")} * ${normSql("p.q_emb")}, 0) * 1000000)
-           |      / 1000000 IS NOT NULL) t
+           |  WHERE ${cosSql("db.embedding", "p.q_emb", 10)} IS NOT NULL) t
            |WHERE rank <= 10
            |ORDER BY q_id, rank""".stripMargin
       },

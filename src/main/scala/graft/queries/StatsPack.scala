@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextOps.tokens
@@ -13,6 +13,147 @@ import graft.ops.Salting
   * utility proven equivalent to the plain join via the oracle.
   */
 object StatsPack extends QueryPack {
+
+  /** x35/x36: JOIN-CARDINALITY ESTIMATION from Count-Min sketches (Cormode &
+    * Muthukrishnan's inner-product estimator): |A join B on key| =
+    * sum_k fA(k)*fB(k), estimated as min over hash rows of the cellwise
+    * product sum of the two sides' CMS. The planning primitive a 100 TB
+    * optimizer wants — estimate a join's output size between two FILTERED
+    * relations (where static NDV stats go stale) by shuffling
+    * O(depth x width) cells per side instead of running the join. The WIDTH
+    * is derived IN-PLAN from a broadcast distinct-key count (the d29/s22
+    * adaptive-key-space rule): the estimator's collision mass is
+    * ~|A||B|/width, so width must track key cardinality, not a pinned
+    * constant — here the next power of two >= 4x distinct keys (clamped at
+    * 2^24), which bounds the overestimate at ~25% of the full inner product
+    * while the cells stay O(1) vs the corpus. One-sided like every CMS read:
+    * est >= exact always (collision mass only adds). All integer,
+    * hash-certified. x35 reports the estimate beside the side sizes;
+    * `certify` (x36) instead reports the exact join cardinality via per-key
+    * frequency products — carrying the key-grouped join by construction —
+    * and the deterministic one-sided check est >= exact.
+    */
+  private def cmsJoinSize(s: SparkSession, d: String, certify: Boolean): DataFrame = {
+    import graft.ops.CmsSketch
+    val P = CmsSketch.P
+    val li = Tables.lineitem(s, d)
+    val wRow = li.agg(countDistinct(col("l_partkey")).as("nd"))
+      .select(expr(
+        "shiftleft(CAST(1 AS BIGINT), least(length(bin(greatest(4 * nd - 1, 1))), 24))")
+        .as("w"))
+    def keyed(f: DataFrame) =
+      f.select(((lit(2654435761L) * col("l_partkey") + lit(12345L)) % P).as("h"))
+        .crossJoin(broadcast(wRow))
+    val a = li.filter(col("l_returnflag") === "R")
+    val b = li.filter(col("l_quantity") >= 30)
+    val sa = CmsSketch.counts(CmsSketch.bucketizeDyn(keyed(a), col("h"), col("w")))
+      .withColumnRenamed("cnt", "ca")
+    val sb = CmsSketch.counts(CmsSketch.bucketizeDyn(keyed(b), col("h"), col("w")))
+      .withColumnRenamed("cnt", "cb")
+    val prod = sa.join(sb, Seq("row_i", "bucket"))
+      .groupBy(col("row_i")).agg(sum(col("ca") * col("cb")).as("est_i"))
+    // every hash row must vote even when the sides share no cells
+    // (an absent row's product sum is 0, and min must see it)
+    val spec = s.range(0, CmsSketch.DefaultDepth)
+      .select(col("id").cast("int").as("row_i"))
+    val est = spec.join(prod, Seq("row_i"), "left_outer")
+      .select(coalesce(col("est_i"), lit(0L)).as("est_i"))
+      .agg(min(col("est_i")).as("est_join"))
+    if (certify) {
+      val exact = a.groupBy(col("l_partkey")).agg(count(lit(1)).as("fa"))
+        .join(b.groupBy(col("l_partkey")).agg(count(lit(1)).as("fb")), Seq("l_partkey"))
+        .agg(coalesce(sum(col("fa") * col("fb")), lit(0L)).as("exact_join"))
+      est.crossJoin(broadcast(exact))
+        .select(col("est_join"), col("exact_join"),
+          (col("est_join") - col("exact_join")).as("overest"),
+          (col("est_join") >= col("exact_join")).as("ge_ok"))
+    } else {
+      val na = a.agg(count(lit(1)).as("n_a"))
+      val nb = b.agg(count(lit(1)).as("n_b"))
+      est.crossJoin(broadcast(na)).crossJoin(broadcast(nb))
+        .select(col("est_join"), col("n_a"), col("n_b"))
+    }
+  }
+
+  /** DuckDB twin of [[cmsJoinSize]]. */
+  private def cmsJoinSizeSql(certify: Boolean): String = {
+    val sketch = s"""WITH v(row_i, m, c) AS (VALUES ${graft.ops.CmsSketch.rowSpecSql()}),
+       |wv AS (SELECT (CAST(1 AS BIGINT) << least(length(bin(greatest(4 * COUNT(DISTINCT l_partkey) - 1, 1))), 24)) AS w
+       |  FROM lineitem),
+       |ha AS (SELECT (2654435761 * l_partkey + 12345) % 1000000007 AS h
+       |  FROM lineitem WHERE l_returnflag = 'R'),
+       |hb AS (SELECT (2654435761 * l_partkey + 12345) % 1000000007 AS h
+       |  FROM lineitem WHERE l_quantity >= 30),
+       |ca AS (SELECT row_i, ((m * h + c) % 1000000007) % w AS bucket, COUNT(*) AS ca
+       |  FROM ha CROSS JOIN v CROSS JOIN wv GROUP BY 1, 2),
+       |cb AS (SELECT row_i, ((m * h + c) % 1000000007) % w AS bucket, COUNT(*) AS cb
+       |  FROM hb CROSS JOIN v CROSS JOIN wv GROUP BY 1, 2),
+       |j AS (SELECT ca.row_i AS row_i, ca.ca * cb.cb AS p
+       |  FROM ca JOIN cb ON ca.row_i = cb.row_i AND ca.bucket = cb.bucket),
+       |pr AS (SELECT v2.row_i, CAST(COALESCE(SUM(p), 0) AS BIGINT) AS est_i
+       |  FROM (SELECT DISTINCT row_i FROM v) v2 LEFT JOIN j ON v2.row_i = j.row_i
+       |  GROUP BY v2.row_i)""".stripMargin
+    if (certify)
+      sketch + """,
+        |xa AS (SELECT l_partkey, COUNT(*) AS fa FROM lineitem
+        |  WHERE l_returnflag = 'R' GROUP BY 1),
+        |xb AS (SELECT l_partkey, COUNT(*) AS fb FROM lineitem
+        |  WHERE l_quantity >= 30 GROUP BY 1),
+        |ex AS (SELECT CAST(COALESCE(SUM(fa * fb), 0) AS BIGINT) AS exact_join
+        |  FROM xa JOIN xb USING (l_partkey))
+        |SELECT (SELECT MIN(est_i) FROM pr) AS est_join,
+        |  exact_join,
+        |  (SELECT MIN(est_i) FROM pr) - exact_join AS overest,
+        |  (SELECT MIN(est_i) FROM pr) >= exact_join AS ge_ok
+        |FROM ex""".stripMargin
+    else
+      sketch + """
+        |SELECT (SELECT MIN(est_i) FROM pr) AS est_join,
+        |  (SELECT COUNT(*) FROM ha) AS n_a,
+        |  (SELECT COUNT(*) FROM hb) AS n_b""".stripMargin
+  }
+
+  /** x38/x39's AMS key: the l_orderkey hash the sketch rows sign. */
+  private def amsKeyed(li: DataFrame): DataFrame =
+    li.select(((lit(2654435761L) * col("l_orderkey") + lit(12345L)) % graft.ops.AmsSketch.P).as("h"))
+
+  /** DuckDB twin of the AMS sketch over [[amsKeyed]]: CTEs through
+    * `g(grp, gs)`, the four median-of-means group sums of Z_i^2.
+    */
+  private val amsGroupsSql: String =
+    s"""WITH v(row_i, a, b, c, d) AS (VALUES ${graft.ops.AmsSketch.rowSpecSql()}),
+       |hk AS (SELECT (2654435761 * l_orderkey + 12345) % 1000000007 AS t FROM lineitem),
+       |mx AS (SELECT ${graft.ops.AmsSketch.mixSql("t")} AS h FROM hk),
+       |hp AS (SELECT h, (h * h) % 1000000007 AS h2,
+       |    (((h * h) % 1000000007) * h) % 1000000007 AS h3 FROM mx),
+       |z AS (SELECT row_i, CAST(SUM(1 - 2 * (((a * h3 + b * h2 + c * h + d) % 1000000007) % 2)) AS BIGINT) AS z
+       |  FROM hp CROSS JOIN v GROUP BY 1),
+       |g AS (SELECT row_i // 4 AS grp, CAST(SUM(z * z) AS BIGINT) AS gs FROM z GROUP BY 1)""".stripMargin
+
+  /** x20/x21's value-level R-vs-A price frame `(v, nr_v, n_v)`: rows
+    * aggregate to the VALUE level first (ties collapse) and are materialized
+    * once — repartitionByRange in the prefix sum that follows executes its
+    * input twice (sampling + shuffle write), and this input is the scan plus
+    * the value-level aggregate.
+    */
+  private def returnFlagValues(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .filter(col("l_returnflag").isin("R", "A"))
+      .select(dec(col("l_extendedprice")).as("v"),
+        when(col("l_returnflag") === "R", 1L).otherwise(0L).as("is_r"))
+      .groupBy(col("v"))
+      .agg(sum(col("is_r")).as("nr_v"), count(lit(1)).as("n_v"))
+      .localCheckpoint()
+
+  /** DuckDB twin of [[returnFlagValues]]: CTEs `s` and `vals`. */
+  private val returnFlagValuesSql: String =
+    """WITH s AS (
+      |  SELECT CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
+      |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS is_r
+      |  FROM lineitem WHERE l_returnflag IN ('R', 'A')),
+      |vals AS (
+      |  SELECT v, CAST(SUM(is_r) AS BIGINT) AS nr_v, COUNT(*) AS n_v
+      |  FROM s GROUP BY v)""".stripMargin
 
   override def queries: Seq[Q] = Seq(
     // ---------------------------------------------------------------- salted join
@@ -767,13 +908,7 @@ object StatsPack extends QueryPack {
         // < 2³² — a bound CHECKED here, not assumed: the tiny value-level
         // aggregate is materialized once (localCheckpoint) and a driver-side
         // total guards the packing before the prefix sum runs.
-        val vals = Tables.lineitem(s, d)
-          .filter(col("l_returnflag").isin("R", "A"))
-          .select(dec(col("l_extendedprice")).as("v"),
-            when(col("l_returnflag") === "R", 1L).otherwise(0L).as("is_r"))
-          .groupBy(col("v"))
-          .agg(sum(col("is_r")).as("nr_v"), count(lit(1)).as("n_v"))
-          .localCheckpoint()
+        val vals = returnFlagValues(s, d)
         val nTotal = vals.agg(coalesce(sum(col("n_v")), lit(0L))).head.getLong(0)
         require(nTotal < 4294967296L,
           s"x20 packed counter would carry: $nTotal rows >= 2^32 — split the prefix sum")
@@ -791,13 +926,7 @@ object StatsPack extends QueryPack {
           .groupBy(col("n_r"), col("n_a"))
           .agg(max(col("dq")).as("ks"))
       },
-      Some("""WITH s AS (
-             |  SELECT CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
-             |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS is_r
-             |  FROM lineitem WHERE l_returnflag IN ('R', 'A')),
-             |vals AS (
-             |  SELECT v, CAST(SUM(is_r) AS BIGINT) AS nr_v, COUNT(*) AS n_v
-             |  FROM s GROUP BY v),
+      Some(s"""$returnFlagValuesSql,
              |c AS (
              |  SELECT CAST(SUM(nr_v) OVER w AS BIGINT) AS cr,
              |    CAST(SUM(n_v) OVER w AS BIGINT) AS cn
@@ -829,16 +958,7 @@ object StatsPack extends QueryPack {
         // distributed prefix sum over the value series gives every
         // cumulative count. Two shuffles total — value aggregate + range
         // spread — and a BIGINT statistic both engines replay bit-for-bit.
-        val vals = Tables.lineitem(s, d)
-          .filter(col("l_returnflag").isin("R", "A"))
-          .select(dec(col("l_extendedprice")).as("v"),
-            when(col("l_returnflag") === "R", 1L).otherwise(0L).as("is_r"))
-          .groupBy(col("v"))
-          .agg(sum(col("is_r")).as("nr_v"), count(lit(1)).as("n_v"))
-          // r19: materialized like x20's — repartitionByRange executes its
-          // input twice (sampling + shuffle write), and this input is the
-          // scan + value-level aggregate
-          .localCheckpoint()
+        val vals = returnFlagValues(s, d)
         val run = graft.ops.GlobalOrder.withGroupedRunningSum(
           vals, "cum", "n_total", col("n_v"), Seq.empty, Seq(col("v")))
         run
@@ -853,13 +973,7 @@ object StatsPack extends QueryPack {
           .select(col("n_r"), col("n_a"), col("u2"),
             quant(col("u2").cast("double") / (col("n_r") * col("n_a") * 2), 1e9).as("auc"))
       },
-      Some("""WITH s AS (
-             |  SELECT CAST(l_extendedprice AS DECIMAL(18,2)) AS v,
-             |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS is_r
-             |  FROM lineitem WHERE l_returnflag IN ('R', 'A')),
-             |vals AS (
-             |  SELECT v, CAST(SUM(is_r) AS BIGINT) AS nr_v, COUNT(*) AS n_v
-             |  FROM s GROUP BY v),
+      Some(s"""$returnFlagValuesSql,
              |c AS (
              |  SELECT v, nr_v, n_v,
              |    CAST(SUM(n_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
@@ -1741,72 +1855,8 @@ object StatsPack extends QueryPack {
     // ---------------------------------------------------------------- x35
     Q(
       "x35_cms_join_size",
-      (s, d) => {
-        // JOIN-CARDINALITY ESTIMATION from Count-Min sketches (Cormode &
-        // Muthukrishnan's inner-product estimator): |A join B on key| =
-        // sum_k fA(k)*fB(k), estimated as min over hash rows of the
-        // cellwise product sum of the two sides' CMS. The planning
-        // primitive a 100 TB optimizer wants — estimate a join's output
-        // size between two FILTERED relations (where static NDV stats go
-        // stale) by shuffling O(depth x width) cells per side instead of
-        // running the join. The WIDTH is derived IN-PLAN from a broadcast
-        // distinct-key count (the d29/s22 adaptive-key-space rule): the
-        // estimator's collision mass is ~|A||B|/width, so width must
-        // track key cardinality, not a pinned constant — here the next
-        // power of two >= 4x distinct keys (clamped at 2^24), which
-        // bounds the overestimate at ~25% of the full inner product
-        // while the cells stay O(1) vs the corpus. One-sided like every
-        // CMS read: est >= exact always (collision mass only adds),
-        // certified key by x36. All integer, hash-certified.
-        import graft.ops.CmsSketch
-        val P = CmsSketch.P
-        val li = Tables.lineitem(s, d)
-        val wRow = li.agg(countDistinct(col("l_partkey")).as("nd"))
-          .select(expr(
-            "shiftleft(CAST(1 AS BIGINT), least(length(bin(greatest(4 * nd - 1, 1))), 24))")
-            .as("w"))
-        def keyed(f: org.apache.spark.sql.DataFrame) =
-          f.select(((lit(2654435761L) * col("l_partkey") + lit(12345L)) % P).as("h"))
-            .crossJoin(broadcast(wRow))
-        val a = li.filter(col("l_returnflag") === "R")
-        val b = li.filter(col("l_quantity") >= 30)
-        val sa = CmsSketch.counts(CmsSketch.bucketizeDyn(keyed(a), col("h"), col("w")))
-          .withColumnRenamed("cnt", "ca")
-        val sb = CmsSketch.counts(CmsSketch.bucketizeDyn(keyed(b), col("h"), col("w")))
-          .withColumnRenamed("cnt", "cb")
-        val prod = sa.join(sb, Seq("row_i", "bucket"))
-          .groupBy(col("row_i")).agg(sum(col("ca") * col("cb")).as("est_i"))
-        // every hash row must vote even when the sides share no cells
-        // (an absent row's product sum is 0, and min must see it)
-        val spec = s.range(0, CmsSketch.DefaultDepth)
-          .select(col("id").cast("int").as("row_i"))
-        val est = spec.join(prod, Seq("row_i"), "left_outer")
-          .select(coalesce(col("est_i"), lit(0L)).as("est_i"))
-          .agg(min(col("est_i")).as("est_join"))
-        val na = a.agg(count(lit(1)).as("n_a"))
-        val nb = b.agg(count(lit(1)).as("n_b"))
-        est.crossJoin(broadcast(na)).crossJoin(broadcast(nb))
-          .select(col("est_join"), col("n_a"), col("n_b"))
-      },
-      Some(s"""WITH v(row_i, m, c) AS (VALUES ${graft.ops.CmsSketch.rowSpecSql()}),
-              |wv AS (SELECT (CAST(1 AS BIGINT) << least(length(bin(greatest(4 * COUNT(DISTINCT l_partkey) - 1, 1))), 24)) AS w
-              |  FROM lineitem),
-              |ha AS (SELECT (2654435761 * l_partkey + 12345) % 1000000007 AS h
-              |  FROM lineitem WHERE l_returnflag = 'R'),
-              |hb AS (SELECT (2654435761 * l_partkey + 12345) % 1000000007 AS h
-              |  FROM lineitem WHERE l_quantity >= 30),
-              |ca AS (SELECT row_i, ((m * h + c) % 1000000007) % w AS bucket, COUNT(*) AS ca
-              |  FROM ha CROSS JOIN v CROSS JOIN wv GROUP BY 1, 2),
-              |cb AS (SELECT row_i, ((m * h + c) % 1000000007) % w AS bucket, COUNT(*) AS cb
-              |  FROM hb CROSS JOIN v CROSS JOIN wv GROUP BY 1, 2),
-              |j AS (SELECT ca.row_i AS row_i, ca.ca * cb.cb AS p
-              |  FROM ca JOIN cb ON ca.row_i = cb.row_i AND ca.bucket = cb.bucket),
-              |pr AS (SELECT v2.row_i, CAST(COALESCE(SUM(p), 0) AS BIGINT) AS est_i
-              |  FROM (SELECT DISTINCT row_i FROM v) v2 LEFT JOIN j ON v2.row_i = j.row_i
-              |  GROUP BY v2.row_i)
-              |SELECT (SELECT MIN(est_i) FROM pr) AS est_join,
-              |  (SELECT COUNT(*) FROM ha) AS n_a,
-              |  (SELECT COUNT(*) FROM hb) AS n_b""".stripMargin),
+      (s, d) => cmsJoinSize(s, d, certify = false),
+      Some(cmsJoinSizeSql(certify = false)),
       doc = "CMS inner-product join-cardinality estimate (Cormode-" +
         "Muthukrishnan) with IN-PLAN adaptive width (next power of two " +
         ">= 4x distinct keys, from a broadcast count — the d29 rule): " +
@@ -1818,69 +1868,8 @@ object StatsPack extends QueryPack {
     // ---------------------------------------------------------------- x36
     Q(
       "x36_cms_join_certify",
-      (s, d) => {
-        // CERTIFY rung for x35 (production path: x35 alone): the exact
-        // join cardinality via per-key frequency products — carries the
-        // key-grouped join by construction — beside the sketch estimate,
-        // with the deterministic one-sided check est >= exact.
-        import graft.ops.CmsSketch
-        val P = CmsSketch.P
-        val li = Tables.lineitem(s, d)
-        val wRow = li.agg(countDistinct(col("l_partkey")).as("nd"))
-          .select(expr(
-            "shiftleft(CAST(1 AS BIGINT), least(length(bin(greatest(4 * nd - 1, 1))), 24))")
-            .as("w"))
-        def keyed(f: org.apache.spark.sql.DataFrame) =
-          f.select(((lit(2654435761L) * col("l_partkey") + lit(12345L)) % P).as("h"))
-            .crossJoin(broadcast(wRow))
-        val a = li.filter(col("l_returnflag") === "R")
-        val b = li.filter(col("l_quantity") >= 30)
-        val sa = CmsSketch.counts(CmsSketch.bucketizeDyn(keyed(a), col("h"), col("w")))
-          .withColumnRenamed("cnt", "ca")
-        val sb = CmsSketch.counts(CmsSketch.bucketizeDyn(keyed(b), col("h"), col("w")))
-          .withColumnRenamed("cnt", "cb")
-        val prod = sa.join(sb, Seq("row_i", "bucket"))
-          .groupBy(col("row_i")).agg(sum(col("ca") * col("cb")).as("est_i"))
-        val spec = s.range(0, CmsSketch.DefaultDepth)
-          .select(col("id").cast("int").as("row_i"))
-        val est = spec.join(prod, Seq("row_i"), "left_outer")
-          .select(coalesce(col("est_i"), lit(0L)).as("est_i"))
-          .agg(min(col("est_i")).as("est_join"))
-        val exact = a.groupBy(col("l_partkey")).agg(count(lit(1)).as("fa"))
-          .join(b.groupBy(col("l_partkey")).agg(count(lit(1)).as("fb")), Seq("l_partkey"))
-          .agg(coalesce(sum(col("fa") * col("fb")), lit(0L)).as("exact_join"))
-        est.crossJoin(broadcast(exact))
-          .select(col("est_join"), col("exact_join"),
-            (col("est_join") - col("exact_join")).as("overest"),
-            (col("est_join") >= col("exact_join")).as("ge_ok"))
-      },
-      Some(s"""WITH v(row_i, m, c) AS (VALUES ${graft.ops.CmsSketch.rowSpecSql()}),
-              |wv AS (SELECT (CAST(1 AS BIGINT) << least(length(bin(greatest(4 * COUNT(DISTINCT l_partkey) - 1, 1))), 24)) AS w
-              |  FROM lineitem),
-              |ha AS (SELECT (2654435761 * l_partkey + 12345) % 1000000007 AS h
-              |  FROM lineitem WHERE l_returnflag = 'R'),
-              |hb AS (SELECT (2654435761 * l_partkey + 12345) % 1000000007 AS h
-              |  FROM lineitem WHERE l_quantity >= 30),
-              |ca AS (SELECT row_i, ((m * h + c) % 1000000007) % w AS bucket, COUNT(*) AS ca
-              |  FROM ha CROSS JOIN v CROSS JOIN wv GROUP BY 1, 2),
-              |cb AS (SELECT row_i, ((m * h + c) % 1000000007) % w AS bucket, COUNT(*) AS cb
-              |  FROM hb CROSS JOIN v CROSS JOIN wv GROUP BY 1, 2),
-              |j AS (SELECT ca.row_i AS row_i, ca.ca * cb.cb AS p
-              |  FROM ca JOIN cb ON ca.row_i = cb.row_i AND ca.bucket = cb.bucket),
-              |pr AS (SELECT v2.row_i, CAST(COALESCE(SUM(p), 0) AS BIGINT) AS est_i
-              |  FROM (SELECT DISTINCT row_i FROM v) v2 LEFT JOIN j ON v2.row_i = j.row_i
-              |  GROUP BY v2.row_i),
-              |xa AS (SELECT l_partkey, COUNT(*) AS fa FROM lineitem
-              |  WHERE l_returnflag = 'R' GROUP BY 1),
-              |xb AS (SELECT l_partkey, COUNT(*) AS fb FROM lineitem
-              |  WHERE l_quantity >= 30 GROUP BY 1),
-              |ex AS (SELECT CAST(COALESCE(SUM(fa * fb), 0) AS BIGINT) AS exact_join
-              |  FROM xa JOIN xb USING (l_partkey))
-              |SELECT (SELECT MIN(est_i) FROM pr) AS est_join,
-              |  exact_join,
-              |  (SELECT MIN(est_i) FROM pr) - exact_join AS overest,
-              |  (SELECT MIN(est_i) FROM pr) >= exact_join AS ge_ok
-              |FROM ex""".stripMargin),
+      (s, d) => cmsJoinSize(s, d, certify = true),
+      Some(cmsJoinSizeSql(certify = true)),
       doc = "x35's certify rung (production path: x35): the exact join " +
         "cardinality (per-key frequency products — carries the key-grouped " +
         "join by construction) beside the sketch estimate; est >= exact is " +
@@ -1999,9 +1988,7 @@ object StatsPack extends QueryPack {
         // of two (exact doubles on both engines); hash-certified.
         import graft.ops.AmsSketch
         val li = Tables.lineitem(s, d)
-        val keyed = li.select(
-          ((lit(2654435761L) * col("l_orderkey") + lit(12345L)) % AmsSketch.P).as("h"))
-        val est = AmsSketch.estimate(AmsSketch.sums(AmsSketch.bucketize(keyed, col("h"))))
+        val est = AmsSketch.estimate(AmsSketch.sums(AmsSketch.bucketize(amsKeyed(li), col("h"))))
         val exact = li.groupBy(col("l_orderkey")).agg(count(lit(1)).as("c"))
           .agg(sum(col("c") * col("c")).cast("long").as("exact_f2"))
         est.crossJoin(broadcast(exact))
@@ -2009,14 +1996,7 @@ object StatsPack extends QueryPack {
             (col("est_mom") * 2 >= col("exact_f2") &&
               col("est_mom") <= col("exact_f2") * 2).as("within_2x"))
       },
-      Some(s"""WITH v(row_i, a, b, c, d) AS (VALUES ${graft.ops.AmsSketch.rowSpecSql()}),
-              |hk AS (SELECT (2654435761 * l_orderkey + 12345) % 1000000007 AS t FROM lineitem),
-              |mx AS (SELECT ${graft.ops.AmsSketch.mixSql("t")} AS h FROM hk),
-              |hp AS (SELECT h, (h * h) % 1000000007 AS h2,
-              |    (((h * h) % 1000000007) * h) % 1000000007 AS h3 FROM mx),
-              |z AS (SELECT row_i, CAST(SUM(1 - 2 * (((a * h3 + b * h2 + c * h + d) % 1000000007) % 2)) AS BIGINT) AS z
-              |  FROM hp CROSS JOIN v GROUP BY 1),
-              |g AS (SELECT row_i // 4 AS grp, CAST(SUM(z * z) AS BIGINT) AS gs FROM z GROUP BY 1),
+      Some(s"""$amsGroupsSql,
               |ag AS (SELECT CAST(SUM(gs) AS BIGINT) AS ss, list_sort(list(gs)) AS gl FROM g),
               |ex AS (SELECT CAST(SUM(c * c) AS BIGINT) AS exact_f2
               |  FROM (SELECT l_orderkey, COUNT(*) AS c FROM lineitem GROUP BY 1))
@@ -2061,9 +2041,7 @@ object StatsPack extends QueryPack {
         // unsalted join and that both engines derive the identical width.
         import graft.ops.{AmsSketch, Salting}
         val li = Tables.lineitem(s, d)
-        val keyed = li.select(
-          ((lit(2654435761L) * col("l_orderkey") + lit(12345L)) % AmsSketch.P).as("h"))
-        val estI = AmsSketch.estimate(AmsSketch.sums(AmsSketch.bucketize(keyed, col("h"))))
+        val estI = AmsSketch.estimate(AmsSketch.sums(AmsSketch.bucketize(amsKeyed(li), col("h"))))
           .select(col("est_mom_i"))
         val stats = li.agg(count(lit(1)).as("n"))
         val saltRow = AmsSketch.saltWidth(estI, stats)
@@ -2080,14 +2058,7 @@ object StatsPack extends QueryPack {
           .crossJoin(broadcast(saltRow.select(col("__nsalts").as("n_salts"))))
           .orderBy(col("o_orderpriority"))
       },
-      Some(s"""WITH v(row_i, a, b, c, d) AS (VALUES ${graft.ops.AmsSketch.rowSpecSql()}),
-              |hk AS (SELECT (2654435761 * l_orderkey + 12345) % 1000000007 AS t FROM lineitem),
-              |mx AS (SELECT ${graft.ops.AmsSketch.mixSql("t")} AS h FROM hk),
-              |hp AS (SELECT h, (h * h) % 1000000007 AS h2,
-              |    (((h * h) % 1000000007) * h) % 1000000007 AS h3 FROM mx),
-              |z AS (SELECT row_i, CAST(SUM(1 - 2 * (((a * h3 + b * h2 + c * h + d) % 1000000007) % 2)) AS BIGINT) AS z
-              |  FROM hp CROSS JOIN v GROUP BY 1),
-              |g AS (SELECT row_i // 4 AS grp, CAST(SUM(z * z) AS BIGINT) AS gs FROM z GROUP BY 1),
+      Some(s"""$amsGroupsSql,
               |fi AS (SELECT CAST((gl[2] + gl[3]) // 8 AS BIGINT) AS f2i
               |  FROM (SELECT list_sort(list(gs)) AS gl FROM g)),
               |st AS (SELECT COUNT(*) AS n FROM lineitem),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextOps._
@@ -14,6 +15,85 @@ object TextPack extends QueryPack {
   /** DuckDB twin of [[TextOps.tokenHash]]. */
   private def thSql(x: String): String =
     s"((length($x)*2654435761 + ascii($x)*131 + ascii($x[-1:])) % 1000000007)"
+
+  /** t12/t25's bigram language-model scores per document, add-one smoothed:
+    * log P(w2 | w1) = ln((c(w1 w2) + 1) / (c(w1 ·) + V)), each bigram's
+    * logprob floor-quantized to an integer micro-nat grid BEFORE the per-doc
+    * sum (order-free, exact): `(doc_id, n_bigrams, sum_q)`. Two frequency
+    * shuffles (bigram, left-token), both map-side combined; V is one
+    * broadcast scalar. (r19 measured NEGATIVE: an explicit-count
+    * repartition of the raw docs before the tokenize — t14's discipline —
+    * read 0.90 → 2.08 s in a same-window A/B at sf0.1; on this 5 k-doc
+    * corpus the extra exchange plus 32-way task fan-out costs far more
+    * than the single-task explode it parallelizes. At a scale where the
+    * scan splits, the parallelism comes from the input for free.)
+    */
+  private def bigramScores(s: SparkSession, d: String): DataFrame = {
+    val base = Tables.documents(s, d)
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
+    val bg = base.filter(size(col("tk")) >= 2)
+      .select(col("doc_id"),
+        explode(expr("transform(sequence(1, size(tk) - 1), " +
+          "i -> struct(element_at(tk, i) AS w1, element_at(tk, i + 1) AS w2))")).as("b"))
+      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+      // materialize the bigram stream ONCE: three subtrees consume it
+      // (c2 with its c1 rollup, and the scoring join) — without the
+      // checkpoint each re-runs tokenize + explode; that repeated
+      // subtree made t25 the bench's highest rep-spread cell (8.7x
+      // min/max under scheduler contention)
+      .localCheckpoint()
+    val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n2"))
+    // left-token totals derive from the (much smaller) bigram counts —
+    // one fewer pass over the exploded corpus at any scale
+    val c1 = c2.groupBy(col("w1")).agg(sum(col("n2")).as("n1"))
+    val v = base.select(explode(col("tk")).as("token"))
+      .agg(countDistinct(col("token")).as("vocab"))
+    bg.join(c2, Seq("w1", "w2"))
+      .join(c1, Seq("w1"))
+      .crossJoin(broadcast(v))
+      .select(
+        col("doc_id"),
+        floor(log((col("n2") + 1).cast("double") / (col("n1") + col("vocab")).cast("double")) * 1e6)
+          .cast("long").as("q")
+      )
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_bigrams"), sum(col("q")).as("sum_q"))
+  }
+
+  /** DuckDB twin of [[bigramScores]] up to the per-bigram grid: CTEs through
+    * `sc(doc_id, q)`.
+    */
+  private val bigramScoresSql: String =
+    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      |bg AS (
+      |  SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
+      |  FROM toks, unnest(generate_series(1, len(tk)-1)) AS t(i)
+      |  WHERE len(tk) >= 2),
+      |c2 AS (SELECT w1, w2, COUNT(*) AS n2 FROM bg GROUP BY w1, w2),
+      |c1 AS (SELECT w1, CAST(SUM(n2) AS BIGINT) AS n1 FROM c2 GROUP BY w1),
+      |v AS (SELECT COUNT(DISTINCT token) AS vocab
+      |      FROM (SELECT unnest(tk) AS token FROM toks)),
+      |sc AS (
+      |  SELECT doc_id,
+      |    CAST(floor(ln(CAST(n2 + 1 AS DOUBLE) / CAST(n1 + vocab AS DOUBLE)) * 1000000) AS BIGINT) AS q
+      |  FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v)""".stripMargin
+
+  /** t26/t27's DuckDB Count-Min sketch of the token stream and its probe
+    * cells for the first ten documents' tokens: CTEs through
+    * `pc(token, row_i, bucket)`.
+    */
+  private val cmsTokenProbeSql: String =
+    s"""WITH v(row_i, a, b) AS (VALUES ${graft.ops.CmsSketch.rowSpecSql()}),
+       |tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
+       |cells AS (
+       |  SELECT row_i, ((a * ${thSql("token")} + b) % 1000000007) % 512 AS bucket,
+       |    COUNT(*) AS cnt
+       |  FROM tok CROSS JOIN v GROUP BY 1, 2),
+       |probe AS (SELECT DISTINCT token FROM tok WHERE doc_id < 10),
+       |pc AS (
+       |  SELECT token, row_i,
+       |    ((a * ${thSql("token")} + b) % 1000000007) % 512 AS bucket
+       |  FROM probe CROSS JOIN v)""".stripMargin
 
   override def queries: Seq[Q] = Seq(
     // ---------------------------------------------------------------- stats
@@ -448,67 +528,17 @@ object TextPack extends QueryPack {
       "t12_bigram_logprob",
       (s, d) => {
         // bigram language-model scoring with add-one smoothing: avg
-        // log P(w2 | w1) = ln((c(w1 w2) + 1) / (c(w1 ·) + V)) — the
-        // conditional upgrade of t11's unigram gate, catching word-salad
-        // documents whose unigram profile looks normal. Same parity
-        // discipline as t11: each bigram's logprob is floor-quantized to
-        // an integer grid BEFORE the per-doc sum (order-free, exact).
-        // Scale: two frequency shuffles (bigram, left-token) both
-        // map-side combined; V is one broadcast scalar.
-        // (r19 measured NEGATIVE: an explicit-count repartition of the raw
-        // docs before the tokenize — t14's discipline — read 0.90 → 2.08 s
-        // in a same-window A/B at sf0.1; on this 5 k-doc corpus the extra
-        // exchange plus 32-way task fan-out costs far more than the
-        // single-task explode it parallelizes. Left as-is; at a scale where
-        // the scan splits, the parallelism comes from the input for free.)
-        val base = Tables.documents(s, d)
-          .select(col("doc_id"), tokens(col("text")).as("tk"))
-        val bg = base.filter(size(col("tk")) >= 2)
-          .select(col("doc_id"),
-            explode(expr("transform(sequence(1, size(tk) - 1), " +
-              "i -> struct(element_at(tk, i) AS w1, element_at(tk, i + 1) AS w2))")).as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-          // materialize the bigram stream ONCE: three subtrees consume it
-          // (c2 with its c1 rollup, and the scoring join) — without the
-          // checkpoint each re-runs tokenize + explode; that repeated
-          // subtree made t25 the bench's highest rep-spread cell (8.7x
-          // min/max under scheduler contention)
-          .localCheckpoint()
-        val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n2"))
-        // left-token totals derive from the (much smaller) bigram counts —
-        // one fewer pass over the exploded corpus at any scale
-        val c1 = c2.groupBy(col("w1")).agg(sum(col("n2")).as("n1"))
-        val v = base.select(explode(col("tk")).as("token"))
-          .agg(countDistinct(col("token")).as("vocab"))
-        bg.join(c2, Seq("w1", "w2"))
-          .join(c1, Seq("w1"))
-          .crossJoin(broadcast(v))
-          .select(
-            col("doc_id"),
-            floor(log((col("n2") + 1).cast("double") / (col("n1") + col("vocab")).cast("double")) * 1e6)
-              .cast("long").as("q")
-          )
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("q")).as("sum_q"))
+        // log P(w2 | w1) — the conditional upgrade of t11's unigram gate,
+        // catching word-salad documents whose unigram profile looks normal.
+        // Same parity discipline as t11 (see bigramScores).
+        bigramScores(s, d)
           .select(
             col("doc_id"), col("n_bigrams"),
             (col("sum_q").cast("double") / 1e6 / col("n_bigrams")).as("avg_logprob")
           )
           .orderBy(col("doc_id"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-             |bg AS (
-             |  SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
-             |  FROM toks, unnest(generate_series(1, len(tk)-1)) AS t(i)
-             |  WHERE len(tk) >= 2),
-             |c2 AS (SELECT w1, w2, COUNT(*) AS n2 FROM bg GROUP BY w1, w2),
-             |c1 AS (SELECT w1, CAST(SUM(n2) AS BIGINT) AS n1 FROM c2 GROUP BY w1),
-             |v AS (SELECT COUNT(DISTINCT token) AS vocab
-             |      FROM (SELECT unnest(tk) AS token FROM toks)),
-             |sc AS (
-             |  SELECT doc_id,
-             |    CAST(floor(ln(CAST(n2 + 1 AS DOUBLE) / CAST(n1 + vocab AS DOUBLE)) * 1000000) AS BIGINT) AS q
-             |  FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v)
+      Some(s"""$bigramScoresSql
              |SELECT doc_id, COUNT(*) AS n_bigrams,
              |  CAST(CAST(SUM(q) AS BIGINT) AS DOUBLE) / 1000000 / COUNT(*) AS avg_logprob
              |FROM sc GROUP BY doc_id
@@ -1149,34 +1179,7 @@ object TextPack extends QueryPack {
         // shuffle — never a single-partition ORDER BY window — and the
         // per-doc score is an exact integer DIV, so bucket edges are
         // bit-identical across engines and partitionings.
-        // (r19 measured NEGATIVE on t12's identical shape: repartitioning
-        // the raw docs before the tokenize cost more than the single-task
-        // explode it parallelizes at this corpus size — see t12's note.)
-        val base = Tables.documents(s, d)
-          .select(col("doc_id"), tokens(col("text")).as("tk"))
-        val bg = base.filter(size(col("tk")) >= 2)
-          .select(col("doc_id"),
-            explode(expr("transform(sequence(1, size(tk) - 1), " +
-              "i -> struct(element_at(tk, i) AS w1, element_at(tk, i + 1) AS w2))")).as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-          // materialize the bigram stream ONCE: three subtrees consume it
-          // (c2 with its c1 rollup, and the scoring join) — without the
-          // checkpoint each re-runs tokenize + explode; that repeated
-          // subtree made t25 the bench's highest rep-spread cell (8.7x
-          // min/max under scheduler contention)
-          .localCheckpoint()
-        val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n2"))
-        val c1 = c2.groupBy(col("w1")).agg(sum(col("n2")).as("n1"))
-        val v = base.select(explode(col("tk")).as("token"))
-          .agg(countDistinct(col("token")).as("vocab"))
-        val scored = bg.join(c2, Seq("w1", "w2"))
-          .join(c1, Seq("w1"))
-          .crossJoin(broadcast(v))
-          .select(col("doc_id"),
-            floor(log((col("n2") + 1).cast("double") / (col("n1") + col("vocab")).cast("double")) * 1e6)
-              .cast("long").as("q"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("q")).as("sum_q"))
+        val scored = bigramScores(s, d)
           .select(col("doc_id"), col("n_bigrams"),
             expr("sum_q DIV n_bigrams").as("score"))
         // r19: materialize the scored frame BEFORE the rank — GlobalOrder's
@@ -1210,19 +1213,7 @@ object TextPack extends QueryPack {
             expr("n_docs * 1000000 DIV n_total").as("share_ppm"))
           .orderBy(col("bucket"))
       },
-      Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-             |bg AS (
-             |  SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
-             |  FROM toks, unnest(generate_series(1, len(tk)-1)) AS t(i)
-             |  WHERE len(tk) >= 2),
-             |c2 AS (SELECT w1, w2, COUNT(*) AS n2 FROM bg GROUP BY w1, w2),
-             |c1 AS (SELECT w1, CAST(SUM(n2) AS BIGINT) AS n1 FROM c2 GROUP BY w1),
-             |v AS (SELECT COUNT(DISTINCT token) AS vocab
-             |      FROM (SELECT unnest(tk) AS token FROM toks)),
-             |sc AS (
-             |  SELECT doc_id,
-             |    CAST(floor(ln(CAST(n2 + 1 AS DOUBLE) / CAST(n1 + vocab AS DOUBLE)) * 1000000) AS BIGINT) AS q
-             |  FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v),
+      Some(s"""$bigramScoresSql,
              |scored AS (
              |  SELECT doc_id, COUNT(*) AS n_bigrams,
              |    CAST(SUM(q) AS BIGINT) // COUNT(*) AS score
@@ -1279,17 +1270,7 @@ object TextPack extends QueryPack {
           .probe(probe, sketch, tokenHash(col("token")), col("token"))
           .orderBy(col("token"))
       },
-      Some(s"""WITH v(row_i, a, b) AS (VALUES ${graft.ops.CmsSketch.rowSpecSql()}),
-              |tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-              |cells AS (
-              |  SELECT row_i, ((a * ${thSql("token")} + b) % 1000000007) % 512 AS bucket,
-              |    COUNT(*) AS cnt
-              |  FROM tok CROSS JOIN v GROUP BY 1, 2),
-              |probe AS (SELECT DISTINCT token FROM tok WHERE doc_id < 10),
-              |pc AS (
-              |  SELECT token, row_i,
-              |    ((a * ${thSql("token")} + b) % 1000000007) % 512 AS bucket
-              |  FROM probe CROSS JOIN v)
+      Some(s"""$cmsTokenProbeSql
               |SELECT token, MIN(COALESCE(cnt, 0)) AS est
               |FROM pc LEFT JOIN cells USING (row_i, bucket)
               |GROUP BY token
@@ -1325,17 +1306,7 @@ object TextPack extends QueryPack {
             (col("est") >= col("exact")).as("ge_ok"))
           .orderBy(col("token"))
       },
-      Some(s"""WITH v(row_i, a, b) AS (VALUES ${graft.ops.CmsSketch.rowSpecSql()}),
-              |tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-              |cells AS (
-              |  SELECT row_i, ((a * ${thSql("token")} + b) % 1000000007) % 512 AS bucket,
-              |    COUNT(*) AS cnt
-              |  FROM tok CROSS JOIN v GROUP BY 1, 2),
-              |probe AS (SELECT DISTINCT token FROM tok WHERE doc_id < 10),
-              |pc AS (
-              |  SELECT token, row_i,
-              |    ((a * ${thSql("token")} + b) % 1000000007) % 512 AS bucket
-              |  FROM probe CROSS JOIN v),
+      Some(s"""$cmsTokenProbeSql,
               |e AS (
               |  SELECT token, MIN(COALESCE(cnt, 0)) AS est
               |  FROM pc LEFT JOIN cells USING (row_i, bucket)

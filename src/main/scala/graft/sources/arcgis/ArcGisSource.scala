@@ -111,11 +111,26 @@ object ArcGisSchema {
     case _ => StringType // String, GlobalID, GUID, unknown
   }
 
+  /** Field-metadata key set on the column of the layer's `esriFieldTypeOID`
+    * field, so frames read from the layer know their feature id column
+    * whatever it is named (`objectid`, `FID`, `OBJECTID_1`, …).
+    */
+  val OidKey = "arcgis.oid"
+
   def structFor(fields: Seq[ArcGisField]): StructType =
     StructType(
-      fields.map(f => StructField(f.name, typeFor(f.esriType), nullable = true)) ++
+      fields.map { f =>
+        val meta =
+          if (f.esriType == "esriFieldTypeOID") new MetadataBuilder().putBoolean(OidKey, true).build()
+          else Metadata.empty
+        StructField(f.name, typeFor(f.esriType), nullable = true, meta)
+      } ++
         Seq(StructField("geom_x", DoubleType), StructField("geom_y", DoubleType))
     )
+
+  /** The OID column of a schema built by [[structFor]], if it has one. */
+  def oidColumn(schema: StructType): Option[String] =
+    schema.fields.find(f => f.metadata.contains(OidKey)).map(_.name)
 
   /** The registered client's layer as a Catalyst schema (one metadata fetch). */
   def layerSchema(clientKey: String): StructType =
@@ -690,7 +705,7 @@ class ArcGisScan(
   override def estimateStatistics(): Statistics = new Statistics {
     private lazy val total: Long =
       try info.totalCount
-      catch { case _: Throwable => -1L }
+      catch { case scala.util.control.NonFatal(_) => -1L }
     private def rowWidth: Long = schema.fields.map { f =>
       f.dataType match {
         case LongType | DoubleType => 8L

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.TextExpressions
@@ -8,8 +8,8 @@ import graft.functions.TextExpressions
 /** One (band key, document) hit of the LSH banding. */
 case class BandHit(bandKey: String, docId: Long)
 
-/** Keyed state: the first document that claimed a band bucket. */
-case class BandOwner(docId: Long)
+/** Keyed first-claim state: the first document that claimed a bucket. */
+case class ClaimOwner(docId: Long)
 
 /** A later document colliding with the bucket owner on one band. */
 case class DupCandidate(docId: Long, dupOf: Long, bandKey: String)
@@ -73,20 +73,32 @@ object StreamingDedup {
     */
   def candidates(hits: Dataset[BandHit]): Dataset[DupCandidate] = {
     implicit val outEnc = Encoders.product[DupCandidate]
-    implicit val stateEnc = Encoders.product[BandOwner]
     implicit val keyEnc = Encoders.STRING
+    firstClaim(hits)(_.bandKey, _.docId)(DupCandidate(_, _, _))
+  }
+
+  /** The first-claim fold shared by the streaming dedup twins: hits group
+    * by `key`; per key the state is ONE [[ClaimOwner]] (the first claimant),
+    * so state is bounded by distinct keys, never stream length. Every later
+    * `id` under an owned key emits `dup(id, ownerId, key)` exactly once, in
+    * its own micro-batch (append mode). In-batch ties resolve to the minimum
+    * id (deterministic under micro-batch replay, like the batch keep-first
+    * `d2`). NoTimeout keeps every owner forever.
+    */
+  def firstClaim[H, K: Encoder, O: Encoder](hits: Dataset[H])(key: H => K, id: H => Long)(
+      dup: (Long, Long, K) => O): Dataset[O] = {
+    implicit val stateEnc = Encoders.product[ClaimOwner]
     hits
-      .groupByKey(_.bandKey)
+      .groupByKey(key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, it: Iterator[BandHit], state: GroupState[BandOwner]) => {
-          val ids = it.map(_.docId).toSeq.distinct.sorted
+        (k: K, it: Iterator[H], state: GroupState[ClaimOwner]) => {
+          val ids = it.map(id).toSeq.distinct.sorted
           state.getOption match {
             case Some(owner) =>
-              ids.filterNot(_ == owner.docId)
-                .map(id => DupCandidate(id, owner.docId, key)).iterator
+              ids.filterNot(_ == owner.docId).map(i => dup(i, owner.docId, k)).iterator
             case None =>
-              state.update(BandOwner(ids.head))
-              ids.tail.map(id => DupCandidate(id, ids.head, key)).iterator
+              state.update(ClaimOwner(ids.head))
+              ids.tail.map(i => dup(i, ids.head, k)).iterator
           }
         }
       )

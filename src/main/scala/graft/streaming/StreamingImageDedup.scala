@@ -2,14 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.MediaExpressions
 
 /** One perceptual-hash hit: a decoded image's 64-bit aHash and its owner. */
 case class ImageHashHit(hash: Long, docId: Long)
-
-/** Keyed state: the first document that claimed a perceptual-hash bucket. */
-case class ImageOwner(docId: Long)
 
 /** A later image whose decoded plane hashes into an owned bucket. */
 case class ImageDup(docId: Long, dupOf: Long, hash: Long)
@@ -23,8 +19,8 @@ case class ImageDup(docId: Long, dupOf: Long, hash: Long)
   *
   * Mechanics mirror [[StreamingDedup]]: a per-row decode+hash projection
   * (no shuffle, the codec runs once per image in the scan), then per-hash
-  * first-claim state via `flatMapGroupsWithState` — ONE tiny
-  * [[ImageOwner]] per distinct perceptual hash, never per image, so state
+  * first-claim state ([[StreamingDedup.firstClaim]]) — ONE tiny
+  * [[ClaimOwner]] per distinct perceptual hash, never per image, so state
   * is bounded by distinct content, not stream length. Later arrivals emit
   * an [[ImageDup]] in their own micro-batch (append mode, exactly once).
   * In-batch ties resolve to the minimum doc id (deterministic under
@@ -53,23 +49,8 @@ object StreamingImageDedup {
   /** Hash-hit stream → duplicate verdicts via per-bucket first-claim state. */
   def dups(hits: Dataset[ImageHashHit]): Dataset[ImageDup] = {
     implicit val outEnc = Encoders.product[ImageDup]
-    implicit val stateEnc = Encoders.product[ImageOwner]
     implicit val keyEnc = Encoders.scalaLong
-    hits
-      .groupByKey(_.hash)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (hash: Long, it: Iterator[ImageHashHit], state: GroupState[ImageOwner]) => {
-          val ids = it.map(_.docId).toSeq.distinct.sorted
-          state.getOption match {
-            case Some(owner) =>
-              ids.filterNot(_ == owner.docId)
-                .map(id => ImageDup(id, owner.docId, hash)).iterator
-            case None =>
-              state.update(ImageOwner(ids.head))
-              ids.tail.map(id => ImageDup(id, ids.head, hash)).iterator
-          }
-        }
-      )
+    StreamingDedup.firstClaim(hits)(_.hash, _.docId)(ImageDup(_, _, _))
   }
 
   /** Full pipeline: `(doc_id, img)` stream → streaming cross-codec dups. */

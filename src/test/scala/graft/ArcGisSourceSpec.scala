@@ -457,4 +457,17 @@ class ArcGisSourceSpec extends AnyFunSuite {
     val r2 = base.agg(countDistinct(col("status"))).head()
     assert(r2.getLong(0) == 2 && client.statsLog.isEmpty && client.pageLog.size() > 0)
   }
+
+  test("estimateStatistics: a failed metadata fetch reads as unknown size, an interrupt propagates") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    def scan(info: => LayerInfo) = new ArcGisScan(
+      StructType(Seq(StructField("objectid", LongType))),
+      new CaseInsensitiveStringMap(java.util.Collections.emptyMap[String, String]()),
+      "1=1", info)
+    assert(!scan(throw new RuntimeException("layer down")).estimateStatistics().numRows().isPresent)
+    intercept[InterruptedException] {
+      scan(throw new InterruptedException("cancelled")).estimateStatistics().numRows()
+    }
+  }
 }

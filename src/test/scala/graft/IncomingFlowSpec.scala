@@ -55,4 +55,19 @@ class IncomingFlowSpec extends AnyFunSuite {
     assert(one.contains(""""metadata""""))
     assert(one.contains(""""coordinates""""))
   }
+
+  test("feature ids come from the layer's OID field whatever its name (FID)") {
+    // hosted layers published from shapefiles name their OID field FID;
+    // the id must come from that field, never a hard-coded `objectid`
+    val fields = Seq(
+      ArcGisField("FID", "esriFieldTypeOID"),
+      ArcGisField("NAME", "esriFieldTypeString"))
+    val rows = (1 to 5).map { i =>
+      EsriFeature(Map("FID" -> i.toLong, "NAME" -> s"Site $i"), Some((-100.0 - i, 40.0)))
+    }
+    ArcGisClientRegistry.register("inc-fid", new MockArcGisClient(fields, rows, 10))
+    val ids = IncomingFlow.features(spark, "inc-fid", "7")
+      .select("id").collect().map(_.getString(0)).sorted.toSeq
+    assert(ids == (1 to 5).map(i => s"layer-7-$i"))
+  }
 }
